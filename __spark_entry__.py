@@ -144,10 +144,10 @@ def _ocr_summary(out: DataFrame) -> DataFrame:
 
 
 def entry(spark: SparkSession) -> DataFrame:
-    """Flagship: end-to-end OCR-span extraction (exploded/skew-proof mode)
-    over the interleaved corpus at smoke scale."""
+    """Flagship: end-to-end OCR-span extraction (the exploded, skew-proof
+    plan) over the interleaved corpus at smoke scale."""
     df = spark.read.parquet(_corpus_path(40)).select("doc_id", "spans")
-    return extract_documents(df, mode="exploded")
+    return extract_documents(df)
 
 
 def _q_invoice_stress(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -156,20 +156,16 @@ def _q_invoice_stress(spark: SparkSession, sf_dir: str) -> DataFrame:
     return invoice_stress_extract(spark, sf_dir)
 
 
-def _q_ocr(mode: str) -> Callable[[SparkSession, str], DataFrame]:
-    def q(spark: SparkSession, sf_dir: str) -> DataFrame:
-        n = _corpus_docs_for(sf_dir)
-        df = spark.read.parquet(_corpus_path(n)).select("doc_id", "spans")
-        return _ocr_summary(extract_documents(df, mode=mode))
-
-    return q
+def _q_ocr(spark: SparkSession, sf_dir: str) -> DataFrame:
+    n = _corpus_docs_for(sf_dir)
+    df = spark.read.parquet(_corpus_path(n)).select("doc_id", "spans")
+    return _ocr_summary(extract_documents(df))
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     return {
         # -- the extraction pipeline itself (rows-only + pytest gate) --
-        "ocr_extract_exploded": _q_ocr("exploded"),
-        "ocr_extract_fused": _q_ocr("fused"),
+        "ocr_extract_exploded": _q_ocr,
         # -- detector-chain field extraction (rows-only + pytest gate) --
         "invoice_field_extract": invoice_field_extract,
         "invoice_stress_extract": _q_invoice_stress,
@@ -409,7 +405,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "regional_revenue": relational.regional_revenue,
         "exact_quantile_refine": relational.exact_quantile_refine,
         "ewma_user_value": relational.ewma_user_value,
-        "triangle_count": relational.triangle_count,
+        "triangle_count": web_extract.triangle_count,
         "incremental_agg_merge": relational.incremental_agg_merge,
         "connected_components_labels": relational.connected_components_labels,
         "two_hop_neighbors": relational.two_hop_neighbors,
@@ -514,11 +510,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "degree_assortativity": web_extract.degree_assortativity,
         "wl_refinement": web_extract.wl_refinement,
         "lpa_communities": web_extract.lpa_communities,
-        "triangle_count": web_extract.triangle_count,
         "zorder_layout": relational.zorder_layout,
         "countmin_heavy_hitters": relational.countmin_heavy_hitters,
         "feature_correlation": relational.feature_correlation,
-        "snapshot_diff": relational.snapshot_diff,
         "phrase_search": text_analysis.phrase_search,
         "km_churn_survival": relational.km_churn_survival,
         "benford_audit": relational.benford_audit,
@@ -1814,11 +1808,9 @@ from d{_n} group by doc_id order by doc_id
 
 def oracle_sql() -> dict[str, str]:
     get_num = _DUCK_GET_NUM
-    ocr_oracle = _ocr_pipeline_oracle()
     sql = {
         # -- the extraction pipeline (ground-truth value oracles) --
-        "ocr_extract_exploded": ocr_oracle,
-        "ocr_extract_fused": ocr_oracle,
+        "ocr_extract_exploded": _ocr_pipeline_oracle(),
         "invoice_field_extract": f"""
 select * from read_parquet('{_invoice_expected_path()}') order by media_ref, region_idx
 """,
@@ -4314,45 +4306,6 @@ from (
   from c, b
 ) t group by bucket, lo, hi order by bucket
 """
-    # Snapshot diff: snapshot B derived by the same expressions.
-    sql["snapshot_diff"] = """
-with base as (
-  select o_orderkey as k,
-         floor(o_totalprice * 100)::bigint as price_cents,
-         o_orderstatus as status
-  from orders
-), kept as (select * from base where k % 97 != 0),
-repriced as (
-  select k,
-         case when k % 13 = 0 then price_cents + price_cents // 10
-              else price_cents end as price_cents,
-         status
-  from kept
-),
-inserted as (
-  select k + 1000000000 as k, price_cents, status
-  from base where k % 101 = 0
-),
-b as (select * from repriced union all select * from inserted),
-j as (
-  select coalesce(a.k, b.k) as k,
-         a.price_cents as a_price, b.price_cents as b_price,
-         a.status as a_status, b.status as b_status
-  from base a full join b on a.k = b.k
-)
-select k,
-       case when a_price is null then 'added'
-            when b_price is null then 'removed'
-            when a_price != b_price or a_status != b_status
-              then 'changed' end as change_type,
-       a_price, b_price
-from j
-where case when a_price is null then 'added'
-           when b_price is null then 'removed'
-           when a_price != b_price or a_status != b_status
-             then 'changed' end is not null
-order by k, change_type
-"""
     # Batch tumbling/sliding windows: time_bucket twins (sliding = the
     # two offset buckets unioned; 1970 vs 2000 epoch origins align for
     # divisors of 24 h).
@@ -5053,30 +5006,6 @@ with ev as (
 select user_id, cast(ewma_scaled as bigint) as ewma_scaled
 from wtd where rn = 1
 order by user_id
-"""
-    # Triangle truth without degree ordering: enumerate a<b<c directly
-    # on the canonical edge set (the orientation trick must not change
-    # WHICH triangles exist, only how they are generated).
-    sql["triangle_count"] = """
-with raw as (
-  select event_id % 200 as x,
-         ((event_id * 2654435761) % 4294967296) % 200 as y
-  from events
-), edges as (
-  select distinct least(x, y) as a, greatest(x, y) as b
-  from raw where x <> y
-), tri as (
-  select e1.a as p, e1.b as q, e2.b as r
-  from edges e1
-  join edges e2 on e2.a = e1.b
-  join edges e3 on e3.a = e1.a and e3.b = e2.b
-), corners as (
-  select p as node from tri
-  union all select q from tri
-  union all select r from tri
-)
-select node, count(*) as n_triangles
-from corners group by node order by node
 """
     # Component truth = transitive closure by recursive CTE (min over
     # all reachable labels); the Spark side must reach the identical

@@ -69,7 +69,7 @@ def main() -> int:
     warm = spark.read.parquet(corpus).limit(64)
     from ocr_spark.operators.pipeline import extract_documents
 
-    _force(extract_documents(warm, mode="exploded"))
+    _force(extract_documents(warm))
     # Warm the normalizer plan too: the field stage's regex-heavy
     # projections run interpreted until C2 compiles the generated code
     # (measured 122s -> 28s across repeats on a cold JVM); a small pass
@@ -86,7 +86,6 @@ def main() -> int:
     qs = entrymod.queries()
     headline = [
         "ocr_extract_exploded",
-        "ocr_extract_fused",
         "invoice_field_extract",
         "invoice_stress_extract",
         "minhash_signatures",

@@ -243,39 +243,3 @@ def ocr_media_ref(media_ref: str) -> str:
     pages = render(media_ref)
     return "\n".join(ocr_page(p.image)[0] for p in pages)
 
-
-def extract_spans(
-    spans: list[dict],
-) -> tuple[list[dict], bool, str, int]:
-    """Fill every media span's text via OCR; text spans pass through.
-
-    Returns (spans ordered by offset, success, message, n_media). A failing
-    media span poisons only its own document (success=False, original spans
-    kept), not the batch — the index-map isolation technique of the
-    reference batch recognizer (obj_det/ocr_context.py:239-266).
-    """
-    out: list[dict] = []
-    # Count upfront so a failing document reports its TOTAL media count,
-    # identical to exploded mode's aggregate (and to the value oracle).
-    n_media = sum(1 for s in spans if s["kind"] == "media")
-    try:
-        for s in sorted(spans, key=lambda s: s["offset"]):
-            if s["kind"] == "media":
-                out.append(
-                    {
-                        "kind": "media",
-                        "text": ocr_media_ref(s["media_ref"]),
-                        "media_ref": s["media_ref"],
-                        "offset": s["offset"],
-                    }
-                )
-            else:
-                out.append(dict(s))
-        return out, True, "", n_media
-    except Exception as exc:  # per-document isolation
-        return (
-            [dict(s) for s in sorted(spans, key=lambda s: s["offset"])],
-            False,
-            f"{type(exc).__name__}: {exc}",
-            n_media,
-        )

@@ -62,6 +62,16 @@ LINEAGE_SCHEMA = T.StructType(
 
 CHUNK_FN = "pmod(xxhash64(doc_id), n_chunks)"
 
+# Pending chunks grouped into one Spark job each: one input scan covers the
+# whole group (the chunk id cannot be pruned by parquet — it is a hash of
+# doc_id — so per-chunk filtering would re-scan the full source n_chunks
+# times; grouping makes the total re-scan cost n_chunks/CHUNKS_PER_PASS
+# passes).  The result is still committed and lineage-tracked PER CHUNK — a
+# crash loses at most the current group's work and resume granularity is
+# unchanged.  Lineage timings for chunks of one group share the group's
+# wall clock.
+CHUNKS_PER_PASS = 8
+
 
 def _chunk_col(n_chunks: int):
     return F.pmod(F.xxhash64("doc_id"), F.lit(n_chunks)).cast("int")
@@ -136,24 +146,13 @@ def run_checkpointed(
     df: DataFrame,
     out_dir: str,
     n_chunks: int = 8,
-    mode: str = "exploded",
     run_id: str | None = None,
     max_chunks: int | None = None,
-    chunks_per_pass: int = 8,
 ) -> dict:
     """Extract ``df`` (doc_id, spans) into ``out_dir`` resumably.
 
     ``max_chunks`` limits how many *pending* chunks this invocation
     processes (used by the resume tests to simulate a mid-run crash).
-
-    ``chunks_per_pass`` groups pending chunks into one Spark job each:
-    one input scan covers the whole group (the chunk id cannot be pruned
-    by parquet — it is a hash of doc_id — so per-chunk filtering would
-    re-scan the full source n_chunks times; grouping makes the total
-    re-scan cost n_chunks/chunks_per_pass passes).  The result is still
-    committed and lineage-tracked PER CHUNK — a crash loses at most the
-    current group's work and resume granularity is unchanged.  Lineage
-    timings for chunks of one group share the group's wall clock.
 
     Returns a summary dict: chunks done now / skipped (already done) /
     remaining.
@@ -170,16 +169,14 @@ def run_checkpointed(
 
     chunked = df.withColumn("_chunk", _chunk_col(n_chunks))
     ran = 0
-    step = max(1, chunks_per_pass)
-    for g in range(0, len(pending), step):
-        group = pending[g : g + step]
+    for g in range(0, len(pending), CHUNKS_PER_PASS):
+        group = pending[g : g + CHUNKS_PER_PASS]
         t0 = time.time()
         part = chunked.filter(F.col("_chunk").isin(group)).drop("_chunk")
         # the pipeline consumes (doc_id, spans); re-derive the chunk id on
         # the OUTPUT from doc_id (same pure hash) for the partitioned write
-        result = extract_documents(part, mode=mode).withColumn(
-            "chunk", _chunk_col(n_chunks)
-        )
+        extracted = extract_documents(part)
+        result = extracted.withColumn("chunk", _chunk_col(n_chunks))
 
         # one job for the whole group, atomically landed per chunk:
         # write partitioned by chunk into a tmp dir, then rename each
@@ -199,14 +196,14 @@ def run_checkpointed(
             if os.path.exists(final):
                 shutil.rmtree(final)
             os.rename(src, final)
-            try:
-                stats = spark.read.parquet(final).agg(
-                    F.count("*").alias("docs"),
-                    F.sum("n_media").alias("media"),
-                ).collect()[0]
-                docs, media = stats["docs"] or 0, int(stats["media"] or 0)
-            except Exception:  # empty chunk dir: no parquet footer
-                docs, media = 0, 0
+            # read with the known schema so an empty chunk dir is 0 rows
+            stats = (
+                spark.read.schema(extracted.schema)
+                .parquet(final)
+                .agg(F.count("*").alias("docs"), F.sum("n_media").alias("media"))
+                .collect()[0]
+            )
+            docs, media = stats["docs"], int(stats["media"] or 0)
             _append_lineage(
                 spark,
                 out_dir,

@@ -5,21 +5,13 @@ obj_det/objd_util.py:152-204: decode -> detect -> recognize -> normalize ->
 envelope) into Spark dataflow over the interleaved-corpus schema
 (doc_id, spans:array<struct<kind,text,media_ref,offset>>).
 
-Two physical strategies, selectable per workload:
-
-``mode='exploded'`` (default, the 100 TB path)
-    explode media spans -> round-robin repartition -> mapInPandas OCR over
-    uniform per-image rows -> groupBy(doc_id) reassembly.  One shuffle for
-    the regroup, but work per task is proportional to *media count*, not
-    document count, so the 500-image heavy-tail documents (FIXTURES.md §1)
-    are spread across the cluster instead of serializing one task.  This is
-    the salting strategy the north rule demands — the skew key (doc_id) is
-    replaced by the naturally fine-grained media-span key.
-
-``mode='fused'``
-    a single mapInPandas running the whole per-document chain with zero
-    shuffles — optimal when documents are uniform (the reference's
-    request/response shape), pathological under heavy tails.
+One physical plan: explode media spans -> round-robin repartition ->
+mapInPandas OCR over uniform per-image rows -> groupBy(doc_id)
+reassembly.  Work per task is proportional to *media count*, not document
+count, so the 500-image heavy-tail documents (FIXTURES.md §1) are spread
+across the cluster instead of serializing one task.  This is the salting
+strategy the north rule demands — the skew key (doc_id) is replaced by the
+naturally fine-grained media-span key.
 
 Models/kernels initialize once per executor python worker via module import
 (the Spark analog of the reference's module-level model singletons,
@@ -35,12 +27,6 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-SPAN_FIELDS = "kind string, text string, media_ref string, offset int"
-OUT_SCHEMA = (
-    "doc_id string, "
-    f"spans array<struct<{SPAN_FIELDS}>>, "
-    "success boolean, message string, n_media int"
-)
 _SPAN_OCR_SCHEMA = (
     "doc_id string, kind string, text string, media_ref string, "
     "offset int, error string"
@@ -50,8 +36,8 @@ _SPAN_OCR_SCHEMA = (
 def _ocr_span_batches(
     batches: Iterator[pd.DataFrame],
 ) -> Iterator[pd.DataFrame]:
-    """mapInPandas kernel for exploded mode: one row per span in; media
-    spans get recognized text, text spans pass through untouched.  Per-row
+    """mapInPandas kernel: one row per span in; media spans get
+    recognized text, text spans pass through untouched.  Per-row
     failure isolation via the error column (reference fapi.py:255-263)."""
     # kernels import once per python worker (executor-global singleton)
     from ocr_spark.core.extract import ocr_media_ref
@@ -84,31 +70,13 @@ def _ocr_span_batches(
         )
 
 
-def _extract_fused_batches(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    """mapInPandas kernel for fused mode: whole documents in, filled spans out."""
-    from ocr_spark.core.extract import extract_spans
-
-    for pdf in batches:
-        rows = []
-        for doc_id, spans in zip(pdf["doc_id"], pdf["spans"]):
-            out, success, message, n_media = extract_spans(list(spans))
-            rows.append((doc_id, out, success, message, n_media))
-        yield pd.DataFrame(
-            rows, columns=["doc_id", "spans", "success", "message", "n_media"]
-        )
-
-
 def _default_partitions(spark) -> int:
     """2x parallelism for the heavy UDF stage: fine enough granularity for
     stragglers, coarse enough that Arrow batches stay full."""
     return spark.sparkContext.defaultParallelism * 2
 
 
-def extract_documents(
-    df: DataFrame, mode: str = "exploded", partitions: int | None = None
-) -> DataFrame:
+def extract_documents(df: DataFrame) -> DataFrame:
     """Run OCR-span extraction over an interleaved-document DataFrame.
 
     Output: doc_id, spans (media texts filled, ordered by offset), success,
@@ -116,16 +84,6 @@ def extract_documents(
     success=false — per-document isolation, matching the reference envelope
     (fapi.py:246-268 success/message per attachment).
     """
-    if partitions is None:
-        partitions = _default_partitions(df.sparkSession)
-
-    if mode == "fused":
-        return df.repartition(partitions).mapInPandas(
-            _extract_fused_batches, schema=OUT_SCHEMA
-        )
-    if mode != "exploded":
-        raise ValueError(f"unknown mode: {mode}")
-
     # ONE scan: explode every span, round-robin repartition, and run a
     # single kernel that OCRs media rows and passes text rows through.
     # (Splitting media/text into two branches would scan the source table
@@ -137,7 +95,7 @@ def extract_documents(
     ex = df.select("doc_id", F.explode("spans").alias("s")).select(
         "doc_id", "s.kind", "s.text", "s.media_ref", "s.offset"
     )
-    all_spans = ex.repartition(partitions).mapInPandas(
+    all_spans = ex.repartition(_default_partitions(df.sparkSession)).mapInPandas(
         _ocr_span_batches, schema=_SPAN_OCR_SCHEMA
     )
 
@@ -158,30 +116,21 @@ def extract_documents(
         .alias("n_media"),
     )
     success = F.col("any_error") == ""
-    spans_ok = F.transform(
+    # a failed document keeps its original (empty) media texts
+    spans = F.transform(
         "ordered",
         lambda s: F.struct(
             s["kind"].alias("kind"),
-            s["text"].alias("text"),
-            s["media_ref"].alias("media_ref"),
-            s["offset"].alias("offset"),
-        ),
-    )
-    # failed docs keep their original (empty) media texts, like fused mode
-    spans_failed = F.transform(
-        "ordered",
-        lambda s: F.struct(
-            s["kind"].alias("kind"),
-            F.when(s["kind"] == "media", F.lit("")).otherwise(s["text"]).alias(
-                "text"
-            ),
+            F.when(~success & (s["kind"] == "media"), F.lit(""))
+            .otherwise(s["text"])
+            .alias("text"),
             s["media_ref"].alias("media_ref"),
             s["offset"].alias("offset"),
         ),
     )
     return assembled.select(
         "doc_id",
-        F.when(success, spans_ok).otherwise(spans_failed).alias("spans"),
+        spans.alias("spans"),
         success.alias("success"),
         F.col("any_error").alias("message"),
         "n_media",

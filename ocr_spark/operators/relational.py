@@ -896,67 +896,6 @@ def price_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Snapshot diff / CDC derivation: given two versions of a keyed
-    table, emit added / removed / changed rows — how a change feed is
-    reconstructed when the source system only hands you full snapshots.
-
-    Snapshot B is derived deterministically from orders (same
-    expressions in the oracle): keys %97 deleted, %13 repriced (+10%
-    in integer cents), %101 duplicated under a new key.  One full
-    outer join on the key, comparison on canonicalized columns,
-    unchanged rows dropped — at scale both sides pre-bucket on the key
-    to make this recurring join shuffle-free (write_bucketed)."""
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    cents = F.floor(F.col("o_totalprice") * 100).cast("long")
-    base = orders.select(
-        F.col("o_orderkey").alias("k"),
-        cents.alias("price_cents"),
-        F.col("o_orderstatus").alias("status"),
-    )
-    kept = base.filter(F.col("k") % 97 != 0)
-    repriced = kept.select(
-        "k",
-        F.when(
-            F.col("k") % 13 == 0,
-            F.col("price_cents") + F.expr("price_cents div 10"),
-        ).otherwise(F.col("price_cents")).alias("price_cents"),
-        "status",
-    )
-    inserted = base.filter(F.col("k") % 101 == 0).select(
-        (F.col("k") + F.lit(10**9)).alias("k"), "price_cents", "status"
-    )
-    snap_b = repriced.unionByName(inserted)
-
-    a = base.select(
-        F.col("k"),
-        F.col("price_cents").alias("a_price"),
-        F.col("status").alias("a_status"),
-    )
-    b = snap_b.select(
-        F.col("k"),
-        F.col("price_cents").alias("b_price"),
-        F.col("status").alias("b_status"),
-    )
-    j = a.join(b, "k", "full_outer")
-    change = (
-        F.when(F.col("a_price").isNull(), F.lit("added"))
-        .when(F.col("b_price").isNull(), F.lit("removed"))
-        .when(
-            (F.col("a_price") != F.col("b_price"))
-            | (F.col("a_status") != F.col("b_status")),
-            F.lit("changed"),
-        )
-    )
-    return (
-        j.withColumn("change_type", change)
-        .filter(F.col("change_type").isNotNull())
-        .select("k", "change_type", "a_price", "b_price")
-        .repartition(1)
-        .sortWithinPartitions("k", "change_type")
-    )
-
-
 def window_tumbling_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Batch tumbling-window aggregation (6-hour buckets per event
     type) via ``F.window`` — the same time-bucketing the streaming path
@@ -1770,76 +1709,6 @@ def ewma_user_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _synth_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic undirected edge list derived from events (portable
-    arithmetic, no rand()): canonicalized (a < b), distinct.  The y
-    endpoint runs through the Knuth multiplicative hash (the repo's
-    portable-hash convention) so it is NOT a function of x mod 200 —
-    a plain affine map would make the graph functional (zero
-    triangles)."""
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet").select(
-        (F.col("event_id") % 200).alias("x"),
-        (((F.col("event_id") * 2654435761) % 4294967296) % 200).alias("y"),
-    ).filter(F.col("x") != F.col("y"))
-    return ev.select(
-        F.least("x", "y").alias("a"), F.greatest("x", "y").alias("b")
-    ).distinct()
-
-
-def triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-node triangle counts via DEGREE-ORDERED edge orientation —
-    the trick that makes triangle enumeration survive power-law graphs:
-    orient every edge from the (degree, id)-smaller endpoint to the
-    larger, so a hub of degree d keeps out-degree O(sqrt(E)) instead of
-    d, and the wedge join (e1.v = e2.u) cannot explode on hot nodes.
-    Each triangle is generated exactly once (its unique orientation is
-    acyclic), then closed by joining the wedge back to the oriented
-    edge set.
-
-    Shape: degree agg (one small shuffle), degrees joined onto the
-    edge list (broadcast here; at 10^9-node scale the degree table is
-    edge-co-keyed and the join becomes one more key shuffle), wedge
-    self-join + closing join both keyed on node ids — no cartesian
-    anywhere.  Output explodes each triangle to its three corners and
-    counts per node."""
-    edges = _synth_edges(spark, sf_dir)
-    deg = (
-        edges.select(F.col("a").alias("n"))
-        .union(edges.select(F.col("b").alias("n")))
-        .groupBy("n")
-        .agg(F.count("*").alias("deg"))
-    )
-    da = deg.select(F.col("n").alias("a"), F.col("deg").alias("deg_a"))
-    db = deg.select(F.col("n").alias("b"), F.col("deg").alias("deg_b"))
-    ranked = (
-        edges.join(F.broadcast(da), "a")
-        .join(F.broadcast(db), "b")
-        .select(
-            F.when(
-                (F.col("deg_a") < F.col("deg_b"))
-                | ((F.col("deg_a") == F.col("deg_b")) & (F.col("a") < F.col("b"))),
-                F.struct(F.col("a").alias("u"), F.col("b").alias("v")),
-            )
-            .otherwise(
-                F.struct(F.col("b").alias("u"), F.col("a").alias("v"))
-            )
-            .alias("e")
-        )
-        .select("e.u", "e.v")
-    )
-    w1 = ranked.select(F.col("u").alias("p"), F.col("v").alias("q"))
-    w2 = ranked.select(F.col("u").alias("q"), F.col("v").alias("r"))
-    wedges = w1.join(w2, "q").filter(F.col("p") != F.col("r"))
-    closing = ranked.select(F.col("u").alias("p"), F.col("v").alias("r"))
-    tri = wedges.join(closing, ["p", "r"])
-    corners = (
-        tri.select(F.explode(F.array("p", "q", "r")).alias("node"))
-        .groupBy("node")
-        .agg(F.count("*").alias("n_triangles"))
-    )
-    return corners.repartition(1).sortWithinPartitions("node")
-
-
 AGG_MERGE_CUTOFF = "2024-01-20"
 
 
@@ -1911,8 +1780,9 @@ CC_GROUPS = 8  # disjoint node groups -> guaranteed >= 8 components
 def _synth_grouped_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic edge list whose nodes split into CC_GROUPS disjoint
     residue classes (edges never cross groups), so the component
-    structure is non-trivial by construction.  Same portable-hash
-    decorrelation as _synth_edges."""
+    structure is non-trivial by construction.  The y endpoint is a
+    portable multiplicative hash of event_id (no rand()), so x and y are
+    decorrelated identically in both engines."""
     ev = spark.read.parquet(f"{sf_dir}/events.parquet")
     g = F.col("event_id") % CC_GROUPS
     x = (F.col("event_id") % 25) * CC_GROUPS + g

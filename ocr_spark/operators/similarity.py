@@ -539,13 +539,6 @@ def _emb_fixedpoint(col: Column) -> Column:
     )
 
 
-def _tdiv(s: int, n: int) -> int:
-    """Integer division truncating toward zero — SQL's `div`/`//`
-    semantics (python's // floors, which diverges on negative sums)."""
-    q = abs(s) // n
-    return q if s >= 0 else -q
-
-
 def _assign_expr(cents: list[list[int]]) -> Column:
     """argmin-over-centroids cluster id as ONE struct-array expression
     (same O(1)-plan-size shape as _l2_struct_array); squared L2 in

@@ -59,13 +59,13 @@ def iceberg_runtime_available() -> bool:
 
 def get_spark(
     cores: int | str | None = None,
-    shuffle_partitions: int | None = None,
     app_name: str = "ocr_spark",
     iceberg_warehouse: str | None = None,
 ) -> SparkSession:
     """Build (or reuse) a SparkSession.
 
     cores: int N -> local[N]; '*' -> local[*]; None -> $SPARK_GRAFT_CPUS or 32.
+    Shuffle partitions follow the core count (32 for '*').
     iceberg_warehouse: when set, registers a hadoop-type Iceberg catalog
     named ``ice`` at that path (production input per the target spec;
     requires the iceberg-spark-runtime jar on the cluster — not bundled in
@@ -82,8 +82,11 @@ def get_spark(
     if cores is None:
         cores = os.environ.get("SPARK_GRAFT_CPUS", "32")
     master = f"local[{cores}]"
-    if shuffle_partitions is None:
-        shuffle_partitions = int(cores) if str(cores).isdigit() else 32
+    shuffle_partitions = int(cores) if str(cores).isdigit() else 32
+    # the directory holding the ocr_spark package (or the --py-files zip):
+    # the worker daemon runs `python -m ocr_spark.daemon`, which must
+    # import ocr_spark whatever the driver's cwd is
+    package_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
     builder = (
         SparkSession.builder.master(master)
@@ -100,6 +103,7 @@ def get_spark(
         # per-task worker forks pay full import cost otherwise — see
         # ocr_spark/daemon.py (preloads numpy/pandas/pyarrow + kernels)
         .config("spark.python.daemon.module", "ocr_spark.daemon")
+        .config("spark.executorEnv.PYTHONPATH", package_root)
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "24g"))
         .config("spark.sql.files.maxPartitionBytes", "128m")
         .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")

@@ -67,7 +67,6 @@ def stream_extract(
     input_dir: str,
     output_dir: str,
     checkpoint_dir: str,
-    mode: str = "exploded",
     available_now: bool = True,
 ):
     """Incremental extraction over a parquet landing directory.
@@ -84,7 +83,7 @@ def stream_extract(
     )
 
     def _process(batch_df: DataFrame, batch_id: int) -> None:
-        extract_documents(batch_df, mode=mode).withColumn(
+        extract_documents(batch_df).withColumn(
             "batch_id", F.lit(batch_id)
         ).write.mode("append").parquet(output_dir)
 

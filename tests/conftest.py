@@ -12,7 +12,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 def spark():
     from ocr_spark.session import get_spark
 
-    spark = get_spark(cores=8, shuffle_partitions=8, app_name="ocr_spark-tests")
+    spark = get_spark(cores=8, app_name="ocr_spark-tests")
     spark.sparkContext.setLogLevel("ERROR")
     yield spark
     spark.stop()

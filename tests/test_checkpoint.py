@@ -105,3 +105,23 @@ def test_resume_rejects_changed_n_chunks(spark, corpus_path, tmp_path):
     run_checkpointed(df, out, n_chunks=2, max_chunks=1, run_id="run-m")
     with pytest.raises(ValueError, match="n_chunks"):
         run_checkpointed(df, out, n_chunks=8, run_id="run-n")
+
+
+def test_empty_chunk_commits_zero_count_row(spark, tmp_path):
+    """With more chunks than documents some chunks hold no document; each
+    still commits a ``done`` lineage row counting 0 docs and 0 media, so
+    resume skips it for the right reason."""
+    path = str(tmp_path / "two_docs.parquet")
+    pq.write_table(build_corpus(2, seed=7), path)
+    df = spark.read.parquet(path).select("doc_id", "spans")
+    out = str(tmp_path / "out_empty")
+    summary = run_checkpointed(df, out, n_chunks=N_CHUNKS * 2, run_id="run-e")
+    assert summary["ran"] == N_CHUNKS * 2 and summary["remaining"] == 0
+
+    lineage = read_lineage(spark, out).toPandas()
+    assert sorted(lineage["partition_id"]) == list(range(N_CHUNKS * 2))
+    assert (lineage["status"] == "done").all()
+    empty = lineage[lineage["doc_count"] == 0]
+    assert len(empty) >= N_CHUNKS * 2 - 2
+    assert (empty["media_count"] == 0).all()
+    assert int(lineage["doc_count"].sum()) == 2 == read_output(spark, out).count()

@@ -7,7 +7,7 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from ocr_spark.core import detect
-from ocr_spark.core.extract import extract_spans, ocr_media_ref, ocr_page
+from ocr_spark.core.extract import ocr_media_ref, ocr_page
 from ocr_spark.core.reading_order import group_rows, reading_order_text, sorted_boxes
 from ocr_spark.fixtures.render import expected_media_text, render
 
@@ -178,21 +178,29 @@ def test_media_text_equals_layout_oracle():
 
 
 def test_extract_spans_isolation_and_order():
-    spans = [
-        {"kind": "media", "text": "", "media_ref": "img://iso/1#crop", "offset": 1},
-        {"kind": "text", "text": "hello", "media_ref": "", "offset": 0},
-    ]
-    out, success, message, n_media = extract_spans(spans)
-    assert success and n_media == 1
-    assert [s["offset"] for s in out] == [0, 1]
-    assert out[1]["text"] == expected_media_text("img://iso/1#crop")
+    """The per-span kernel OCRs media rows, passes text rows through, and
+    keeps every row's offset, so reassembly can restore the span order of
+    spans given out of order.  A ``#err`` media row fails alone: its
+    neighbours keep their texts and no error."""
+    import pandas as pd
 
-    bad = spans + [
-        {"kind": "media", "text": "", "media_ref": "img://iso/2#err", "offset": 2}
-    ]
-    out, success, message, _ = extract_spans(bad)
-    assert not success and "ValueError" in message
-    assert [s["text"] for s in out if s["kind"] == "media"] == ["", ""]
+    from ocr_spark.operators.pipeline import _ocr_span_batches
+
+    crop = "img://iso/1#crop"
+    batch = pd.DataFrame(
+        {
+            "doc_id": ["iso", "iso", "iso"],
+            "kind": ["media", "text", "media"],
+            "text": ["", "hello", ""],
+            "media_ref": [crop, "", "img://iso/2#err"],
+            "offset": [1, 0, 2],
+        }
+    )
+    (out,) = list(_ocr_span_batches(iter([batch])))
+    assert list(out["offset"]) == [1, 0, 2]
+    assert list(out["text"]) == [expected_media_text(crop), "hello", ""]
+    assert list(out["error"][:2]) == ["", ""]
+    assert out["error"][2].startswith("ValueError")
 
 
 def test_drop_score_gate_filters_low_conf_lines():

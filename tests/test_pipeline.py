@@ -4,9 +4,13 @@ layout-side ground truth — plus physical-plan assertions."""
 
 from __future__ import annotations
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
+from ocr_spark.fixtures.corpus import SPANS_TYPE
+from ocr_spark.fixtures.render import expected_media_text
 from ocr_spark.operators.pipeline import extract_documents
 
 
@@ -15,13 +19,46 @@ def corpus_df(spark, corpus_path):
     return spark.read.parquet(corpus_path)
 
 
-@pytest.mark.parametrize("mode", ["exploded", "fused"])
-def test_span_sequence_equality(spark, corpus_df, mode):
-    out = extract_documents(corpus_df.select("doc_id", "spans"), mode=mode)
-    joined = out.join(
-        corpus_df.select("doc_id", "expected_spans", "expect_success"), "doc_id"
+def _edge_case_docs() -> pa.Table:
+    """Spans given out of offset order, and the same document plus a
+    ``#err`` media span: the error fails only its own document, whose
+    media texts all stay empty."""
+    crop = "img://iso/1#crop"
+    spans = [
+        {"kind": "media", "text": "", "media_ref": crop, "offset": 1},
+        {"kind": "text", "text": "hello", "media_ref": "", "offset": 0},
+    ]
+    err = {"kind": "media", "text": "", "media_ref": "img://iso/2#err", "offset": 2}
+    ok_expected = [spans[1], {**spans[0], "text": expected_media_text(crop)}]
+    return pa.table(
+        {
+            "doc_id": ["edge-out-of-order", "edge-err"],
+            "spans": pa.array([spans, spans + [err]], SPANS_TYPE),
+            "expected_spans": pa.array(
+                [ok_expected, [spans[1], spans[0], err]], SPANS_TYPE
+            ),
+            "expect_success": [True, False],
+        }
     )
-    total = corpus_df.count()
+
+
+@pytest.fixture(scope="module")
+def docs_df(spark, corpus_df, tmp_path_factory):
+    """The corpus plus the edge cases, with their expected output."""
+    path = str(tmp_path_factory.mktemp("edge") / "edge.parquet")
+    pq.write_table(_edge_case_docs(), path)
+    cols = ["doc_id", "spans", "expected_spans", "expect_success"]
+    return corpus_df.select(cols).unionByName(spark.read.parquet(path))
+
+
+# the id names the plan under test; exploded is the only one
+@pytest.mark.parametrize("plan", [extract_documents], ids=["exploded"])
+def test_span_sequence_equality(spark, docs_df, plan):
+    out = plan(docs_df.select("doc_id", "spans"))
+    joined = out.join(
+        docs_df.select("doc_id", "expected_spans", "expect_success"), "doc_id"
+    )
+    total = docs_df.count()
     assert joined.count() == total  # no doc lost or duplicated
 
     wrong_status = joined.filter(
@@ -45,19 +82,15 @@ def test_span_sequence_equality(spark, corpus_df, mode):
         )
     ).count()
     assert failed_bad == 0
+    err = joined.filter(F.col("doc_id") == "edge-err").first()
+    assert "ValueError" in err["message"]
 
 
 def test_exploded_mode_shuffles_once_for_reassembly(spark, corpus_df):
-    out = extract_documents(corpus_df.select("doc_id", "spans"), mode="exploded")
+    out = extract_documents(corpus_df.select("doc_id", "spans"))
     plan = out._jdf.queryExecution().executedPlan().toString()
     # regroup aggregation present; scan should not read expected_spans
     assert "partial_collect_list" in plan or "collect_list" in plan
-
-
-def test_fused_mode_plan_has_no_aggregate(spark, corpus_df):
-    out = extract_documents(corpus_df.select("doc_id", "spans"), mode="fused")
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "collect_list" not in plan
 
 
 def test_column_pruning_reaches_scan(spark, corpus_path):

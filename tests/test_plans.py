@@ -37,7 +37,7 @@ def corpus(spark, tmp_path_factory):
 def test_flagship_single_scan_two_shuffles(corpus):
     from ocr_spark.operators.pipeline import extract_documents
 
-    df = extract_documents(corpus, mode="exploded")
+    df = extract_documents(corpus)
     tree = plan_of(df, "simple")  # each node printed once
     assert tree.count("Scan parquet") == 1, "exploded mode must scan once"
     assert tree.count("Exchange") == 2, (
@@ -45,14 +45,6 @@ def test_flagship_single_scan_two_shuffles(corpus):
     )
     assert "MapInPandas" in tree
     assert "PushedFilters" in plan_of(df, "formatted")
-
-
-def test_fused_zero_extra_shuffles(corpus):
-    from ocr_spark.operators.pipeline import extract_documents
-
-    tree = plan_of(extract_documents(corpus, mode="fused"), "simple")
-    assert tree.count("Scan parquet") == 1
-    assert tree.count("Exchange") == 1  # only the skew repartition
 
 
 def test_pricing_summary_pushdown_and_partial_agg(spark):
@@ -107,7 +99,7 @@ def test_fields_barrier_prevents_collapse(spark):
 
 def test_round_robin_spreads_heavy_doc(spark):
     """Skew evidence: a 200-media document's rows land on many partitions
-    after the round-robin salt (the fused alternative would serialize it
+    after the round-robin salt (a per-document plan would serialize it
     on one task)."""
     from pyspark.sql import functions as F
 
@@ -823,18 +815,6 @@ def test_regional_revenue_broadcasts_dim_chain(spark):
     assert "BroadcastNestedLoopJoin" not in simple
     fmt = plan_of(df)
     assert "PushedFilters" in fmt and "o_orderdate" in fmt
-
-
-def test_triangle_count_joins_stay_keyed(spark):
-    """Degree orientation must keep the wedge enumeration on hash joins:
-    no cartesian/nested-loop anywhere, and the degree table rides a
-    broadcast join onto the edges."""
-    from ocr_spark.operators.relational import triangle_count
-
-    plan = plan_of(triangle_count(spark, SF))
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
-    assert "BroadcastHashJoin" in plan
 
 
 def test_prefix_filter_no_cartesian_and_partial_df(spark):

@@ -425,36 +425,6 @@ def test_ewma_short_history_and_weights(spark, tmp_path):
     assert got[0]["ewma_scaled"] == 400 * 512 + 200 * 256 + 100 * 128
 
 
-def test_triangle_count_matches_bruteforce(spark):
-    """Degree-oriented enumeration must find EXACTLY the triangles a
-    brute-force itertools check finds on the same edge set — and the
-    set must be non-empty (regression: an affine y=f(x) edge generator
-    makes the graph functional and silently yields zero triangles)."""
-    import itertools
-
-    from ocr_spark.operators.relational import _synth_edges, triangle_count
-
-    sf_dir = "/root/testdata/sf0.001"
-    edges = {
-        (r.a, r.b) for r in _synth_edges(spark, sf_dir).collect()
-    }
-    adj = {}
-    for a, b in edges:
-        adj.setdefault(a, set()).add(b)
-        adj.setdefault(b, set()).add(a)
-    expected = {}
-    for p, q, r in itertools.combinations(sorted(adj), 3):
-        if q in adj[p] and r in adj[p] and r in adj[q]:
-            for n in (p, q, r):
-                expected[n] = expected.get(n, 0) + 1
-    assert expected, "fixture graph has no triangles — generator broken"
-    got = {
-        r.node: r.n_triangles
-        for r in triangle_count(spark, sf_dir).collect()
-    }
-    assert got == expected
-
-
 def test_incremental_agg_merge_equals_recompute(spark, tmp_path):
     """Merge(state, delta) must equal the full recompute for a user
     only in state, only in delta, and straddling the cutoff (count adds,
@@ -1136,7 +1106,7 @@ def test_operators_are_empty_input_safe(spark, tmp_path):
         S.knn_label_propagation, S.ann_recall_eval, S.ndcg_eval,
         S.mrr_eval, S.map_eval, S.rocchio_feedback,
         S.hard_negative_mining,
-        R.triangle_count, R.incremental_agg_merge,
+        R.incremental_agg_merge,
         R.connected_components_labels, R.two_hop_neighbors,
         R.cohort_retention, R.cdc_apply, R.half_life_engagement,
         R.sliding_distinct_users, R.dwell_time_stats,

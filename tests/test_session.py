@@ -85,3 +85,48 @@ def test_iceberg_live_roundtrip_when_jar_present(tmp_path):
         timeout=600,
     )
     assert "ICEBERG_ROUNDTRIP_OK" in out.stdout, out.stderr[-2000:]
+
+
+def test_worker_daemon_imports_outside_repo_root(tmp_path):
+    """The worker daemon (``python -m ocr_spark.daemon``) must find
+    ocr_spark when the driver runs from a cwd that cannot import it and
+    no PYTHONPATH is set: a driver that imports the package through
+    sys.path alone still runs a Python stage."""
+    import os
+    import subprocess
+    import sys
+    import textwrap
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    script = textwrap.dedent(
+        f"""
+        import sys
+
+        sys.path.insert(0, {repo!r})
+        from ocr_spark.session import get_spark
+
+        spark = get_spark(cores=1, app_name="daemon-cwd")
+
+        def plus_one(batches):
+            for pdf in batches:
+                yield pdf.assign(n=pdf["n"] + 1)
+
+        rows = spark.range(1).selectExpr("cast(id as int) as n").mapInPandas(
+            plus_one, schema="n int"
+        ).collect()
+        assert [r["n"] for r in rows] == [1], rows
+        print("DAEMON_OK")
+        spark.stop()
+        """
+    )
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env["SPARK_DRIVER_MEM"] = "1g"
+    out = subprocess.run(
+        [sys.executable, "-c", script],
+        capture_output=True,
+        text=True,
+        cwd=str(tmp_path),
+        env=env,
+        timeout=600,
+    )
+    assert "DAEMON_OK" in out.stdout, (out.stdout + out.stderr)[-3000:]

@@ -71,8 +71,6 @@ def test_spark_submit_pyfiles_end_to_end(tmp_path):
         out,
         "--n-chunks",
         "4",
-        "--chunks-per-pass",
-        "4",
     ]
     proc = subprocess.run(
         cmd,

@@ -8,7 +8,7 @@ Packaged run (the deployment shape the north rule names)::
         tools/run_extract.py \
         --input  /path/to/interleaved_docs.parquet \
         --output /path/to/out \
-        --n-chunks 64 --mode exploded
+        --n-chunks 64
 
 On a cluster, pass ``--master yarn``/``k8s://...`` etc. to spark-submit;
 the script only calls ``SparkSession.builder.getOrCreate()`` so the
@@ -36,11 +36,9 @@ def main(argv: list[str] | None = None) -> int:
         help="report chunk/lineage status of an existing run and exit",
     )
     ap.add_argument("--format", default="parquet", choices=["parquet", "iceberg"])
-    ap.add_argument("--mode", default="exploded", choices=["exploded", "fused"])
     ap.add_argument("--n-chunks", type=int, default=64)
     ap.add_argument("--max-chunks", type=int, default=None)
     ap.add_argument("--run-id", default=None)
-    ap.add_argument("--chunks-per-pass", type=int, default=8)
     args = ap.parse_args(argv)
 
     from pyspark.sql import SparkSession
@@ -79,10 +77,8 @@ def main(argv: list[str] | None = None) -> int:
         df,
         args.output,
         n_chunks=args.n_chunks,
-        mode=args.mode,
         run_id=args.run_id,
         max_chunks=args.max_chunks,
-        chunks_per_pass=args.chunks_per_pass,
     )
     print(json.dumps(summary))
     spark.stop()
