@@ -230,7 +230,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "winnowing_near_dup": dedup.winnowing_near_dup,
         "dedup_sketch_eval": dedup.dedup_sketch_eval,
         "lsh_param_sweep": dedup.lsh_param_sweep,
-        "prefix_filter_jaccard": dedup.prefix_filter_jaccard,
         "duplicate_substring_spans": dedup.duplicate_substring_spans,
         "suffix_array_ranks": dedup.suffix_array_ranks,
         "exact_substring_spans": dedup.exact_substring_spans,
@@ -502,7 +501,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "ktruss_edges": web_extract.ktruss_edges,
         "link_prediction_jaccard": web_extract.link_prediction_jaccard,
         "crawl_frontier": web_extract.crawl_frontier,
-        "louvain_one_level": web_extract.louvain_one_level,
         "politeness_schedule": web_extract.politeness_schedule,
         "louvain_two_level": web_extract.louvain_two_level,
         "deepwalk_pairs": web_extract.deepwalk_pairs,
@@ -4850,9 +4848,6 @@ from q e cross join qq
 where e.vec_id <> 0
 order by int_dot desc, e.vec_id limit {similarity.TOP_K}
 """
-    # Prefix filtering is an exact refinement: the result set must be
-    # IDENTICAL to the full posting join, so the oracle is shared.
-    sql["prefix_filter_jaccard"] = sql["ngram_jaccard_all_pairs"]
     # Posting-list truth: the lag-window gap IS the delta encoding; the
     # ordered string_agg pins doc order so the hash checks list ORDER,
     # not just membership.
@@ -9010,12 +9005,6 @@ und as materialized (
 m as (select count(*) // 2 as m from und),
 deg as (select src as node, count(*) as deg from und group by 1),
 l0 as (select doc_id as node, doc_id as c from documents),
-"""
-    sql["louvain_one_level"] = f"""{_lv_graph}{",".join(_lv_rounds)}
-select l.node as doc_id, l.c as community,
-       cast(count(*) over (partition by l.c) as bigint) as community_size
-from l{_R} l
-order by doc_id
 """
     # Two-level truth: the level-1 rounds, the contraction (label both
     # endpoints, (ca, cb) multiplicities — (c, c) rows carry intra mass

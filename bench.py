@@ -242,7 +242,6 @@ def main() -> int:
         "audio_near_dup",
         "geo_cell_pairs",
         "crawl_frontier",
-        "louvain_one_level",
         "cross_source_dup_matrix",
         "session_covisitation",
         "geo_dbscan",

@@ -79,7 +79,7 @@ class PageState:
 
 
 def _best_over_orientations(
-    ink0: np.ndarray, drop_score: float, robust: bool = False
+    ink0: np.ndarray, robust: bool = False
 ) -> tuple[
     list[str],
     float,
@@ -147,14 +147,6 @@ def _best_over_orientations(
         # would be "rescued" to full confidence with a reversed reading
         # order, so orientation selection must score the RAW decode.
         texts, confs, _flips = recognize_batch_cls([b.bitmap for b in boxes])
-        # drop_score gate: discard low-confidence lines before the
-        # reading-order merge (reference predict_system.py:103-107,
-        # default 0.5 there; 0.0 here keeps every line).
-        if drop_score > 0.0:
-            kept = [j for j, s in enumerate(confs) if s >= drop_score]
-            boxes = [boxes[j] for j in kept]
-            texts = [texts[j] for j in kept]
-            confs = [confs[j] for j in kept]
         conf = float(np.mean(confs)) if confs else 0.0
         if conf > best_conf:
             xywh = [(b.x, b.y, b.w, b.h) for b in boxes]
@@ -176,9 +168,7 @@ def _best_over_orientations(
     return best_rows, max(best_conf, 0.0), best_k, best_qr, best_row_boxes
 
 
-def ocr_page_state(
-    img: np.ndarray, drop_score: float = 0.0
-) -> PageState:
+def ocr_page_state(img: np.ndarray) -> PageState:
     """One page image -> PageState (reading-ordered row texts, confidence,
     winning transform, QR candidate boxes in the transformed frame).
 
@@ -198,7 +188,7 @@ def ocr_page_state(
     if not ink0.any():
         return PageState()
 
-    rows, conf, k, qr, rb = _best_over_orientations(ink0, drop_score)
+    rows, conf, k, qr, rb = _best_over_orientations(ink0)
     best = PageState(rows, max(conf, 0.0), k, 0, qr, rb)
     if conf < DESKEW_CONF:
         # Angle 0 is retried FIRST with the robust unit-scale estimate: a
@@ -213,7 +203,7 @@ def ocr_page_state(
             # border blank.
             ink_d = rotate_image(ink0, float(a), fill=False) if a else ink0
             rows2, conf2, k2, qr2, rb2 = _best_over_orientations(
-                ink_d, drop_score, robust=True
+                ink_d, robust=True
             )
             if conf2 > best.conf:
                 best = PageState(rows2, conf2, k2, a, qr2, rb2)
@@ -222,19 +212,11 @@ def ocr_page_state(
     return best
 
 
-def ocr_page_rows(
-    img: np.ndarray, drop_score: float = 0.0
-) -> tuple[list[str], float]:
-    """One page image -> (reading-ordered row texts, confidence)."""
-    st = ocr_page_state(img, drop_score)
-    return st.rows, st.conf
-
-
 def ocr_page(img: np.ndarray) -> tuple[str, float]:
     """One page image -> (reading-ordered text, confidence); rows joined
     by newline."""
-    rows, conf = ocr_page_rows(img)
-    return "\n".join(rows), conf
+    st = ocr_page_state(img)
+    return "\n".join(st.rows), st.conf
 
 
 def ocr_media_ref(media_ref: str) -> str:

@@ -267,41 +267,32 @@ def embedding_candidates(
     )
 
 
-def embedding_near_dup(
-    spark: SparkSession,
-    sf_dir: str,
-    n_planes: int | None = None,
-    n_tables: int | None = None,
-) -> DataFrame:
+def embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding-cosine near-duplicate pairs, banded multi-table LSH —
     the embedding-space mirror of lsh_candidates' minhash banding:
     candidates = vectors sharing a random-hyperplane bucket in ANY of the
-    ``n_tables`` independent plane sets, deduped, then verified by exact
-    cosine >= 0.4.
+    ``similarity.DEFAULT_TABLES`` independent plane sets, deduped, then
+    verified by exact cosine >= 0.4.
 
-    Scale shape (the round-2 version had a fixed 64-bucket table, an
-    O((N/64)^2) ceiling): bucket count is now 2^n_planes PER TABLE with
-    n_planes sized from the corpus (similarity.planes_for_corpus — e.g.
-    18 planes / 262k buckets at 10^9 vectors), so the within-bucket
-    self-join stays O(N * bucket_size).  Recall lost to finer buckets is
-    bought back with independent tables, exactly like adding minhash
-    bands.  Physical plan: posexplode to (table, bucket) band rows, ONE
+    Scale shape (the round-2 version had a fixed 64-bucket table): bucket
+    count is 2^DEFAULT_PLANES PER TABLE.  It is fixed, so the
+    within-bucket self-join grows as O(N * N / 2^planes); a corpus of
+    10^9 vectors needs about 18 planes (262k buckets/table) to keep it
+    O(N * bucket_size).  Recall lost to finer buckets is bought back
+    with independent tables, exactly like adding minhash bands.
+    Physical plan: posexplode to (table, bucket) band rows, ONE
     equi-join shuffle on (table, bucket) with AQE skew-split for hot
     buckets, distinct on the pair key, then a verify join that pays one
     dot product per unique candidate pair."""
-    from .similarity import DEFAULT_PLANES, DEFAULT_TABLES, _dot, _norm
-
-    if n_planes is None:
-        n_planes = DEFAULT_PLANES
-    if n_tables is None:
-        n_tables = DEFAULT_TABLES
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    pairs = embedding_candidates(emb, n_planes, n_tables)
-    # Norm is a per-row fact: computed once per vector on the verify side
-    # so each candidate pair pays only the dot product.
-    vecs = emb.select(
-        "vec_id", "embedding", _norm(F.col("embedding")).alias("nrm")
+    from .similarity import (
+        DEFAULT_PLANES,
+        DEFAULT_TABLES,
+        _cosine,
+        _normed_embeddings,
     )
+
+    vecs = _normed_embeddings(spark, sf_dir)
+    pairs = embedding_candidates(vecs, DEFAULT_PLANES, DEFAULT_TABLES)
     return (
         pairs.join(
             vecs.select(
@@ -322,11 +313,9 @@ def embedding_near_dup(
         .select(
             "vec_a",
             "vec_b",
-            F.round(
-                _dot(F.col("emb_a"), F.col("emb_b"))
-                / (F.col("nrm_a") * F.col("nrm_b")),
-                4,
-            ).alias("cos"),
+            F.round(_cosine("emb_a", "emb_b", "nrm_a", "nrm_b"), 4).alias(
+                "cos"
+            ),
         )
         .filter(F.col("cos") >= 0.4)
         # repartition(1)+sortWithinPartitions, not orderBy: a global sort's
@@ -1121,46 +1110,6 @@ def prefix_candidates(
             F.col("b.doc_id").alias("doc_b"),
         )
         .distinct()
-    )
-
-
-def prefix_filter_jaccard(
-    spark: SparkSession, sf_dir: str, tau: float = 0.2
-) -> DataFrame:
-    """EXACT Jaccard pairs above tau via prefix filtering + exact
-    verification — same result set as ngram_jaccard_all_pairs (shared
-    oracle), strictly fewer generated candidates (pinned in a test).
-
-    Scale shape: the df table is one shingle-keyed agg; the rarity rank
-    is a doc-keyed window; candidate generation joins only PREFIX
-    postings (sum over rare shingles of df^2 — the boilerplate-shingle
-    quadratic term is gone); verification rejoins the two full shingle
-    arrays by doc key and intersects array-side."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
-        "doc_id", word_shingles(F.col("text")).alias("sh")
-    )
-    cand = prefix_candidates(spark, sf_dir, tau)
-    va = docs.select(
-        F.col("doc_id").alias("doc_a"), F.col("sh").alias("sh_a")
-    )
-    vb = docs.select(
-        F.col("doc_id").alias("doc_b"), F.col("sh").alias("sh_b")
-    )
-    return (
-        cand.join(va, "doc_a")
-        .join(vb, "doc_b")
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.size(F.array_intersect("sh_a", "sh_b"))
-                / F.size(F.array_union("sh_a", "sh_b")),
-                6,
-            ),
-        )
-        .filter(F.col("jaccard") >= tau)
-        .select("doc_a", "doc_b", "jaccard")
-        .repartition(1)
-        .sortWithinPartitions("doc_a", "doc_b")
     )
 
 

@@ -39,6 +39,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .pipeline import _default_partitions
+
 IOU_PPB = 1_000_000_000
 
 # Deterministic perturbation knobs for the oracled board query: the
@@ -347,15 +349,11 @@ def _predict_batches(
         )
 
 
-def pipeline_predictions(
-    spark: SparkSession, corpus_path: str, partitions: int | None = None
-) -> DataFrame:
+def pipeline_predictions(spark: SparkSession, corpus_path: str) -> DataFrame:
     """Run the live extraction ladder over every renderable media ref of
     a corpus parquet, emitting per-row predicted boxes + texts.  Same
     skew story as the flagship: refs round-robin so a heavy document
     spreads across the cluster."""
-    if partitions is None:
-        partitions = spark.sparkContext.defaultParallelism * 2
     refs = (
         spark.read.parquet(corpus_path)
         .select(F.explode("spans").alias("s"))
@@ -363,7 +361,7 @@ def pipeline_predictions(
         .select(F.col("s.media_ref").alias("media_ref"))
         .distinct()
     )
-    return refs.repartition(partitions).mapInPandas(
+    return refs.repartition(_default_partitions(spark)).mapInPandas(
         _predict_batches, schema=_PRED_SCHEMA
     )
 

@@ -17,9 +17,10 @@ Scale notes (round-2 hoists):
   in Python at plan-build time and embedded as array literals.  The prior
   form evaluated ~N_PLANES*dim md5+conv calls through interpreted HOF
   lambdas PER ROW — pure waste that grows linearly with corpus size.
-- Norms are per-row facts; every consumer computes ``nrm`` once per row
-  before any join and pairs pay only the dot product.  (Same float result:
-  cosine = dot / (nrm_a * nrm_b) with identical evaluation order.)
+- Norms are per-row facts: ``_normed_embeddings`` computes ``nrm`` once
+  per row before any join, and pairs pay only the dot product in
+  ``_cosine`` = dot / (nrm_a * nrm_b), the one cosine every operator here
+  (and dedup.embedding_near_dup) uses.
 """
 
 from __future__ import annotations
@@ -32,50 +33,51 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 TOP_K = 10
-# Defaults only — every entry point takes (n_planes, n_tables) so bucket
-# count is a deployment parameter, not a module ceiling.  Sizing rule at
-# scale: n_planes ≈ log2(corpus_size / target_bucket_rows) keeps the
-# within-bucket self-join quadratic term bounded (see planes_for_corpus);
-# n_tables trades recall for candidate volume exactly like minhash-LSH
-# bands (dedup.py) — each table is an INDEPENDENT plane set and candidates
-# are the union over tables.
+# LSH shape: 2^DEFAULT_PLANES buckets per table.  Bucket count is fixed,
+# so the within-bucket self-join grows as (corpus / 2^planes)^2; a larger
+# corpus needs more planes (about log2(corpus / target_bucket_rows)).
+# DEFAULT_TABLES trades recall for candidate volume exactly like
+# minhash-LSH bands (dedup.py) — each table is an INDEPENDENT plane set
+# and candidates are the union over tables.
 DEFAULT_PLANES = 8  # 256 buckets/table
 DEFAULT_TABLES = 3
 
 
-def planes_for_corpus(n_vectors: int, target_bucket_rows: int = 4096) -> int:
-    """Bucket-count sizing: enough planes that an average bucket holds
-    ~target_bucket_rows vectors, so candidate generation stays
-    O(n * bucket_size) instead of O((n/2^planes)^2) blowing up as the
-    corpus grows.  At 10^9 vectors / 4k-row buckets this yields 18 planes
-    (262k buckets/table)."""
-    import math
+def _normed_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """embeddings.parquet plus ``nrm``, the per-row L2 norm — computed
+    once per vector so every pair downstream pays only the dot product
+    in ``_cosine``."""
+    return spark.read.parquet(f"{sf_dir}/embeddings.parquet").withColumn(
+        "nrm",
+        F.sqrt(
+            F.aggregate(
+                F.transform(
+                    F.col("embedding"),
+                    lambda x: x.cast("double") * x.cast("double"),
+                ),
+                F.lit(0.0),
+                lambda acc, v: acc + v,
+            )
+        ),
+    )
 
-    return max(1, math.ceil(math.log2(max(n_vectors, 2) / target_bucket_rows)))
 
-
-def _dot(a: Column, b: Column) -> Column:
-    return F.aggregate(
+def _cosine(
+    a: Column | str, b: Column | str, na: Column | str, nb: Column | str
+) -> Column:
+    """dot(a, b) / (na * nb): the one cosine of the embedding family.
+    The dot is a left fold in double over the element products — the
+    order DuckDB's list_dot_product reproduces — and callers round the
+    result themselves."""
+    a, b, na, nb = (
+        F.col(c) if isinstance(c, str) else c for c in (a, b, na, nb)
+    )
+    dot = F.aggregate(
         F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
         F.lit(0.0),
         lambda acc, v: acc + v,
     )
-
-
-def _norm(a: Column) -> Column:
-    return F.sqrt(
-        F.aggregate(
-            F.transform(a, lambda x: x.cast("double") * x.cast("double")),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-    )
-
-
-def cosine(a: Column, b: Column) -> Column:
-    """Generic cosine for one-off use.  Hot paths precompute norms per row
-    instead of calling this per pair (see brute_topk/lsh_topk)."""
-    return _dot(a, b) / (_norm(a) * _norm(b))
+    return dot / (na * nb)
 
 
 @lru_cache(maxsize=None)
@@ -110,9 +112,9 @@ def bucket_of(emb_col: str, table: int, n_planes: int, dim: int = 64) -> Column:
 
     Built as ONE F.expr over an array-of-structs constant, not n_planes
     python-side expression copies: plan size (and codegen time, and the
-    py4j round-trips to build it) is O(1) in n_planes, which is what lets
-    planes_for_corpus() return 18+ at 10^9 vectors without the plan
-    itself becoming the bottleneck."""
+    py4j round-trips to build it) is O(1) in n_planes, so the 18+ planes
+    a 10^9-vector corpus needs do not make the plan itself the
+    bottleneck."""
     items = ",".join(
         "named_struct('bit',{b},'vec',array({vs}))".format(
             b=2**p,
@@ -138,25 +140,16 @@ def bucket_array(
     )
 
 
-# IVF coarse quantizer defaults.  Anchors (inverted-list centroids) are a
-# deterministic sample of the corpus — the K lowest vec_ids — standing in
-# for k-means centroids (the quantizer CONTRACT is identical: assign each
-# vector to its nearest anchor, probe the query's closest lists).  Sizing
-# at scale mirrors FAISS IVF practice: n_lists ~ sqrt(corpus), n_probe
-# trades recall for candidates scanned.
+# IVF coarse quantizer.  Anchors (inverted-list centroids) are a
+# deterministic sample of the corpus — the DEFAULT_ANCHORS lowest vec_ids —
+# standing in for k-means centroids (the quantizer CONTRACT is identical:
+# assign each vector to its nearest anchor, probe the query's
+# DEFAULT_PROBE closest lists).  The list count is fixed; FAISS practice
+# at scale is n_lists ~ sqrt(corpus), which balances assignment cost
+# (n_lists dots per vector) against probe cost (n_probe * corpus / n_lists
+# candidates per query).
 DEFAULT_ANCHORS = 16
 DEFAULT_PROBE = 4
-
-
-def anchors_for_corpus(n_vectors: int) -> int:
-    """IVF list-count sizing (the FAISS rule of thumb): n_lists ~
-    sqrt(corpus) balances assignment cost (n_lists dots per vector,
-    map-side) against probe cost (n_probe * corpus / n_lists candidates
-    per query).  At 10^9 vectors this is ~32k lists; the anchor set stays
-    a broadcastable few MB."""
-    import math
-
-    return max(1, int(math.isqrt(max(n_vectors, 1))))
 
 
 def _emb_sig(sf_dir: str) -> tuple[int, int]:
@@ -171,10 +164,8 @@ def _emb_sig(sf_dir: str) -> tuple[int, int]:
     return (st.st_mtime_ns, st.st_size)
 
 
-def _anchor_rows(
-    sf_dir: str, n_anchors: int = DEFAULT_ANCHORS
-) -> tuple[tuple[int, tuple[float, ...]], ...]:
-    return _anchor_rows_cached(sf_dir, n_anchors, _emb_sig(sf_dir))
+def _anchor_rows(sf_dir: str) -> tuple[tuple[int, tuple[float, ...]], ...]:
+    return _anchor_rows_cached(sf_dir, DEFAULT_ANCHORS, _emb_sig(sf_dir))
 
 
 @lru_cache(maxsize=None)
@@ -208,10 +199,10 @@ def _l2_struct_array(emb_col: str, anchors) -> Column:
 
     ONE F.expr over an array-of-structs anchor constant (aid, a·a
     precomputed driver-side — same left-fold order, bit-identical —
-    and the anchor vector): plan size is O(1) in anchor count, so
-    anchors_for_corpus() can return sqrt(10^9) lists without the
-    expression tree (16 python-built copies of a ~130-node fold in the
-    round-2 form: 7.7 s py4j build + 4 s codegen PER QUERY) exploding."""
+    and the anchor vector): plan size is O(1) in anchor count, so even
+    sqrt(10^9) lists would not explode the expression tree (16
+    python-built copies of a ~130-node fold in the round-2 form: 7.7 s
+    py4j build + 4 s codegen PER QUERY)."""
     items = ",".join(
         "named_struct('aid',{aid},'aa',{aa},'vec',array({vs}))".format(
             aid=aid,
@@ -233,17 +224,13 @@ def _l2_struct_array(emb_col: str, anchors) -> Column:
     )
 
 
-def ivf_topk(
-    spark: SparkSession,
-    sf_dir: str,
-    n_anchors: int = DEFAULT_ANCHORS,
-    n_probe: int = DEFAULT_PROBE,
-) -> DataFrame:
+def ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ANN via an IVF (inverted-file) coarse quantizer: each vector is
     assigned map-side to its nearest anchor (argmin over literal anchor
-    vectors — no shuffle, no join), the query probes its ``n_probe``
-    nearest lists, and exact cosine runs only over vectors in the probed
-    lists (~n_probe/n_anchors of the corpus).
+    vectors — no shuffle, no join), the query probes its
+    ``DEFAULT_PROBE`` nearest lists, and exact cosine runs only over
+    vectors in the probed lists (~DEFAULT_PROBE/DEFAULT_ANCHORS of the
+    corpus).
 
     Plan shape at scale: one map-side assignment pass + one broadcast of
     the single query row + final TakeOrdered — the corpus is never
@@ -251,14 +238,10 @@ def ivf_topk(
     (array_min/array_sort order struct fields lexicographically), the
     same rule as the oracle's ORDER BY d, aid.
     """
-    anchors = _anchor_rows(sf_dir, n_anchors)
-    emb = (
-        spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-        .withColumn("nrm", _norm(F.col("embedding")))
-        .withColumn(
-            "list_id",
-            F.array_min(_l2_struct_array("embedding", anchors))["aid"],
-        )
+    anchors = _anchor_rows(sf_dir)
+    emb = _normed_embeddings(spark, sf_dir).withColumn(
+        "list_id",
+        F.array_min(_l2_struct_array("embedding", anchors))["aid"],
     )
     query = emb.filter(F.col("vec_id") == 0).select(
         F.col("embedding").alias("q"),
@@ -267,7 +250,7 @@ def ivf_topk(
             F.slice(
                 F.array_sort(_l2_struct_array("embedding", anchors)),
                 1,
-                n_probe,
+                DEFAULT_PROBE,
             ),
             lambda s: s["aid"],
         ).alias("probes"),
@@ -278,11 +261,7 @@ def ivf_topk(
         .select(
             "vec_id",
             "label",
-            F.round(
-                _dot(F.col("embedding"), F.col("q"))
-                / (F.col("nrm") * F.col("qn")),
-                4,
-            ).alias("cos"),
+            F.round(_cosine("embedding", "q", "nrm", "qn"), 4).alias("cos"),
         )
     )
     return scored.orderBy(F.desc("cos"), "vec_id").limit(TOP_K)
@@ -306,10 +285,7 @@ def _ivf_index_path(spark: SparkSession, sf_dir: str) -> str:
 
 
 def ivf_index_write(
-    spark: SparkSession,
-    sf_dir: str,
-    n_anchors: int = DEFAULT_ANCHORS,
-    path: str | None = None,
+    spark: SparkSession, sf_dir: str, path: str | None = None
 ) -> str:
     """Persist the IVF inverted lists PARTITIONED by list_id — the
     index-once / query-many form of ivf_topk, laid out as FAISS lays out
@@ -321,25 +297,17 @@ def ivf_index_write(
     At sqrt(10^9) ~ 32k lists the directory count is the same order as a
     daily-partitioned year of event logs — routine for a file index."""
     path = path or _ivf_index_path(spark, sf_dir)
-    anchors = _anchor_rows(sf_dir, n_anchors)
-    emb = (
-        spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-        .withColumn("nrm", _norm(F.col("embedding")))
-        .withColumn(
-            "list_id",
-            F.array_min(_l2_struct_array("embedding", anchors))["aid"],
-        )
+    anchors = _anchor_rows(sf_dir)
+    emb = _normed_embeddings(spark, sf_dir).withColumn(
+        "list_id",
+        F.array_min(_l2_struct_array("embedding", anchors))["aid"],
     )
     emb.write.mode("overwrite").partitionBy("list_id").parquet(path)
     return path
 
 
 def ivf_indexed_topk(
-    spark: SparkSession,
-    sf_dir: str,
-    n_anchors: int = DEFAULT_ANCHORS,
-    n_probe: int = DEFAULT_PROBE,
-    path: str | None = None,
+    spark: SparkSession, sf_dir: str, path: str | None = None
 ) -> DataFrame:
     """ANN over the PERSISTED inverted-file index: probe selection runs
     on the single query row (one-row collect — query planning, the same
@@ -353,24 +321,24 @@ def ivf_indexed_topk(
 
     Probe distances reuse _l2_struct_array verbatim (same rounding, same
     tie-break as ivf_topk and the DuckDB oracle), so results are
-    identical to ivf_topk at the same (n_anchors, n_probe)."""
+    identical to ivf_topk."""
     import os
 
     path = path or _ivf_index_path(spark, sf_dir)
     if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        ivf_index_write(spark, sf_dir, n_anchors, path)
-    anchors = _anchor_rows(sf_dir, n_anchors)
+        ivf_index_write(spark, sf_dir, path)
+    anchors = _anchor_rows(sf_dir)
     qrow = (
-        spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+        _normed_embeddings(spark, sf_dir)
         .filter(F.col("vec_id") == 0)
         .select(
             "embedding",
-            _norm(F.col("embedding")).alias("qn"),
+            F.col("nrm").alias("qn"),
             F.array_sort(_l2_struct_array("embedding", anchors)).alias("ds"),
         )
         .head()
     )
-    probes = [s["aid"] for s in qrow["ds"][:n_probe]]
+    probes = [s["aid"] for s in qrow["ds"][:DEFAULT_PROBE]]
     q_arr = F.array(*[F.lit(float(v)) for v in qrow["embedding"]])
     scored = (
         spark.read.parquet(path)
@@ -379,8 +347,7 @@ def ivf_indexed_topk(
             "vec_id",
             "label",
             F.round(
-                _dot(F.col("embedding"), q_arr)
-                / (F.col("nrm") * F.lit(float(qrow["qn"]))),
+                _cosine("embedding", q_arr, "nrm", F.lit(float(qrow["qn"]))),
                 4,
             ).alias("cos"),
         )
@@ -390,9 +357,7 @@ def ivf_indexed_topk(
 
 def brute_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact top-k by cosine similarity to the vec_id=0 query vector."""
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").withColumn(
-        "nrm", _norm(F.col("embedding"))
-    )
+    emb = _normed_embeddings(spark, sf_dir)
     query = emb.filter(F.col("vec_id") == 0).select(
         F.col("embedding").alias("q"), F.col("nrm").alias("qn")
     )
@@ -402,33 +367,20 @@ def brute_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "vec_id",
             "label",
-            F.round(
-                _dot(F.col("embedding"), F.col("q"))
-                / (F.col("nrm") * F.col("qn")),
-                4,
-            ).alias("cos"),
+            F.round(_cosine("embedding", "q", "nrm", "qn"), 4).alias("cos"),
         )
     )
     return scored.orderBy(F.desc("cos"), "vec_id").limit(TOP_K)
 
 
-def lsh_topk(
-    spark: SparkSession,
-    sf_dir: str,
-    n_planes: int = DEFAULT_PLANES,
-    n_tables: int = DEFAULT_TABLES,
-) -> DataFrame:
+def lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ANN: top-k among vectors sharing the query's bucket in ANY of the
-    ``n_tables`` independent plane sets (multi-probe recall, candidate set
-    still ~n_tables/2^n_planes of the corpus per query).  The single query
-    row broadcasts; the per-table bucket match is the join predicate, so
-    no shuffle of the corpus side ever happens."""
-    emb = (
-        spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-        .withColumn(
-            "buckets", bucket_array("embedding", n_planes, n_tables)
-        )
-        .withColumn("nrm", _norm(F.col("embedding")))
+    ``DEFAULT_TABLES`` independent plane sets (multi-probe recall,
+    candidate set still ~tables/2^planes of the corpus per query).  The
+    single query row broadcasts; the per-table bucket match is the join
+    predicate, so no shuffle of the corpus side ever happens."""
+    emb = _normed_embeddings(spark, sf_dir).withColumn(
+        "buckets", bucket_array("embedding", DEFAULT_PLANES, DEFAULT_TABLES)
     )
     query = emb.filter(F.col("vec_id") == 0).select(
         F.col("embedding").alias("q"),
@@ -444,11 +396,7 @@ def lsh_topk(
         .select(
             "vec_id",
             "label",
-            F.round(
-                _dot(F.col("embedding"), F.col("q"))
-                / (F.col("nrm") * F.col("qn")),
-                4,
-            ).alias("cos"),
+            F.round(_cosine("embedding", "q", "nrm", "qn"), 4).alias("cos"),
         )
     )
     return scored.orderBy(F.desc("cos"), "vec_id").limit(TOP_K)
@@ -457,13 +405,8 @@ def lsh_topk(
 KNN_K = 3
 
 
-def knn_graph(
-    spark: SparkSession,
-    sf_dir: str,
-    n_anchors: int = DEFAULT_ANCHORS,
-    k: int = KNN_K,
-) -> DataFrame:
-    """Batch kNN graph: for EVERY vector, its k nearest neighbors by
+def knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Batch kNN graph: for EVERY vector, its KNN_K nearest neighbors by
     cosine among vectors sharing its IVF list — the SemDeDup-style
     primitive (Abbas et al., 2023: cluster embeddings, compare within
     cluster) that feeds semantic dedup and embedding-cluster pruning.
@@ -471,20 +414,16 @@ def knn_graph(
     Unlike ann_*_topk (one query vector, broadcast), this is the
     all-rows batch form: one map-side list assignment (argmin over
     literal anchors, no shuffle), then ONE equi-join on list_id —
-    quadratic only WITHIN a list, and the list count is the knob:
-    anchors_for_corpus() sizes n_lists ~ sqrt(corpus) so the per-list
-    pair term stays bounded as the corpus grows (FAISS sizing rule).
+    quadratic only WITHIN a list.  The list count is DEFAULT_ANCHORS,
+    fixed, so the per-list pair term grows with the corpus; FAISS sizing
+    (n_lists ~ sqrt(corpus)) would keep it bounded.
     Ranks are computed over the ROUNDED cosine with a dst tie-break, so
     ranking is engine-exact.  Vectors alone in their list emit no rows
     (no neighbors at this probe radius) — same in the oracle."""
-    anchors = _anchor_rows(sf_dir, n_anchors)
-    emb = (
-        spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-        .withColumn("nrm", _norm(F.col("embedding")))
-        .withColumn(
-            "list_id",
-            F.array_min(_l2_struct_array("embedding", anchors))["aid"],
-        )
+    anchors = _anchor_rows(sf_dir)
+    emb = _normed_embeddings(spark, sf_dir).withColumn(
+        "list_id",
+        F.array_min(_l2_struct_array("embedding", anchors))["aid"],
     )
     a = emb.select(
         F.col("vec_id").alias("src"),
@@ -504,11 +443,7 @@ def knn_graph(
         .select(
             "src",
             "dst",
-            F.round(
-                _dot(F.col("ea"), F.col("eb"))
-                / (F.col("na") * F.col("nb")),
-                4,
-            ).alias("cos"),
+            F.round(_cosine("ea", "eb", "na", "nb"), 4).alias("cos"),
         )
     )
     from pyspark.sql.window import Window
@@ -516,7 +451,7 @@ def knn_graph(
     w = Window.partitionBy("src").orderBy(F.desc("cos"), "dst")
     return (
         scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+        .filter(F.col("rank") <= KNN_K)
         .select("src", "rank", "dst", "cos")
         .repartition(1)
         .sortWithinPartitions("src", "rank")
@@ -557,23 +492,24 @@ def _assign_expr(cents: list[list[int]]) -> Column:
 
 
 def _kmeans_fit(
-    spark: SparkSession, sf_dir: str, k: int, iters: int
+    spark: SparkSession, sf_dir: str
 ) -> tuple[DataFrame, list[list[int]]]:
     """The Lloyd loop shared by kmeans_clusters and semdedup_prune:
-    returns (fixed-point embedding frame, final centroids).  Centroids
-    are driver state (k x dim ints); each iteration is one map-side
-    argmin plus one (cluster, dim) partial-agg shuffle."""
+    KMEANS_ITERS iterations from KMEANS_K centroids; returns
+    (fixed-point embedding frame, final centroids).  Centroids are
+    driver state (k x dim ints); each iteration is one map-side argmin
+    plus one (cluster, dim) partial-agg shuffle."""
     emb = (
         spark.read.parquet(f"{sf_dir}/embeddings.parquet")
         .select("vec_id", _emb_fixedpoint(F.col("embedding")).alias("xi"))
     )
-    init = emb.filter(F.col("vec_id") < k).collect()
+    init = emb.filter(F.col("vec_id") < KMEANS_K).collect()
     cents = [
         list(r["xi"]) for r in sorted(init, key=lambda r: r["vec_id"])
     ]
     if not cents:  # empty corpus: nothing to iterate (callers handle [])
         return emb, cents
-    for _ in range(iters):
+    for _ in range(KMEANS_ITERS):
         a = emb.withColumn("c", _assign_expr(cents)).select(
             "vec_id", F.col("c")["cid"].alias("cid"), "xi"
         )
@@ -590,12 +526,7 @@ def _kmeans_fit(
     return emb, cents
 
 
-def kmeans_clusters(
-    spark: SparkSession,
-    sf_dir: str,
-    k: int = KMEANS_K,
-    iters: int = KMEANS_ITERS,
-) -> DataFrame:
+def kmeans_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Lloyd's k-means over the embedding table — the canonical
     iterative-ML-on-Spark shape (and the clustering stage SemDeDup runs
     before within-cluster comparison): centroids are DRIVER/broadcast
@@ -609,7 +540,7 @@ def kmeans_clusters(
     iterations are bit-exact across engines AND partition orders.
     Init = the first k vectors; an emptied cluster keeps its previous
     centroid (deterministic rule, same in the oracle)."""
-    emb, cents = _kmeans_fit(spark, sf_dir, k, iters)
+    emb, cents = _kmeans_fit(spark, sf_dir)
     final = emb.withColumn("c", _assign_expr(cents))
     return (
         final.select(
@@ -625,32 +556,27 @@ def kmeans_clusters(
 SEMDEDUP_TAU = 0.4
 
 
-def semdedup_prune(
-    spark: SparkSession,
-    sf_dir: str,
-    k: int = KMEANS_K,
-    iters: int = KMEANS_ITERS,
-    tau: float = SEMDEDUP_TAU,
-) -> DataFrame:
+def semdedup_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SemDeDup (Abbas et al., arXiv 2303.09540): semantic dedup by
     k-means clustering then EXACT within-cluster cosine pruning — the
     operator the knn_graph/kmeans primitives exist for.  A vector is
-    pruned when ANY cluster-mate with a LOWER vec_id has cosine >= tau
-    (the paper's keep-lowest-index rule, applied against all lower-id
-    mates whether or not those mates are themselves pruned — pruning is
-    a per-item dominance test, not a transitive closure; that is what
-    makes it one join, not an iteration).  Emits every vector with its
+    pruned when ANY cluster-mate with a LOWER vec_id has cosine >=
+    SEMDEDUP_TAU (the paper's keep-lowest-index rule, applied against
+    all lower-id mates whether or not those mates are themselves pruned
+    — pruning is a per-item dominance test, not a transitive closure;
+    that is what makes it one join, not an iteration).  Emits every vector with its
     cluster, is_kept, and pruned_by = the smallest qualifying mate id.
 
     Scale shape: the Lloyd loop is the kmeans_clusters shape (driver
     centroids, map-side argmin, one partial-agg shuffle per iteration);
     the prune is ONE self-equi-join keyed on cluster.  Within-cluster
-    pair work is the SemDeDup design point: k scales with the corpus
-    (k ~ n / target_cluster_size, e.g. 100k clusters for 10^9 vectors)
-    so per-cluster candidates stay bounded; AQE skew-split covers hot
+    pair work grows with cluster size; KMEANS_K is fixed here, and the
+    SemDeDup design point scales k with the corpus (k ~ n /
+    target_cluster_size, e.g. 100k clusters for 10^9 vectors) so
+    per-cluster candidates stay bounded; AQE skew-split covers hot
     clusters.  Cosine is rounded to 4dp before the threshold, the
     engine-agreement convention of embedding_near_dup."""
-    emb_xi, cents = _kmeans_fit(spark, sf_dir, k, iters)
+    emb_xi, cents = _kmeans_fit(spark, sf_dir)
     out_schema = "vec_id long, cluster int, is_kept int, pruned_by long"
     if not cents:  # empty corpus: no centroids, nothing to assign
         return spark.createDataFrame([], out_schema)
@@ -658,11 +584,9 @@ def semdedup_prune(
         "vec_id", F.col("c")["cid"].alias("cluster")
     )
     vecs = assign.join(
-        spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
-            "vec_id", "embedding"
-        ),
+        _normed_embeddings(spark, sf_dir).select("vec_id", "embedding", "nrm"),
         "vec_id",
-    ).withColumn("nrm", _norm(F.col("embedding")))
+    )
     a = vecs.select(
         "cluster",
         F.col("vec_id").alias("vec_a"),
@@ -680,13 +604,9 @@ def semdedup_prune(
         .filter(F.col("vec_a") < F.col("vec_b"))
         .withColumn(
             "cos",
-            F.round(
-                _dot(F.col("emb_a"), F.col("emb_b"))
-                / (F.col("nrm_a") * F.col("nrm_b")),
-                4,
-            ),
+            F.round(_cosine("emb_a", "emb_b", "nrm_a", "nrm_b"), 4),
         )
-        .filter(F.col("cos") >= tau)
+        .filter(F.col("cos") >= SEMDEDUP_TAU)
         .groupBy("vec_b")
         .agg(F.min("vec_a").alias("pruned_by"))
     )
@@ -719,9 +639,7 @@ def filtered_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     single-reducer global sort."""
     from pyspark.sql.window import Window
 
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").withColumn(
-        "nrm", _norm(F.col("embedding"))
-    )
+    emb = _normed_embeddings(spark, sf_dir)
     query = emb.filter(F.col("vec_id") == 0).select(
         F.col("embedding").alias("q"), F.col("nrm").alias("qn")
     )
@@ -731,11 +649,7 @@ def filtered_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "vec_id",
             "label",
-            F.round(
-                _dot(F.col("embedding"), F.col("q"))
-                / (F.col("nrm") * F.col("qn")),
-                4,
-            ).alias("cos"),
+            F.round(_cosine("embedding", "q", "nrm", "qn"), 4).alias("cos"),
         )
     )
     w = Window.partitionBy("label").orderBy(F.desc("cos"), "vec_id")
@@ -1030,7 +944,7 @@ def _anchor_micro_rows_cached(
     r = _sql_round
     return tuple(
         (aid, tuple(r(float(x) * PQ_MICRO) for x in vec))
-        for aid, vec in _anchor_rows(sf_dir, DEFAULT_ANCHORS)
+        for aid, vec in _anchor_rows(sf_dir)
     )
 
 
@@ -1053,7 +967,7 @@ def _ivfpq_codebook_cached(
     import pyarrow.parquet as pq
 
     r = _sql_round
-    anchors = _anchor_rows(sf_dir, DEFAULT_ANCHORS)
+    anchors = _anchor_rows(sf_dir)
     a_aa = [(aid, vec, sum(x * x for x in vec)) for aid, vec in anchors]
     t = pq.read_table(
         f"{sf_dir}/embeddings.parquet", columns=["vec_id", "embedding"]
@@ -1114,7 +1028,7 @@ def ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidate, TakeOrdered."""
     from pyspark.sql.window import Window
 
-    anchors = _anchor_rows(sf_dir, DEFAULT_ANCHORS)
+    anchors = _anchor_rows(sf_dir)
     cb = _ivfpq_codebook(sf_dir)
     if not anchors or not cb or not cb[0]:
         # corpus smaller than the anchor/codebook training slice: a
@@ -1245,9 +1159,7 @@ def bitext_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     windows rank only batch-bounded candidate sets (at 100 TB the
     candidate generator is the IVF/LSH join, keeping every partition
     ANN-candidate-sized, with this margin stage unchanged)."""
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").withColumn(
-        "nrm", _norm(F.col("embedding"))
-    )
+    emb = _normed_embeddings(spark, sf_dir)
     src = emb.filter(
         (F.col("vec_id") % 2 == 0) & (F.col("vec_id") < 2 * BITEXT_PROBES)
     ).select(
@@ -1263,12 +1175,7 @@ def bitext_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = tgt.join(F.broadcast(src)).select(
         "src_id",
         "tgt_id",
-        F.round(
-            _dot(F.col("es"), F.col("et"))
-            / (F.col("ns") * F.col("nt"))
-            * 10000,
-            0,
-        )
+        F.round(_cosine("es", "et", "ns", "nt") * 10000, 0)
         .cast("bigint")
         .alias("cos_x1e4"),
     )
@@ -1407,12 +1314,7 @@ QUERY_PANEL_MOD = 25  # every 25th vector joins the recall panel
 RECALL_SALT = 8  # phase-1 fanout of the salted per-query top-K
 
 
-def ann_recall_eval(
-    spark: SparkSession,
-    sf_dir: str,
-    n_anchors: int = DEFAULT_ANCHORS,
-    n_probe: int = DEFAULT_PROBE,
-) -> DataFrame:
+def ann_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Graded ANN quality metric — recall@k of the IVF candidate path
     against the exact cosine truth, per query of a sampled panel: the
     number a production index is TUNED by (probe count vs recall
@@ -1431,7 +1333,7 @@ def ann_recall_eval(
     K-bounded per query."""
     from pyspark.sql.window import Window
 
-    anchors = _anchor_rows(sf_dir, n_anchors)
+    anchors = _anchor_rows(sf_dir)
     if not anchors:
         # corpus smaller than the anchor training slice: a typeless
         # array() literal would not analyze — empty frame (repo-wide
@@ -1439,13 +1341,9 @@ def ann_recall_eval(
         return spark.createDataFrame(
             [], "qid bigint, k int, n_hit bigint, recall_ppm bigint"
         )
-    emb = (
-        spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-        .withColumn("nrm", _norm(F.col("embedding")))
-        .withColumn(
-            "list_id",
-            F.array_min(_l2_struct_array("embedding", anchors))["aid"],
-        )
+    emb = _normed_embeddings(spark, sf_dir).withColumn(
+        "list_id",
+        F.array_min(_l2_struct_array("embedding", anchors))["aid"],
     )
     queries = emb.filter(
         F.col("vec_id") % QUERY_PANEL_MOD == 0
@@ -1457,7 +1355,7 @@ def ann_recall_eval(
             F.slice(
                 F.array_sort(_l2_struct_array("embedding", anchors)),
                 1,
-                n_probe,
+                DEFAULT_PROBE,
             ),
             lambda s: s["aid"],
         ).alias("probes"),
@@ -1469,11 +1367,7 @@ def ann_recall_eval(
         "vec_id",
         "list_id",
         "probes",
-        F.round(
-            _dot(F.col("embedding"), F.col("q"))
-            / (F.col("nrm") * F.col("qn")),
-            4,
-        ).alias("cos"),
+        F.round(_cosine("embedding", "q", "nrm", "qn"), 4).alias("cos"),
     )
 
     def _topk(df: DataFrame) -> DataFrame:
@@ -1540,7 +1434,7 @@ def hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ocr_spark.operators.dedup import embedding_near_dup
 
-    if not _anchor_rows(sf_dir, DEFAULT_ANCHORS):
+    if not _anchor_rows(sf_dir):
         # corpus smaller than the anchor slice (repo empty-input
         # invariant): no kNN graph, no negatives
         return spark.createDataFrame(
@@ -1605,9 +1499,7 @@ def ndcg_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-query candidates, sharded across queries — at 10^9 candidates
     swap the window for the per-query orderBy().limit() TakeOrdered,
     same result); the discount lookup is an O(K) literal array."""
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").withColumn(
-        "nrm", _norm(F.col("embedding"))
-    )
+    emb = _normed_embeddings(spark, sf_dir)
     queries = emb.filter(F.col("vec_id") < NDCG_NQ).select(
         F.col("vec_id").alias("qid"),
         F.col("label").alias("qlabel"),
@@ -1619,11 +1511,7 @@ def ndcg_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select(
         "qid",
         "vec_id",
-        F.round(
-            _dot(F.col("embedding"), F.col("q"))
-            / (F.col("nrm") * F.col("qn")),
-            4,
-        ).alias("cos"),
+        F.round(_cosine("embedding", "q", "nrm", "qn"), 4).alias("cos"),
         F.expr(
             "greatest(0, 3 - least((label - qlabel + 10) % 10,"
             " (qlabel - label + 10) % 10))"
@@ -1697,9 +1585,7 @@ def mrr_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     10^9 candidates swap for per-query orderBy().limit(K) TakeOrdered,
     same result), then a K-bounded groupBy(qid).min aggregate and a
     broadcast-size left join back to the query list."""
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").withColumn(
-        "nrm", _norm(F.col("embedding"))
-    )
+    emb = _normed_embeddings(spark, sf_dir)
     queries = emb.filter(F.col("vec_id") < NDCG_NQ).select(
         F.col("vec_id").alias("qid"),
         F.col("label").alias("qlabel"),
@@ -1711,11 +1597,7 @@ def mrr_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select(
         "qid",
         "vec_id",
-        F.round(
-            _dot(F.col("embedding"), F.col("q"))
-            / (F.col("nrm") * F.col("qn")),
-            4,
-        ).alias("cos"),
+        F.round(_cosine("embedding", "q", "nrm", "qn"), 4).alias("cos"),
         (F.col("label") == F.col("qlabel")).alias("relevant"),
     )
     w_cos = Window.partitionBy("qid").orderBy(F.desc("cos"), F.asc("vec_id"))
@@ -1781,9 +1663,7 @@ def map_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     the O(K) running count within the K rows — identical S because AP@K
     only reads positions <= K); total_relevant is a plain partial-agg
     count, never a window."""
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").withColumn(
-        "nrm", _norm(F.col("embedding"))
-    )
+    emb = _normed_embeddings(spark, sf_dir)
     queries = emb.filter(F.col("vec_id") < NDCG_NQ).select(
         F.col("vec_id").alias("qid"),
         F.col("label").alias("qlabel"),
@@ -1795,11 +1675,7 @@ def map_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select(
         "qid",
         "vec_id",
-        F.round(
-            _dot(F.col("embedding"), F.col("q"))
-            / (F.col("nrm") * F.col("qn")),
-            4,
-        ).alias("cos"),
+        F.round(_cosine("embedding", "q", "nrm", "qn"), 4).alias("cos"),
         (F.col("label") == F.col("qlabel")).alias("relevant"),
     )
     w_cos = Window.partitionBy("qid").orderBy(F.desc("cos"), F.asc("vec_id"))
@@ -2091,9 +1967,7 @@ def mmr_diversify(spark: SparkSession, sf_dir: str) -> DataFrame:
     [broadcast anti-join the picked set -> max-sim groupBy -> top-1
     TakeOrdered] over <=POOL rows — per-round state is O(POOL), so at
     10^9 candidates only the initial TakeOrdered touches the corpus."""
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").withColumn(
-        "nrm", _norm(F.col("embedding"))
-    )
+    emb = _normed_embeddings(spark, sf_dir)
     query = emb.filter(F.col("vec_id") == 0).select(
         F.col("embedding").alias("q"), F.col("nrm").alias("qn")
     )
@@ -2104,14 +1978,7 @@ def mmr_diversify(spark: SparkSession, sf_dir: str) -> DataFrame:
             "vec_id",
             "embedding",
             "nrm",
-            F.round(
-                F.round(
-                    _dot(F.col("embedding"), F.col("q"))
-                    / (F.col("nrm") * F.col("qn")),
-                    4,
-                )
-                * 10000
-            )
+            F.round(F.round(_cosine("embedding", "q", "nrm", "qn"), 4) * 10000)
             .cast("bigint")
             .alias("rel_m"),
         )
@@ -2134,14 +2001,7 @@ def mmr_diversify(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "xa",
             "xb",
-            F.round(
-                F.round(
-                    _dot(F.col("ea"), F.col("eb"))
-                    / (F.col("na") * F.col("nb")),
-                    4,
-                )
-                * 10000
-            )
+            F.round(F.round(_cosine("ea", "eb", "na", "nb"), 4) * 10000)
             .cast("bigint")
             .alias("sim_m"),
         )

@@ -2237,76 +2237,10 @@ def crawl_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Louvain phase-1 (synchronous modularity-greedy community moves)
+# Two-level Louvain (synchronous modularity-greedy community moves)
 # ---------------------------------------------------------------------------
 
 LOUVAIN_ROUNDS = 2
-
-
-def louvain_one_level(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """One level of Louvain community detection (Blondel, Guillaume,
-    Lambiotte & Lefebvre, J. Stat. Mech. 2008) in the SYNCHRONOUS
-    variant: every node simultaneously moves to the candidate community
-    (a neighbor's community, or its own) with the best modularity gain.
-    For node u and community c the gain of joining c as an isolated
-    node is dQ ∝ k_uc/m − deg_u·Σtot'_c/(2m²); cross-multiplying by
-    2m² gives the EXACT INTEGER score 2·m·k_uc − deg_u·(Σtot_c −
-    deg_u·[c = own]), so the argmax (ties → smaller community id) is
-    engine-bit-equal — float Louvain would tie-break differently per
-    engine.  The node's own community is always a candidate (k_uc = 0
-    if no neighbor shares it), which is the "or stay" branch of the
-    sequential algorithm.  ``LOUVAIN_ROUNDS`` synchronous sweeps
-    approximate the sequential phase-1 fixed point; the aggregation
-    phase (contract communities, recurse) is the standard follow-up
-    and reuses this operator on the contracted graph.
-
-    Differs from lpa_communities by WEIGHTING the vote: LPA counts
-    neighbor labels, Louvain discounts high-degree communities by
-    Σtot — the modularity null model — so hubs don't swallow the
-    graph.
-
-    Scale shape: per round one edges⋈labels equi-join + (node,
-    community) partial-agg for k_uc, one O(communities) Σtot
-    aggregate, one per-NODE window argmax (partitioned by node, never
-    global), all keyed shuffles; rounds localCheckpoint'ed so lineage
-    stays O(1).  Integer scores fit int64 up to ~10^9 edges; beyond
-    that swap in decimal(38,0) as the repo does for the KS
-    cross-products."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
-        "doc_id"
-    )
-    n = docs.count()
-    e = _link_edges(docs, n)
-    und = (
-        e.union(
-            e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        )
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    m = und.count() // 2
-    deg = und.groupBy("src").agg(F.count("*").alias("deg")).select(
-        F.col("src").alias("node"), "deg"
-    )
-    wedges = und.withColumn("w", F.lit(1).cast("bigint"))
-    labels0 = docs.select(
-        F.col("doc_id").alias("node"),
-        F.col("doc_id").cast("bigint").alias("c"),
-    )
-    labels = _louvain_sweeps(labels0, wedges, deg, m, LOUVAIN_ROUNDS)
-    sizes = labels.groupBy("c").agg(
-        F.count("*").cast("bigint").alias("community_size")
-    )
-    return (
-        labels.join(sizes, "c")
-        .select(
-            F.col("node").alias("doc_id"),
-            F.col("c").alias("community"),
-            "community_size",
-        )
-        .repartition(1)
-        .sortWithinPartitions("doc_id")
-    )
 
 
 def _louvain_sweeps(
@@ -2317,8 +2251,8 @@ def _louvain_sweeps(
     rounds: int,
 ) -> DataFrame:
     """``rounds`` synchronous WEIGHTED modularity-greedy sweeps — the
-    core shared by louvain_one_level (unit weights) and the contracted
-    level of louvain_two_level.  ``wedges`` is the symmetric inter-node
+    core shared by both levels of louvain_two_level (unit weights on
+    level 1, contracted multiplicities on level 2).  ``wedges`` is the symmetric inter-node
     (src, dst, w) list (no self rows); ``deg`` the weighted degree
     (self-loop mass counted twice, the standard convention); ``m`` the
     total edge weight.  Score = 2·m·k_uc − deg_u·(Σtot_c −
@@ -2377,22 +2311,44 @@ def _louvain_sweeps(
 
 
 def louvain_two_level(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """FULL multi-level Louvain step (Blondel et al. 2008, the
-    aggregation phase the one-level operator stops before): run the
-    phase-1 sweeps, CONTRACT each community to a super-node (inter-
-    community edge weights = summed multiplicities; intra-community
-    mass enters the super-node's weighted degree via the symmetric
-    (c, c) rows — the self-loop-counted-twice convention), and run the
-    SAME weighted sweeps on the contracted graph.  Total edge weight m
-    is conserved by contraction, so the level-2 scores live on the same
-    modularity scale — the hierarchy is the point: level-2 communities
-    merge level-1 communities that individually looked stable.
+    """Two levels of Louvain community detection (Blondel, Guillaume,
+    Lambiotte & Lefebvre, J. Stat. Mech. 2008) in the SYNCHRONOUS
+    variant.  Level 1 (``community_l1``): every node simultaneously
+    moves to the candidate community (a neighbor's community, or its
+    own) with the best modularity gain.  For node u and community c the
+    gain of joining c as an isolated node is dQ ∝ k_uc/m −
+    deg_u·Σtot'_c/(2m²); cross-multiplying by 2m² gives the EXACT
+    INTEGER score 2·m·k_uc − deg_u·(Σtot_c − deg_u·[c = own]), so the
+    argmax (ties → smaller community id) is engine-bit-equal — float
+    Louvain would tie-break differently per engine.  The node's own
+    community is always a candidate (k_uc = 0 if no neighbor shares
+    it), which is the "or stay" branch of the sequential algorithm.
+    ``LOUVAIN_ROUNDS`` synchronous sweeps approximate the sequential
+    phase-1 fixed point.  Unlike lpa_communities, the vote is WEIGHTED:
+    Σtot discounts high-degree communities — the modularity null model
+    — so hubs don't swallow the graph.
 
-    Scale shape: level 1 as louvain_one_level; the contraction is two
-    label equi-joins + one (ca, cb) partial-agg count on the edge list;
-    level 2 runs on the COMMUNITY graph (nodes = communities, typically
-    orders of magnitude smaller), so its sweeps are nearly free — the
-    classic reason multi-level Louvain scales."""
+    Level 2 (``community_l2``, the aggregation phase): CONTRACT each
+    level-1 community to a super-node (inter-community edge weights =
+    summed multiplicities; intra-community mass enters the super-node's
+    weighted degree via the symmetric (c, c) rows — the
+    self-loop-counted-twice convention), and run the SAME weighted
+    sweeps on the contracted graph.  Total edge weight m is conserved
+    by contraction, so the level-2 scores live on the same modularity
+    scale — level-2 communities merge level-1 communities that
+    individually looked stable.
+
+    Scale shape: per level-1 round one edges⋈labels equi-join +
+    (node, community) partial-agg for k_uc, one O(communities) Σtot
+    aggregate, one per-NODE window argmax (partitioned by node, never
+    global), all keyed shuffles; rounds localCheckpoint'ed so lineage
+    stays O(1).  The contraction is two label equi-joins + one (ca, cb)
+    partial-agg count on the edge list; level 2 runs on the COMMUNITY
+    graph (nodes = communities, typically orders of magnitude smaller),
+    so its sweeps are nearly free — the classic reason multi-level
+    Louvain scales.  Integer scores fit int64 up to ~10^9 edges; beyond
+    that swap in decimal(38,0) as the repo does for the KS
+    cross-products."""
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
         "doc_id"
     )

@@ -1,6 +1,7 @@
 """Board invariants: the committed full-board correctness artifact must
-cover exactly the current queries() board (VERDICT r4 #1), and no board
-key, oracle or package-level function may be silently shadowed."""
+cover exactly the current queries() board (VERDICT r4 #1), no board
+key, oracle or package-level function may be silently shadowed, and no
+two board queries may share one oracle."""
 
 from __future__ import annotations
 
@@ -62,6 +63,45 @@ def test_no_shadowed_board_keys_or_defs():
         if dups := _duplicates(defs):
             shadowed[str(path.relative_to(ROOT))] = dups
     assert not shadowed, f"top-level defs defined twice: {shadowed}"
+
+
+# The one oracle that may alias another.  The persisted-index ANN returns
+# exactly ivf_topk's rows, but reaches them through the list_id-partitioned
+# index on disk; what it adds over ann_ivf_topk is partition pruning, which
+# tests/test_plans.py::test_ivf_indexed_scan_prunes_partitions pins.
+ALLOWED_ORACLE_ALIASES = {"ann_ivf_indexed_topk": "ann_ivf_topk"}
+
+
+def test_no_aliased_oracles():
+    """Two board queries checked by the same oracle compute one result
+    twice, so one of them is a duplicate board entry (prefix_filter_jaccard
+    once re-ran ngram_jaccard_all_pairs under ngram_jaccard_all_pairs'
+    oracle).  Rejects ``sql[a] = sql[b]`` aliases and any two oracles
+    with identical SQL text, except ALLOWED_ORACLE_ALIASES."""
+    entry = ast.parse((ROOT / "__spark_entry__.py").read_text())
+    (fn,) = [
+        f
+        for f in entry.body
+        if isinstance(f, ast.FunctionDef) and f.name == "oracle_sql"
+    ]
+    aliases = {
+        t.slice.value: node.value.slice.value
+        for node in ast.walk(fn)
+        if isinstance(node, ast.Assign)
+        and isinstance(node.value, ast.Subscript)
+        and isinstance(node.value.slice, ast.Constant)
+        for t in node.targets
+        if isinstance(t, ast.Subscript) and isinstance(t.slice, ast.Constant)
+    }
+    assert aliases == ALLOWED_ORACLE_ALIASES
+
+    import __spark_entry__ as entrymod
+
+    by_text = collections.defaultdict(list)
+    for name, text in entrymod.oracle_sql().items():
+        by_text[text].append(name)
+    shared = sorted(sorted(ns) for ns in by_text.values() if len(ns) > 1)
+    assert shared == [sorted(p) for p in ALLOWED_ORACLE_ALIASES.items()]
 
 
 def test_board_artifact_covers_every_query():

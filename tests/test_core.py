@@ -203,35 +203,6 @@ def test_extract_spans_isolation_and_order():
     assert out["error"][2].startswith("ValueError")
 
 
-def test_drop_score_gate_filters_low_conf_lines():
-    """drop_score discards low-confidence lines before the reading-order
-    merge (reference predict_system.py:103-107)."""
-    import numpy as np
-
-    from ocr_spark.core.extract import ocr_page_rows
-    from ocr_spark.fixtures.glyphs import render_text_line
-
-    # page with one clean line and one garbage line (random ink at glyph
-    # height -> detected but unrecognizable -> conf ~0)
-    clean = render_text_line("spark123")
-    rng = np.random.default_rng(1)
-    garbage = rng.random((7, clean.shape[1])) < 0.5
-    garbage[:, ::3] = True  # every column inked so it forms one box
-    h, w = 7, max(clean.shape[1], garbage.shape[1])
-    ink = np.zeros((40, w + 8), bool)
-    ink[4:11, 4 : 4 + clean.shape[1]] = clean
-    ink[24:31, 4 : 4 + garbage.shape[1]] = garbage
-    img = np.full(ink.shape + (3,), 255, np.uint8)
-    img[ink] = 0
-
-    rows_all, _ = ocr_page_rows(img)
-    rows_gated, conf = ocr_page_rows(img, drop_score=0.5)
-    assert any("spark123" in r for r in rows_gated)
-    assert len(rows_gated) <= len(rows_all)
-    assert all("spark123" in r or r.strip() for r in rows_gated)
-    assert conf >= 0.5
-
-
 def test_hybrid_fallback_recovers_empty_lines():
     """Lines that decode empty under the primary tolerance retry with the
     looser fallback matcher (reference _ocr hybrid,

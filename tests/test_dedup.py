@@ -208,26 +208,37 @@ def test_filtered_topk_per_label_exactness(spark, sf_dir):
 
 
 def test_prefix_filter_is_exact_and_prunes(spark, sf_dir):
-    """Prefix filtering must return EXACTLY the all-pairs result while
-    generating strictly fewer candidate pairs than the full posting
-    join (the pruning is the point)."""
+    """Prefix filtering must return EXACTLY the brute-force all-pairs
+    Jaccard result while generating strictly fewer candidate pairs than
+    the full posting join (the pruning is the point)."""
+    from itertools import combinations
+
+    from pyspark.sql import functions as F
+
     from ocr_spark.operators.dedup import (
         ngram_jaccard_all_pairs,
         prefix_candidates,
-        prefix_filter_jaccard,
         word_shingles,
     )
-    from pyspark.sql import functions as F
 
-    full = {
+    got = {
         (r.doc_a, r.doc_b): r.jaccard
         for r in ngram_jaccard_all_pairs(spark, sf_dir).collect()
     }
-    pref = {
-        (r.doc_a, r.doc_b): r.jaccard
-        for r in prefix_filter_jaccard(spark, sf_dir).collect()
+    shingles = {
+        r.doc_id: set(r.sh)
+        for r in spark.read.parquet(f"{sf_dir}/documents.parquet")
+        .select("doc_id", word_shingles(F.col("text")).alias("sh"))
+        .collect()
     }
-    assert pref == full and full  # identical non-empty result set
+    brute = {}
+    for a, b in combinations(sorted(shingles), 2):
+        c = len(shingles[a] & shingles[b])
+        j = round(c / len(shingles[a] | shingles[b]), 6) if c else 0.0
+        if j >= 0.2:
+            brute[(a, b)] = j
+    assert got.keys() == brute.keys() and brute  # same non-empty pair set
+    assert all(abs(got[p] - brute[p]) <= 1e-6 for p in brute)
 
     n_pref_cand = prefix_candidates(spark, sf_dir).count()
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
@@ -397,7 +408,7 @@ def test_ivfpq_residual_codebook_and_probe_cut(spark, sf_dir):
     rows = df.collect()
     assert len(rows) == sim.PQ_TOPK
     # probed lists of query vec 0, recomputed independently
-    anchors = sim._anchor_rows(sf_dir, sim.DEFAULT_ANCHORS)
+    anchors = sim._anchor_rows(sf_dir)
     import pyarrow.parquet as pq
 
     t = pq.read_table(f"{sf_dir}/embeddings.parquet",
@@ -430,8 +441,7 @@ def test_ivfpq_residual_codebook_and_probe_cut(spark, sf_dir):
             "vec_id",
             F.expr(sim.MICRO_ENCODE_EXPR).alias("e"),
             F.array_min(
-                sim._l2_struct_array("embedding", sim._anchor_rows(
-                    sf_dir, sim.DEFAULT_ANCHORS))
+                sim._l2_struct_array("embedding", sim._anchor_rows(sf_dir))
             )["aid"].cast("int").alias("list_id"),
         )
         .join(F.broadcast(amicro), "list_id")
@@ -557,7 +567,7 @@ def test_prefix_filter_kills_boilerplate_skew(spark, tmp_path):
     assert n_pref < n_full / 10, (n_pref, n_full)
 
 
-def test_semdedup_prune_dominance_rule(spark, tmp_path):
+def test_semdedup_prune_dominance_rule(spark, tmp_path, monkeypatch):
     """SemDeDup keep/prune semantics on a crafted single-cluster corpus:
     b is pruned by a (cos 1.0); c is pruned by b (cos ~0.93 >= tau) even
     though b is itself pruned — dominance against ALL lower-id mates,
@@ -565,6 +575,7 @@ def test_semdedup_prune_dominance_rule(spark, tmp_path):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
+    from ocr_spark.operators import similarity as sim
     from ocr_spark.operators.similarity import semdedup_prune
 
     vecs = [
@@ -588,13 +599,16 @@ def test_semdedup_prune_dominance_rule(spark, tmp_path):
     )
     d = str(tmp_path)
     pq.write_table(t, f"{d}/embeddings.parquet")
+    monkeypatch.setattr(sim, "KMEANS_K", 1)
+    monkeypatch.setattr(sim, "KMEANS_ITERS", 1)
+    monkeypatch.setattr(sim, "SEMDEDUP_TAU", 0.9)
     # k=1 -> one cluster; tau=0.9: cos(b,a)=.7071 (b kept),
     # cos(c,a)=.272+.653=.925?? compute: c=[0.3846,0.9231]
     #   cos(c,a)=0.3846 -> < .9 ; cos(c,b)=(0.3846+0.9231)*.7071/1
     #   = .9245 >= .9 -> c pruned BY b although b itself is kept here.
     out = {
         r["vec_id"]: r
-        for r in semdedup_prune(spark, d, k=1, iters=1, tau=0.9).collect()
+        for r in semdedup_prune(spark, d).collect()
     }
     assert len(out) == 4
     assert out[0]["is_kept"] == 1 and out[0]["pruned_by"] is None
@@ -607,10 +621,8 @@ def test_semdedup_prune_dominance_rule(spark, tmp_path):
 
     # tau=0.7: b now pruned by a; d's minimum qualifying lower-id mate
     # becomes b (cos(d,b)=0.7071 >= tau) — min over qualifiers, not max
-    out2 = {
-        r["vec_id"]: r
-        for r in semdedup_prune(spark, d, k=1, iters=1, tau=0.7).collect()
-    }
+    monkeypatch.setattr(sim, "SEMDEDUP_TAU", 0.7)
+    out2 = {r["vec_id"]: r for r in semdedup_prune(spark, d).collect()}
     assert out2[1]["is_kept"] == 0 and out2[1]["pruned_by"] == 0
     assert out2[2]["is_kept"] == 0 and out2[2]["pruned_by"] == 1
     assert out2[3]["is_kept"] == 0 and out2[3]["pruned_by"] == 1

@@ -186,12 +186,13 @@ def test_ivf_assignment_is_map_side(spark):
     assert "takeordered" in tree
 
 
-def test_ivf_probes_shrink_candidates(spark):
+def test_ivf_probes_shrink_candidates(spark, monkeypatch):
     """Probing n_probe of n_anchors lists must scan a strict subset of
     the corpus (the whole point of the inverted file), and more probes
     can only widen the candidate set."""
     from pyspark.sql import functions as F
 
+    from ocr_spark.operators import similarity
     from ocr_spark.operators.similarity import (
         _anchor_rows,
         _l2_struct_array,
@@ -219,7 +220,8 @@ def test_ivf_probes_shrink_candidates(spark):
     assert cos == sorted(cos, reverse=True)
     assert all(-1.0 <= c <= 1.0 for c in cos)
     # fewer probes -> no more candidates than more probes
-    few = ivf_topk(spark, SF, n_probe=1).collect()
+    monkeypatch.setattr(similarity, "DEFAULT_PROBE", 1)
+    few = ivf_topk(spark, SF).collect()
     assert len(few) <= len(rows)
 
 
@@ -820,9 +822,9 @@ def test_regional_revenue_broadcasts_dim_chain(spark):
 def test_prefix_filter_no_cartesian_and_partial_df(spark):
     """Candidate generation joins prefix postings on the shingle key —
     keyed joins only, and the df table aggregates map-side first."""
-    from ocr_spark.operators.dedup import prefix_filter_jaccard
+    from ocr_spark.operators.dedup import ngram_jaccard_all_pairs
 
-    plan = plan_of(prefix_filter_jaccard(spark, SF))
+    plan = plan_of(ngram_jaccard_all_pairs(spark, SF))
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
     assert "partial_count" in plan
@@ -1580,7 +1582,7 @@ def test_tenth_wave_plans_stay_keyed(spark):
     from ocr_spark.operators.text_analysis import padding_waste_audit
     from ocr_spark.operators.web_extract import (
         crawl_frontier,
-        louvain_one_level,
+        louvain_two_level,
     )
 
     for q in (geo_cell_pairs, session_covisitation, padding_waste_audit,
@@ -1589,7 +1591,7 @@ def test_tenth_wave_plans_stay_keyed(spark):
         plan = plan_of(q(spark, SF))
         assert "CartesianProduct" not in plan, q.__name__
         assert "NestedLoop" not in plan, q.__name__
-    for q in (geo_dbscan, crawl_frontier, louvain_one_level):
+    for q in (geo_dbscan, crawl_frontier, louvain_two_level):
         # iterative ops: lint the SIMPLE plan (localCheckpoint tails)
         plan = plan_of(q(spark, SF), "simple")
         assert "CartesianProduct" not in plan, q.__name__

@@ -1085,7 +1085,7 @@ def test_operators_are_empty_input_safe(spark, tmp_path):
         D.containment_pairs, D.homoglyph_dedup, D.split_leakage_audit,
         D.winnowing_near_dup, D.soft_dedup_weights, D.group_kfold_split,
         T.padding_waste_audit, M.audio_near_dup, R.geo_cell_pairs,
-        W.crawl_frontier, W.louvain_one_level,
+        W.crawl_frontier,
         D.cross_source_dup_matrix, R.session_covisitation,
         R.geo_dbscan, S.pca_power_iteration,
         R.histogram_quantile_sketch, T.dataset_card, R.skew_salt_plan,

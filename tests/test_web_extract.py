@@ -877,14 +877,14 @@ def test_crawl_frontier_composition_and_topk(spark, sf_dir):
 
 def test_louvain_matches_python_recomputation(spark, sf_dir):
     """Independent pure-Python replay of the synchronous modularity-
-    greedy rounds on the same synthesized graph — pins the integer
-    score, the own-community candidate, and the (score desc, community
-    asc) tie rule."""
+    greedy level-1 rounds on the same synthesized graph — pins the
+    integer score, the own-community candidate, and the (score desc,
+    community asc) tie rule."""
     import duckdb
 
     from ocr_spark.operators.web_extract import (
         LOUVAIN_ROUNDS,
-        louvain_one_level,
+        louvain_two_level,
     )
 
     n = duckdb.sql(
@@ -923,9 +923,8 @@ def test_louvain_matches_python_recomputation(spark, sf_dir):
     from collections import Counter
 
     sizes = Counter(lab.values())
-    got = louvain_one_level(spark, sf_dir).collect()
-    assert {r["doc_id"]: r["community"] for r in got} == lab
-    assert all(r["community_size"] == sizes[r["community"]] for r in got)
+    got = louvain_two_level(spark, sf_dir).collect()
+    assert {r["doc_id"]: r["community_l1"] for r in got} == lab
     # sanity: the partition is non-trivial (real communities formed)
     assert 1 < len(sizes) < n
 
@@ -960,12 +959,11 @@ def test_louvain_two_level_hierarchy_and_replay(spark, sf_dir):
 
     from ocr_spark.operators.web_extract import (
         LOUVAIN_ROUNDS,
-        louvain_one_level,
         louvain_two_level,
     )
 
-    l1 = {r["doc_id"]: r["community"]
-          for r in louvain_one_level(spark, sf_dir).collect()}
+    got = louvain_two_level(spark, sf_dir).collect()
+    l1 = {r["doc_id"]: r["community_l1"] for r in got}
     n = duckdb.sql(
         f"select count(*) from read_parquet('{sf_dir}/documents.parquet')"
     ).fetchone()[0]
@@ -1005,13 +1003,11 @@ def test_louvain_two_level_hierarchy_and_replay(spark, sf_dir):
             )
             new[u] = best[1]
         lab = new
-    got = louvain_two_level(spark, sf_dir).collect()
     assert {r["doc_id"]: r["community_l2"] for r in got} == {
         d: lab[c] for d, c in l1.items()
     }
     l1_to_l2 = {}
     for r in got:
-        assert r["community_l1"] == l1[r["doc_id"]]
         prev = l1_to_l2.setdefault(r["community_l1"], r["community_l2"])
         assert prev == r["community_l2"]  # one l2 per l1 community
     assert len(set(l1_to_l2.values())) <= len(l1_to_l2)
