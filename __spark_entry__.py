@@ -34,6 +34,7 @@ from ocr_spark.operators.fields import (
     invoice_fill_rates,
 )
 from ocr_spark.operators.pipeline import extract_documents
+from ocr_spark.streaming import stream
 
 # ---------------------------------------------------------------------------
 # corpus helper: the interleaved-document table (doc_id, spans) is not part
@@ -320,17 +321,17 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "table_det_assign": table.table_det_assign,
         "table_html": table.table_html,
         # -- streaming (drained via availableNow) --
-        "stream_exact_dedup": _q_stream_dedup,
-        "stream_watermark_dedup": _q_stream_wm_dedup,
-        "stream_window_counts": _q_stream_window,
-        "stream_user_sessions": _q_stream_sessions,
-        "stream_enriched_events": _q_stream_enrich,
-        "stream_click_attribution": _q_stream_attribution,
-        "stream_upsert_latest": _q_stream_upsert,
-        "stream_topk_trending": _q_stream_topk,
-        "stream_near_dup_gate": _q_stream_gate,
-        "stream_quantile_sketch": _q_stream_qsketch,
-        "stream_tv_drift_by_day": _q_stream_tvdrift,
+        "stream_exact_dedup": stream.stream_dedup_query,
+        "stream_watermark_dedup": stream.stream_watermark_dedup_query,
+        "stream_window_counts": stream.stream_window_query,
+        "stream_user_sessions": stream.stream_session_query,
+        "stream_enriched_events": stream.stream_enrich_query,
+        "stream_click_attribution": stream.stream_attribution_query,
+        "stream_upsert_latest": stream.stream_upsert_query,
+        "stream_topk_trending": stream.stream_topk_query,
+        "stream_near_dup_gate": stream.stream_near_dup_gate_query,
+        "stream_quantile_sketch": stream.stream_qsketch_query,
+        "stream_tv_drift_by_day": stream.stream_tv_drift_query,
         # -- relational breadth --
         "pricing_summary": relational.pricing_summary,
         "top_orders_per_segment": relational.top_orders_per_segment,
@@ -694,76 +695,10 @@ def _norm_chinese_amount(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("c_custkey")
 
 
-def _q_stream_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ocr_spark.streaming.stream import stream_near_dup_gate_query
-
-    return stream_near_dup_gate_query(spark, sf_dir)
-
-
-def _q_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ocr_spark.streaming.stream import stream_dedup_query
-
-    return stream_dedup_query(spark, sf_dir)
-
-
-def _q_stream_wm_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ocr_spark.streaming.stream import stream_watermark_dedup_query
-
-    return stream_watermark_dedup_query(spark, sf_dir)
-
-
-def _q_stream_window(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ocr_spark.streaming.stream import stream_window_query
-
-    return stream_window_query(spark, sf_dir)
-
-
-def _q_stream_qsketch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ocr_spark.streaming.stream import stream_qsketch_query
-
-    return stream_qsketch_query(spark, sf_dir)
-
-
 def _q_interleaved_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ocr_spark.operators.spans import interleaved_pack
 
     return interleaved_pack(spark, _corpus_path(_corpus_docs_for(sf_dir)))
-
-
-def _q_stream_tvdrift(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ocr_spark.streaming.stream import stream_tv_drift_query
-
-    return stream_tv_drift_query(spark, sf_dir)
-
-
-def _q_stream_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ocr_spark.streaming.stream import stream_session_query
-
-    return stream_session_query(spark, sf_dir)
-
-
-def _q_stream_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ocr_spark.streaming.stream import stream_enrich_query
-
-    return stream_enrich_query(spark, sf_dir)
-
-
-def _q_stream_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ocr_spark.streaming.stream import stream_attribution_query
-
-    return stream_attribution_query(spark, sf_dir)
-
-
-def _q_stream_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ocr_spark.streaming.stream import stream_upsert_query
-
-    return stream_upsert_query(spark, sf_dir)
-
-
-def _q_stream_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ocr_spark.streaming.stream import stream_topk_query
-
-    return stream_topk_query(spark, sf_dir)
 
 
 def _q_ofd(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3585,32 +3520,34 @@ from documents group by text order by digest
 """,
         # Watermarked windowed aggregation, availableNow drain: append
         # mode emits exactly the windows closed by the final watermark
-        # (max(ts) - 30 min); open windows stay in state.  time_bucket
+        # (max(ts) - watermark); open windows stay in state.  time_bucket
         # and Spark's window() share the epoch-aligned bucketing origin.
-        "stream_window_counts": """
+        "stream_window_counts": f"""
 with agg as (
-  select time_bucket(interval '10 minutes', ts) as ws, event_type,
+  select time_bucket(interval {stream.WINDOW} second, ts) as ws, event_type,
          count(*) as n, round(sum(value), 2) as total
   from events group by ws, event_type
 ), wm as (select max(ts) as mx from events)
 select epoch(ws)::bigint as w_start_s,
-       epoch(ws + interval '10 minutes')::bigint as w_end_s,
+       epoch(ws + interval {stream.WINDOW} second)::bigint as w_end_s,
        event_type, n, total
 from agg, wm
-where ws + interval '10 minutes' <= mx - interval '30 minutes'
+where ws + interval {stream.WINDOW} second
+      <= mx - interval {stream.WINDOW_WATERMARK} second
 order by w_start_s, event_type
 """,
-        # Session windows, availableNow drain: a session (10-min gap) is
-        # emitted once the watermark passes its end (last event + gap) —
-        # the batch gap-sessionization restricted to sessions ending
-        # before max(ts) - 30 min.  Session end = max(ts in session)+gap,
+        # Session windows, availableNow drain: a session is emitted once
+        # the watermark passes its end (last event + gap) — the batch
+        # gap-sessionization restricted to sessions ending before
+        # max(ts) - watermark.  Session end = max(ts in session)+gap,
         # matching F.session_window's window.end.
-        "stream_user_sessions": """
+        "stream_user_sessions": f"""
 with g as (
   select user_id, ts, value, event_id,
          case when ts - lag(ts) over (partition by user_id
                                       order by ts, event_id)
-                   >= interval '10 minutes' then 1 else 0 end as brk
+                   >= interval {stream.SESSION_GAP} second
+              then 1 else 0 end as brk
   from events
 ),
 s as (
@@ -3626,10 +3563,12 @@ agg as (
 ),
 wm as (select max(ts) as mx from events)
 select floor(epoch(st))::bigint as s_start_s,
-       floor(epoch(en + interval '10 minutes'))::bigint as s_end_s,
+       floor(epoch(en + interval {stream.SESSION_GAP} second))::bigint
+         as s_end_s,
        user_id, n_events, session_value
 from agg, wm
-where en + interval '10 minutes' <= mx - interval '30 minutes'
+where en + interval {stream.SESSION_GAP} second
+      <= mx - interval {stream.SESSION_WATERMARK} second
 order by user_id, s_start_s
 """,
         # Stream-static enrichment is STATELESS: the availableNow drain
@@ -3644,7 +3583,7 @@ order by e.event_id
         # window and time-ordered inputs, the drained inner join equals
         # the batch interval join (click state is never evicted before
         # its last possible purchase arrives).
-        "stream_click_attribution": """
+        "stream_click_attribution": f"""
 select c.user_id,
        c.event_id as click_id,
        p.event_id as purchase_id,
@@ -3654,7 +3593,8 @@ select c.user_id,
 from events c join events p
   on c.user_id = p.user_id
  and c.event_type = 'click' and p.event_type = 'purchase'
- and p.ts >= c.ts and p.ts <= c.ts + interval '30 minutes'
+ and p.ts >= c.ts
+ and p.ts <= c.ts + interval {stream.ATTRIBUTION_WINDOW} second
 order by click_id, purchase_id
 """,
         # Skew diagnosis: exact top-K hottest keys; share in integer ppm.
@@ -3981,7 +3921,7 @@ order by d.doc_id
     # Batch twin of the stateful top-K: rank per hour window, CLOSED
     # windows only (window end strictly before max(ts) - delay, in ms —
     # the event-time-timeout firing rule).
-    sql["stream_topk_trending"] = """
+    sql["stream_topk_trending"] = f"""
 with mx as (select max(ts) as m from events),
 w as (
   select cast(epoch(date_trunc('hour', ts)) as bigint) as ws, event_type
@@ -3996,7 +3936,9 @@ w as (
 )
 select ws, cast(rnk as int) as rnk, event_type, n
 from r cross join mx
-where rnk <= 3 and (ws + 3600) * 1000 < epoch_ms(m) - 1800000
+where rnk <= {stream.TOPK_K}
+  and (ws + {stream.TOPK_WINDOW}) * 1000
+      < epoch_ms(m) - {stream.TOPK_DELAY * 1000}
 order by ws, rnk
 """
     sql["stream_upsert_latest"] = """
@@ -9053,15 +8995,13 @@ order by key_a, key_b
 """
     # Streaming-TV-drift truth: day-keyed merged partials equal the
     # batch day histograms; TV in cross-multiplied integer ppm.
-    from ocr_spark.streaming import stream as streammod
-
     sql["stream_tv_drift_by_day"] = f"""
 with t as (
   select cast(ts as date) as day,
          least(greatest((cast(round(value * 100) as bigint)
-                         - {streammod.QSKETCH_LO})
-                        // {streammod.QSKETCH_W}, 0),
-               {streammod.QSKETCH_B - 1}) as b
+                         - {stream.QSKETCH_LO})
+                        // {stream.QSKETCH_W}, 0),
+               {stream.QSKETCH_B - 1}) as b
   from events
 ),
 h as (select day, b, count(*) as cnt from t group by 1, 2),
@@ -10156,14 +10096,12 @@ from c order by key
     # batch histogram exactly (integer addition), so DuckDB recomputes
     # the fixed-domain clamped histogram + interpolation from the raw
     # table — a value-level gate on a streaming path.
-    from ocr_spark.streaming import stream as streammod
-
     sql["stream_quantile_sketch"] = f"""
 with t as (select cast(round(value * 100) as bigint) as cents from events),
 h as (
-  select least(greatest((cents - {streammod.QSKETCH_LO})
-                        // {streammod.QSKETCH_W}, 0),
-               {streammod.QSKETCH_B - 1}) as b,
+  select least(greatest((cents - {stream.QSKETCH_LO})
+                        // {stream.QSKETCH_W}, 0),
+               {stream.QSKETCH_B - 1}) as b,
          count(*) as cnt
   from t group by 1
 ),
@@ -10184,8 +10122,8 @@ loc as (
 )
 select cast(q_pct as int) as q_pct, cast(n as bigint) as n,
        cast(k as bigint) as target_rank,
-       cast({streammod.QSKETCH_LO} + b * {streammod.QSKETCH_W}
-            + ((k - cum) * {streammod.QSKETCH_W}) // (cnt + 1) as bigint)
+       cast({stream.QSKETCH_LO} + b * {stream.QSKETCH_W}
+            + ((k - cum) * {stream.QSKETCH_W}) // (cnt + 1) as bigint)
          as est_cents
 from loc order by q_pct
 """
@@ -10593,7 +10531,7 @@ where (shared * 1000000) // ({2 * media.AUDIO_DUP_WINS} - shared)
       >= {media.AUDIO_DUP_MIN_PPM}
 order by ref_a, ref_b
 """
-    sql["sequential_sign_test"] = """
+    sql["sequential_sign_test"] = f"""
 with daily as (
   select cast(ts as date) as day,
          sum(case when user_id % 2 = 0 then 1 else 0 end) as n0,
@@ -10616,15 +10554,21 @@ cum as (
            rows between unbounded preceding and current row) as wins
   from win
 ),
-staged as (
-  select day, t, wins, cast(power(3, wins) as bigint) as lr_num,
-    case
-      when cast(power(3, wins) as bigint)
-             >= 16 * cast(power(2, t) as bigint) then 'reject_h0'
-      when 19 * cast(power(3, wins) as bigint)
-             <= 4 * cast(power(2, t) as bigint) then 'accept_h0'
-      else 'continue' end as decision
+guarded as (
+  select day, t, wins,
+         case when t > {relational.SPRT_MAX_DAYS}
+              then error('sequential sign test runs past SPRT_MAX_DAYS = '
+                         || {relational.SPRT_MAX_DAYS} || ' days')
+              else cast(power(3, wins) as bigint) end as lr_num
   from cum
+),
+staged as (
+  select day, t, wins, lr_num,
+    case
+      when lr_num >= 16 * cast(power(2, t) as bigint) then 'reject_h0'
+      when 19 * lr_num <= 4 * cast(power(2, t) as bigint) then 'accept_h0'
+      else 'continue' end as decision
+  from guarded
 )
 select day, cast(t as bigint) as t, cast(wins as bigint) as wins,
        lr_num, decision,

@@ -298,7 +298,10 @@ def main() -> int:
     # 5.5 s solo), so min-of-N alone is not enough.  After the suite pass,
     # any query whose min exceeds RETIME_FACTOR x its committed-history
     # min is re-timed solo and the artifact records BOTH numbers — no
-    # more hand-curated steal footnotes in BASELINE.md.
+    # more hand-curated steal footnotes in BASELINE.md.  A query with no
+    # committed history is always re-timed solo: a stall in its first
+    # recorded run would otherwise become the floor later runs compare
+    # against.
     RETIME_FACTOR = 3.0
     repo_dir = os.path.dirname(os.path.abspath(__file__))
     history: dict[str, float] = {}
@@ -337,9 +340,7 @@ def main() -> int:
     if only is None and sf == 0.1:
         for name in list(timings):
             hist = history.get(name)
-            if hist is None or hist <= 0:
-                continue
-            if timings[name] <= RETIME_FACTOR * hist:
+            if hist and timings[name] <= RETIME_FACTOR * hist:
                 continue
             solo: list[float] = []
             for _ in range(2):

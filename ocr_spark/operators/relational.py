@@ -7422,6 +7422,7 @@ def metric_sensitivity_ladder(spark: SparkSession, sf_dir: str) -> DataFrame:
 SPRT_REJECT_NUM = 16  # A as an integer
 SPRT_ACCEPT_NUM = 4  # B numerator
 SPRT_ACCEPT_DEN = 19  # B denominator
+SPRT_MAX_DAYS = 33  # longest exact horizon: 3^33 < 2^53 < 3^34
 
 
 def sequential_sign_test(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -7443,9 +7444,13 @@ def sequential_sign_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     arms count against treatment; no rounded intermediate at the
     decision boundary).  With w wins in t days the likelihood ratio
     for p=3/4 vs p=1/2 is (3/2)^w (1/2)^(t-w) = 3^w / 2^t, kept as
-    exact integers (3^31 < 2^53, so both engines' pow() is exact and
-    the bigint casts are lossless), and both Wald boundaries are
-    integer comparisons — bit-identical in Spark and DuckDB.
+    exact integers, and both Wald boundaries are integer comparisons —
+    bit-identical in Spark and DuckDB.  That holds up to t =
+    SPRT_MAX_DAYS = 33 days: 3^33 < 2^53, so both engines' pow() is
+    exact and the bigint casts are lossless (16 * 2^33 and 19 * 3^33
+    are far inside a bigint).  A longer stream raises in both engines
+    (3^34 is no longer exact in a double, and 16 * 2^t overflows a
+    bigint from t = 59).
 
     Scale shape: one scan -> per-(day, arm) conditional-sum groupBy
     (map-side partials); everything after runs on the calendar-bounded
@@ -7499,7 +7504,13 @@ def sequential_sign_test_df(daily: DataFrame) -> DataFrame:
         F.count("*").over(wcum).alias("t"),
         F.sum("win").over(wcum).alias("wins"),
     )
-    lr_num = F.pow(F.lit(3.0), F.col("wins")).cast("bigint")
+    lr_num = F.when(
+        F.col("t") > SPRT_MAX_DAYS,
+        F.raise_error(
+            F.lit(f"sequential sign test runs past SPRT_MAX_DAYS = "
+                  f"{SPRT_MAX_DAYS} days")
+        ),
+    ).otherwise(F.pow(F.lit(3.0), F.col("wins")).cast("bigint"))
     pow2 = F.pow(F.lit(2.0), F.col("t")).cast("bigint")
     reject = lr_num >= F.lit(SPRT_REJECT_NUM) * pow2
     accept = (

@@ -1475,6 +1475,40 @@ NDCG_DISC_PPB = (
 )
 
 
+def _query_panel(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, DataFrame]:
+    """The frame the retrieval-eval triad (ndcg_eval, mrr_eval,
+    map_eval) shares: the NDCG_NQ query vectors (qid, qlabel, q, qn),
+    and every (query, other vector) pair as (qid, vec_id, label, qlabel,
+    p_cos), where p_cos ranks the candidate by the round-4 cosine with
+    the (cos desc, vec_id) tie-break that pins the order on both
+    engines.  The query rows broadcast onto one corpus scan and the
+    rank window is partitioned BY QUERY."""
+    emb = _normed_embeddings(spark, sf_dir)
+    queries = emb.filter(F.col("vec_id") < NDCG_NQ).select(
+        F.col("vec_id").alias("qid"),
+        F.col("label").alias("qlabel"),
+        F.col("embedding").alias("q"),
+        F.col("nrm").alias("qn"),
+    )
+    w_cos = Window.partitionBy("qid").orderBy(F.desc("cos"), F.asc("vec_id"))
+    ranked = (
+        emb.join(F.broadcast(queries), F.col("vec_id") != F.col("qid"))
+        .withColumn(
+            "cos", F.round(_cosine("embedding", "q", "nrm", "qn"), 4)
+        )
+        .select(
+            "qid",
+            "vec_id",
+            "label",
+            "qlabel",
+            F.row_number().over(w_cos).alias("p_cos"),
+        )
+    )
+    return queries, ranked
+
+
 def ndcg_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     """nDCG@K of the exact-cosine retrieval against a graded label
     relevance (Järvelin & Kekäläinen, TOIS 20(4), 2002) — the graded
@@ -1499,31 +1533,19 @@ def ndcg_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-query candidates, sharded across queries — at 10^9 candidates
     swap the window for the per-query orderBy().limit() TakeOrdered,
     same result); the discount lookup is an O(K) literal array."""
-    emb = _normed_embeddings(spark, sf_dir)
-    queries = emb.filter(F.col("vec_id") < NDCG_NQ).select(
-        F.col("vec_id").alias("qid"),
-        F.col("label").alias("qlabel"),
-        F.col("embedding").alias("q"),
-        F.col("nrm").alias("qn"),
-    )
-    cands = emb.join(
-        F.broadcast(queries), F.col("vec_id") != F.col("qid")
-    ).select(
-        "qid",
-        "vec_id",
-        F.round(_cosine("embedding", "q", "nrm", "qn"), 4).alias("cos"),
+    _, panel = _query_panel(spark, sf_dir)
+    disc = F.array(*[F.lit(v) for v in NDCG_DISC_PPB])
+    w_rel = Window.partitionBy("qid").orderBy(F.desc("rel"), F.asc("vec_id"))
+    ranked = panel.withColumn(
+        "rel",
         F.expr(
             "greatest(0, 3 - least((label - qlabel + 10) % 10,"
             " (qlabel - label + 10) % 10))"
-        ).alias("rel"),
-    )
-    disc = F.array(*[F.lit(v) for v in NDCG_DISC_PPB])
-    w_cos = Window.partitionBy("qid").orderBy(F.desc("cos"), F.asc("vec_id"))
-    w_rel = Window.partitionBy("qid").orderBy(F.desc("rel"), F.asc("vec_id"))
-    ranked = cands.select(
+        ),
+    ).select(
         "qid",
         "rel",
-        F.row_number().over(w_cos).alias("p_cos"),
+        "p_cos",
         F.row_number().over(w_rel).alias("p_rel"),
     )
     gain = F.expr("cast(pow(2, rel) as bigint) - 1")
@@ -1585,27 +1607,11 @@ def mrr_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     10^9 candidates swap for per-query orderBy().limit(K) TakeOrdered,
     same result), then a K-bounded groupBy(qid).min aggregate and a
     broadcast-size left join back to the query list."""
-    emb = _normed_embeddings(spark, sf_dir)
-    queries = emb.filter(F.col("vec_id") < NDCG_NQ).select(
-        F.col("vec_id").alias("qid"),
-        F.col("label").alias("qlabel"),
-        F.col("embedding").alias("q"),
-        F.col("nrm").alias("qn"),
-    )
-    cands = emb.join(
-        F.broadcast(queries), F.col("vec_id") != F.col("qid")
-    ).select(
-        "qid",
-        "vec_id",
-        F.round(_cosine("embedding", "q", "nrm", "qn"), 4).alias("cos"),
-        (F.col("label") == F.col("qlabel")).alias("relevant"),
-    )
-    w_cos = Window.partitionBy("qid").orderBy(F.desc("cos"), F.asc("vec_id"))
+    queries, panel = _query_panel(spark, sf_dir)
     hits = (
-        cands.select(
-            "qid", "relevant", F.row_number().over(w_cos).alias("p_cos")
+        panel.where(
+            (F.col("p_cos") <= MRR_K) & (F.col("label") == F.col("qlabel"))
         )
-        .where((F.col("p_cos") <= MRR_K) & F.col("relevant"))
         .groupBy("qid")
         .agg(F.min("p_cos").cast("long").alias("first_rel_pos"))
     )
@@ -1663,24 +1669,9 @@ def map_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     the O(K) running count within the K rows — identical S because AP@K
     only reads positions <= K); total_relevant is a plain partial-agg
     count, never a window."""
-    emb = _normed_embeddings(spark, sf_dir)
-    queries = emb.filter(F.col("vec_id") < NDCG_NQ).select(
-        F.col("vec_id").alias("qid"),
-        F.col("label").alias("qlabel"),
-        F.col("embedding").alias("q"),
-        F.col("nrm").alias("qn"),
-    )
-    cands = emb.join(
-        F.broadcast(queries), F.col("vec_id") != F.col("qid")
-    ).select(
-        "qid",
-        "vec_id",
-        F.round(_cosine("embedding", "q", "nrm", "qn"), 4).alias("cos"),
-        (F.col("label") == F.col("qlabel")).alias("relevant"),
-    )
-    w_cos = Window.partitionBy("qid").orderBy(F.desc("cos"), F.asc("vec_id"))
-    ranked = cands.select(
-        "qid", "relevant", F.row_number().over(w_cos).alias("p_cos")
+    _, panel = _query_panel(spark, sf_dir)
+    ranked = panel.select(
+        "qid", (F.col("label") == F.col("qlabel")).alias("relevant"), "p_cos"
     )
     w_run = (
         Window.partitionBy("qid")

@@ -3,44 +3,74 @@
 The reference is a synchronous HTTP service (no streams; SURVEY.md §2.7),
 so streaming here is the Spark-native replacement for its request loop:
 documents arriving as files in a landing directory are extracted
-incrementally with exactly-once sink semantics, which is how the 10^12
-corpus would be ingested continuously in production.
+incrementally with exactly-once sink semantics.  Every operator drains
+what is present (an availableNow trigger) and stops; its
+checkpoint makes the next call resume with only the files that landed
+since, so continuous ingest is the same call on a schedule.
 
-Two operators:
+Twelve operators, each a file-source stream of parquet into one sink:
 
-* ``stream_extract`` — file-source stream of interleaved-document
-  parquet -> foreachBatch(extract_documents) -> append parquet.
-  foreachBatch is the idiomatic shape when the batch transformation
-  involves multi-stage plans (explode -> mapInPandas -> groupBy): each
+* ``stream_extract`` — interleaved-document parquet ->
+  foreachBatch(extract_documents) -> append parquet.  foreachBatch is
+  the idiomatic shape when the batch transformation involves
+  multi-stage plans (explode -> mapInPandas -> groupBy): each
   micro-batch runs the full batch pipeline and lands atomically; the
   streaming checkpoint gives resume-on-restart, complementing the
   chunk-manifest resume of operators/checkpoint.py.
-* ``stream_event_counts`` — watermarked sliding-window aggregation over
-  an event stream (late data dropped past the watermark), the canonical
-  stateful-streaming pattern, included for the engine's streaming
-  breadth.
+* dedup: ``stream_exact_dedup`` (forever-state, applyInPandasWithState),
+  ``stream_watermark_dedup`` (bounded state), ``stream_near_dup_gate``
+  (minhash-LSH bucket ownership).
+* event-time aggregation: ``stream_event_counts`` (tumbling windows),
+  ``stream_user_sessions`` (session windows), ``stream_topk_trending``
+  (custom stateful top-K).
+* joins and sinks: ``stream_enrich_events`` (stream-static),
+  ``stream_click_attribution`` (stream-stream interval join),
+  ``stream_upsert_latest`` (foreachBatch MERGE).
+* additive partials: ``stream_quantile_sketch``,
+  ``stream_tv_drift_by_day``.
+
+Each ``*_query`` wrapper drains one sf table through its operator via
+``_drain`` and returns a lazy read over the sink for the board.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+import os
+import re
+import shutil
+from collections.abc import Callable
+
+from pyspark.sql import Column, DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.window import Window
 
 from ..operators.pipeline import extract_documents
 
+# Event-time durations in seconds, read at call time.  The DuckDB
+# oracles in __spark_entry__.py build their intervals and cutoffs from
+# these same numbers.
+WINDOW = 600  # stream_event_counts: tumbling window length
+WINDOW_WATERMARK = 1800
+SESSION_GAP = 600
+SESSION_WATERMARK = 1800
+ATTRIBUTION_WINDOW = 1800  # a purchase at most this long after its click
+ATTRIBUTION_WATERMARK = 3600  # >= ATTRIBUTION_WINDOW: no click leaves early
+DEDUP_WATERMARK = 3600
+TOPK_WINDOW = 3600  # the date_trunc('hour') window
+TOPK_DELAY = 1800
 
-def _scratch_dir(spark: SparkSession, tag: str, sf_dir: str) -> str:
-    """Deterministic per-(query, corpus) scratch path under the local
-    dirs, so driver-facing wrappers can return LAZY reads over their
-    drained sinks instead of collecting: each call wipes and rebuilds
-    its own directory; nothing accumulates across corpora."""
-    import os
-    import re
-
-    corpus = re.sub(r"[^0-9A-Za-z]", "_", sf_dir.rstrip("/").rsplit("/", 1)[-1])
-    return os.path.join("/tmp", f"ocr_spark_{tag}_{corpus}")
+_EVENT_SCHEMA = T.StructType(
+    [
+        T.StructField("event_id", T.LongType()),
+        T.StructField("ts", T.TimestampType()),
+        T.StructField("user_id", T.LongType()),
+        T.StructField("event_type", T.StringType()),
+        T.StructField("value", T.DoubleType()),
+    ]
+)
+_EVENT_COLS = [f.name for f in _EVENT_SCHEMA.fields]
 
 DOC_SCHEMA = T.StructType(
     [
@@ -62,39 +92,99 @@ DOC_SCHEMA = T.StructType(
 )
 
 
+def _source(
+    spark: SparkSession,
+    input_dir: str,
+    schema: T.StructType = _EVENT_SCHEMA,
+    files_per_trigger: int | None = None,
+) -> DataFrame:
+    """File-source stream over the parquet files in ``input_dir``."""
+    reader = spark.readStream.schema(schema)
+    if files_per_trigger:
+        reader = reader.option("maxFilesPerTrigger", files_per_trigger)
+    return reader.parquet(input_dir)
+
+
+def _start(
+    df: DataFrame,
+    checkpoint_dir: str,
+    sink: str | Callable[[DataFrame, int], None],
+) -> StreamingQuery:
+    """Start ``df`` draining everything present, then stopping: into the
+    parquet directory ``sink``, or through ``foreachBatch(sink)`` when
+    it is a function."""
+    writer = df.writeStream
+    if callable(sink):
+        writer = writer.foreachBatch(sink)
+    else:
+        writer = writer.format("parquet").option("path", sink)
+    return (
+        writer.option("checkpointLocation", checkpoint_dir)
+        .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
+    )
+
+
+def _scratch_dir(tag: str, sf_dir: str) -> str:
+    """Deterministic per-(query, corpus) scratch path under /tmp, so the
+    board wrappers can return LAZY reads over their drained
+    sinks instead of collecting: each call wipes and rebuilds its own
+    directory; nothing accumulates across corpora."""
+    corpus = re.sub(r"[^0-9A-Za-z]", "_", sf_dir.rstrip("/").rsplit("/", 1)[-1])
+    return os.path.join("/tmp", f"ocr_spark_{tag}_{corpus}")
+
+
+def _drain(
+    spark: SparkSession,
+    tag: str,
+    sf_dir: str,
+    operator: Callable[..., StreamingQuery],
+    *inputs: list[DataFrame],
+    dim: DataFrame | None = None,
+) -> str:
+    """Wipe the (tag, corpus) scratch dir, stage each input — a list of
+    frames, one parquet file per frame, in list order — into its own
+    landing dir, drain ``operator`` over them to completion and return
+    its sink dir."""
+    base = _scratch_dir(tag, sf_dir)
+    shutil.rmtree(base, ignore_errors=True)
+    in_dirs = [f"{base}/in{i}" for i in range(len(inputs))]
+    for d, frames in zip(in_dirs, inputs):
+        for df in frames:
+            df.coalesce(1).write.mode("append").parquet(d)
+    out_dir = f"{base}/out"
+    extra = [] if dim is None else [dim]
+    q = operator(spark, *in_dirs, out_dir, f"{base}/ck", *extra)
+    q.awaitTermination()
+    return out_dir
+
+
+def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return spark.read.parquet(f"{sf_dir}/events.parquet").select(*_EVENT_COLS)
+
+
 def stream_extract(
     spark: SparkSession,
     input_dir: str,
     output_dir: str,
     checkpoint_dir: str,
-    available_now: bool = True,
-):
+) -> StreamingQuery:
     """Incremental extraction over a parquet landing directory.
 
-    Returns the StreamingQuery (caller awaits termination).  With
-    ``available_now`` the query drains everything present and stops —
-    the batch-parity mode the tests assert against; without it the query
-    keeps tailing the directory.
+    Returns the StreamingQuery (caller awaits termination).  The query
+    drains every file present, four per micro-batch, and stops; a later
+    call on the same checkpoint processes only the files that landed
+    since.
     """
-    src = (
-        spark.readStream.schema(DOC_SCHEMA)
-        .option("maxFilesPerTrigger", 4)
-        .parquet(input_dir)
-    )
+    src = _source(spark, input_dir, DOC_SCHEMA, files_per_trigger=4)
 
     def _process(batch_df: DataFrame, batch_id: int) -> None:
         extract_documents(batch_df).withColumn(
             "batch_id", F.lit(batch_id)
         ).write.mode("append").parquet(output_dir)
 
-    writer = (
-        src.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(src, checkpoint_dir, _process)
 
 
 def stream_exact_dedup(
@@ -102,8 +192,7 @@ def stream_exact_dedup(
     input_dir: str,
     output_dir: str,
     checkpoint_dir: str,
-    available_now: bool = True,
-):
+) -> StreamingQuery:
     """Cross-micro-batch exact deduplication as a custom stateful operator
     (``applyInPandasWithState``): the first document per content digest is
     emitted, later arrivals — in the same batch or any future one — are
@@ -122,8 +211,9 @@ def stream_exact_dedup(
             T.StructField("text", T.StringType()),
         ]
     )
-    src = spark.readStream.schema(schema).parquet(input_dir)
-    keyed = src.withColumn("digest", F.md5("text"))
+    keyed = _source(spark, input_dir, schema).withColumn(
+        "digest", F.md5("text")
+    )
 
     out_type = T.StructType(
         [
@@ -166,15 +256,7 @@ def stream_exact_dedup(
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    writer = (
-        deduped.writeStream.format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(deduped, checkpoint_dir, output_dir)
 
 
 def stream_event_counts(
@@ -182,43 +264,23 @@ def stream_event_counts(
     input_dir: str,
     output_dir: str,
     checkpoint_dir: str,
-    window: str = "10 minutes",
-    slide: str | None = None,
-    watermark: str = "30 minutes",
-    available_now: bool = True,
-    max_files_per_trigger: int | None = None,
-):
-    """Watermarked windowed counts over an event-file stream.
+) -> StreamingQuery:
+    """Watermarked tumbling-window counts over an event-file stream
+    (``WINDOW`` seconds long, watermark delay ``WINDOW_WATERMARK``).
 
-    Late rows beyond ``watermark`` are dropped; append mode emits a
+    Late rows beyond the watermark are dropped; append mode emits a
     window only once it is closed by the watermark — both behaviors the
     tests exercise.  For a TIME-ORDERED file sequence (log rotation: each
     file later than the previous) the emitted set is additionally
     independent of micro-batch boundaries — no row can fall behind a
     watermark derived from an earlier file — which
     tests/test_streaming.py::test_stream_window_batch_split_invariance
-    pins by draining the same input 1 file/trigger vs one batch;
-    ``max_files_per_trigger`` exists for that test.
+    pins by draining the same files one per call vs in one batch.
     """
-    schema = T.StructType(
-        [
-            T.StructField("event_id", T.LongType()),
-            T.StructField("ts", T.TimestampType()),
-            T.StructField("user_id", T.LongType()),
-            T.StructField("event_type", T.StringType()),
-            T.StructField("value", T.DoubleType()),
-        ]
-    )
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    src = reader.parquet(input_dir)
     agg = (
-        src.withWatermark("ts", watermark)
-        .groupBy(
-            F.window("ts", window, slide or window).alias("w"),
-            "event_type",
-        )
+        _source(spark, input_dir)
+        .withWatermark("ts", f"{WINDOW_WATERMARK} seconds")
+        .groupBy(F.window("ts", f"{WINDOW} seconds").alias("w"), "event_type")
         .agg(F.count("*").alias("n"), F.round(F.sum("value"), 2).alias("total"))
         .select(
             F.col("w.start").alias("w_start"),
@@ -228,15 +290,7 @@ def stream_event_counts(
             "total",
         )
     )
-    writer = (
-        agg.writeStream.format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(agg, checkpoint_dir, output_dir)
 
 
 def stream_window_query(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -259,17 +313,10 @@ def stream_window_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     collect — the emitted window set is unbounded in the input's time
     span): scratch dirs are deterministic per corpus and re-created
     fresh each call, so the returned DataFrame's files remain valid."""
-    import shutil
-
-    base = _scratch_dir(spark, "stream_window", sf_dir)
-    shutil.rmtree(base, ignore_errors=True)
-    in_dir, out_dir, ck_dir = f"{base}/in", f"{base}/out", f"{base}/ck"
-    events = spark.read.parquet(f"{sf_dir}/events.parquet").select(
-        "event_id", "ts", "user_id", "event_type", "value"
+    out_dir = _drain(
+        spark, "stream_window", sf_dir, stream_event_counts,
+        [_events(spark, sf_dir)],
     )
-    events.coalesce(1).write.mode("overwrite").parquet(in_dir)
-    q = stream_event_counts(spark, in_dir, out_dir, ck_dir)
-    q.awaitTermination()
     return (
         spark.read.parquet(out_dir)
         .select(
@@ -299,17 +346,10 @@ def stream_dedup_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     sink (no driver-side collect — the deduplicated set is corpus-sized):
     the scratch dir is deterministic per corpus and re-created fresh each
     call, so the returned DataFrame's files remain valid."""
-    import shutil
-
-    base = _scratch_dir(spark, "stream_dedup", sf_dir)
-    shutil.rmtree(base, ignore_errors=True)
-    in_dir, out_dir, ck_dir = f"{base}/in", f"{base}/out", f"{base}/ck"
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
         F.col("doc_id").cast("string").alias("doc_id"), "text"
     )
-    docs.coalesce(1).write.mode("overwrite").parquet(in_dir)
-    q = stream_exact_dedup(spark, in_dir, out_dir, ck_dir)
-    q.awaitTermination()
+    out_dir = _drain(spark, "stream_dedup", sf_dir, stream_exact_dedup, [docs])
     return (
         spark.read.parquet(out_dir)
         .select("digest", "doc_id", "text")
@@ -323,37 +363,24 @@ def stream_user_sessions(
     input_dir: str,
     output_dir: str,
     checkpoint_dir: str,
-    gap: str = "10 minutes",
-    watermark: str = "30 minutes",
-    available_now: bool = True,
-    max_files_per_trigger: int | None = None,
-):
+) -> StreamingQuery:
     """Watermarked SESSION-window aggregation per user (native
     F.session_window — Spark's built-in stateful session merging): an
     event extends the user's open session while its timestamp lands
-    before last_event + gap; append mode emits a session once the
+    before last_event + SESSION_GAP; append mode emits a session once the
     watermark passes its end (no admissible event can extend it any
     more, because an extender would be older than the watermark and
     dropped as late).  The emitted set over a full availableNow drain is
     therefore the batch gap-sessionization of the input restricted to
     sessions with end ≤ max(ts) − delay — which is exactly what the
     DuckDB lag/sum oracle computes."""
-    schema = T.StructType(
-        [
-            T.StructField("event_id", T.LongType()),
-            T.StructField("ts", T.TimestampType()),
-            T.StructField("user_id", T.LongType()),
-            T.StructField("event_type", T.StringType()),
-            T.StructField("value", T.DoubleType()),
-        ]
-    )
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    src = reader.parquet(input_dir)
     agg = (
-        src.withWatermark("ts", watermark)
-        .groupBy(F.session_window("ts", gap).alias("w"), "user_id")
+        _source(spark, input_dir)
+        .withWatermark("ts", f"{SESSION_WATERMARK} seconds")
+        .groupBy(
+            F.session_window("ts", f"{SESSION_GAP} seconds").alias("w"),
+            "user_id",
+        )
         .agg(
             F.count("*").alias("n_events"),
             F.round(F.sum("value"), 2).alias("session_value"),
@@ -366,15 +393,7 @@ def stream_user_sessions(
             "session_value",
         )
     )
-    writer = (
-        agg.writeStream.format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(agg, checkpoint_dir, output_dir)
 
 
 def stream_session_query(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -382,17 +401,10 @@ def stream_session_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     session-window aggregation and return the emitted (closed) sessions,
     epoch-seconds bounds for engine-neutral comparison.  Lazy read over
     the drained sink (see _scratch_dir)."""
-    import shutil
-
-    base = _scratch_dir(spark, "stream_sessions", sf_dir)
-    shutil.rmtree(base, ignore_errors=True)
-    in_dir, out_dir, ck_dir = f"{base}/in", f"{base}/out", f"{base}/ck"
-    events = spark.read.parquet(f"{sf_dir}/events.parquet").select(
-        "event_id", "ts", "user_id", "event_type", "value"
+    out_dir = _drain(
+        spark, "stream_sessions", sf_dir, stream_user_sessions,
+        [_events(spark, sf_dir)],
     )
-    events.coalesce(1).write.mode("overwrite").parquet(in_dir)
-    q = stream_user_sessions(spark, in_dir, out_dir, ck_dir)
-    q.awaitTermination()
     return (
         spark.read.parquet(out_dir)
         .select(
@@ -407,26 +419,13 @@ def stream_session_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_EVENT_SCHEMA = T.StructType(
-    [
-        T.StructField("event_id", T.LongType()),
-        T.StructField("ts", T.TimestampType()),
-        T.StructField("user_id", T.LongType()),
-        T.StructField("event_type", T.StringType()),
-        T.StructField("value", T.DoubleType()),
-    ]
-)
-
-
 def stream_enrich_events(
     spark: SparkSession,
     input_dir: str,
     output_dir: str,
     checkpoint_dir: str,
     dim: DataFrame,
-    available_now: bool = True,
-    max_files_per_trigger: int | None = None,
-):
+) -> StreamingQuery:
     """Stream-static dimension enrichment — the ingest-time join every
     event pipeline runs: each arriving event picks up its customer
     attributes from a STATIC dimension table.  Stream-static joins are
@@ -439,25 +438,11 @@ def stream_enrich_events(
     survives into every micro-batch plan.  A LEFT join keeps events whose
     dimension row is missing (late dimension arrival) instead of
     silently dropping them."""
-    reader = spark.readStream.schema(_EVENT_SCHEMA)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    src = reader.parquet(input_dir)
+    src = _source(spark, input_dir)
     enriched = src.join(
         F.broadcast(dim), src["user_id"] == dim["c_custkey"], "left"
-    ).select(
-        "event_id", "ts", "user_id", "event_type", "value",
-        "c_name", "c_mktsegment",
-    )
-    writer = (
-        enriched.writeStream.format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    ).select(*_EVENT_COLS, "c_name", "c_mktsegment")
+    return _start(enriched, checkpoint_dir, output_dir)
 
 
 def stream_click_attribution(
@@ -466,38 +451,29 @@ def stream_click_attribution(
     purchases_dir: str,
     output_dir: str,
     checkpoint_dir: str,
-    attribution_window: str = "30 minutes",
-    watermark: str = "1 hour",
-    available_now: bool = True,
-    max_files_per_trigger: int | None = None,
-):
+) -> StreamingQuery:
     """Watermarked STREAM-STREAM interval join — the canonical ad-
     attribution shape: every purchase joins each click by the same user
-    that happened within ``attribution_window`` BEFORE it.  Both sides
+    that happened within ``ATTRIBUTION_WINDOW`` BEFORE it.  Both sides
     carry an event-time watermark; the time-bound join condition lets
     Spark evict click state older than watermark + window, so state is
     bounded by the window, not the stream length.
 
     Completeness: an inner stream-stream join emits a pair once both
-    rows are in state.  With ``watermark >= attribution_window`` and a
-    time-ordered file sequence, a click is never evicted before every
-    purchase that could match it has arrived — the drained availableNow
-    result equals the batch interval join, which is the DuckDB oracle
-    (and test_streaming pins the 1-file-per-trigger split gives the same
-    set).
+    rows are in state.  With ``ATTRIBUTION_WATERMARK >=
+    ATTRIBUTION_WINDOW`` and a time-ordered file sequence, a click is
+    never evicted before every purchase that could match it has arrived
+    — the drained availableNow result equals the batch interval join,
+    which is the DuckDB oracle (and test_streaming pins that draining
+    the files one per call gives the same set).
 
     Scale shape: the join keys on user_id, so both streams shuffle once
     by user; state per user is one attribution window of clicks.  Skewed
     hot users bound state by the window, not by their total click
     volume."""
-    def _src(d):
-        r = spark.readStream.schema(_EVENT_SCHEMA)
-        if max_files_per_trigger:
-            r = r.option("maxFilesPerTrigger", max_files_per_trigger)
-        return r.parquet(d)
-
+    watermark = f"{ATTRIBUTION_WATERMARK} seconds"
     clicks = (
-        _src(clicks_dir)
+        _source(spark, clicks_dir)
         .withWatermark("ts", watermark)
         .select(
             F.col("event_id").alias("click_id"),
@@ -506,7 +482,7 @@ def stream_click_attribution(
         )
     )
     purchases = (
-        _src(purchases_dir)
+        _source(spark, purchases_dir)
         .withWatermark("ts", watermark)
         .select(
             F.col("event_id").alias("purchase_id"),
@@ -519,7 +495,8 @@ def stream_click_attribution(
         purchases,
         F.expr(
             "c_user = p_user AND purchase_ts >= click_ts "
-            f"AND purchase_ts <= click_ts + interval {attribution_window}"
+            "AND purchase_ts <= click_ts + "
+            f"interval {ATTRIBUTION_WINDOW} seconds"
         ),
         "inner",
     ).select(
@@ -530,15 +507,7 @@ def stream_click_attribution(
         "purchase_ts",
         "purchase_value",
     )
-    writer = (
-        joined.writeStream.format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(joined, checkpoint_dir, output_dir)
 
 
 def stream_enrich_query(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -547,20 +516,13 @@ def stream_enrich_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     LAZY read over the sink (conventions of stream_window_query).
     Stateless join => the drained set is exactly the batch left join,
     which is the DuckDB oracle."""
-    import shutil
-
-    base = _scratch_dir(spark, "stream_enrich", sf_dir)
-    shutil.rmtree(base, ignore_errors=True)
-    in_dir, out_dir, ck_dir = f"{base}/in", f"{base}/out", f"{base}/ck"
-    events = spark.read.parquet(f"{sf_dir}/events.parquet").select(
-        "event_id", "ts", "user_id", "event_type", "value"
-    )
-    events.coalesce(1).write.mode("overwrite").parquet(in_dir)
     dim = spark.read.parquet(f"{sf_dir}/customer.parquet").select(
         "c_custkey", "c_name", "c_mktsegment"
     )
-    q = stream_enrich_events(spark, in_dir, out_dir, ck_dir, dim)
-    q.awaitTermination()
+    out_dir = _drain(
+        spark, "stream_enrich", sf_dir, stream_enrich_events,
+        [_events(spark, sf_dir)], dim=dim,
+    )
     return (
         spark.read.parquet(out_dir)
         .select(
@@ -583,25 +545,19 @@ def stream_attribution_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream-stream interval join, and return the attribution pairs.
     Timestamps are projected as epoch seconds for engine-neutral
     hashing; LAZY read over the sink per module convention."""
-    import shutil
-
-    base = _scratch_dir(spark, "stream_attr", sf_dir)
-    shutil.rmtree(base, ignore_errors=True)
-    c_dir, p_dir = f"{base}/clicks", f"{base}/purchases"
-    out_dir, ck_dir = f"{base}/out", f"{base}/ck"
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet").select(
-        "event_id", "ts", "user_id", "event_type", "value"
-    )
-    for et, d in (("click", c_dir), ("purchase", p_dir)):
-        (
+    ev = _events(spark, sf_dir)
+    clicks, purchases = (
+        [
             ev.filter(F.col("event_type") == et)
             .repartition(1)
             .sortWithinPartitions("ts")
-            .write.mode("overwrite")
-            .parquet(d)
-        )
-    q = stream_click_attribution(spark, c_dir, p_dir, out_dir, ck_dir)
-    q.awaitTermination()
+        ]
+        for et in ("click", "purchase")
+    )
+    out_dir = _drain(
+        spark, "stream_attr", sf_dir, stream_click_attribution,
+        clicks, purchases,
+    )
     return (
         spark.read.parquet(out_dir)
         .select(
@@ -625,11 +581,11 @@ def stream_upsert_latest(
     input_dir: str,
     state_dir: str,
     checkpoint_dir: str,
-    available_now: bool = True,
-    max_files_per_trigger: int | None = None,
-):
+) -> StreamingQuery:
     """foreachBatch idempotent UPSERT sink: maintain a keyed table of the
     latest event per user (MERGE semantics) without a lakehouse format.
+    Each landed file is its own micro-batch, so a later file's events
+    overwrite an earlier file's keys.
 
     The scale pattern is Hudi/Iceberg copy-on-write with PARTIAL
     rewrites: the state table is partitioned into N_STATE_BUCKETS by
@@ -652,13 +608,8 @@ def stream_upsert_latest(
     garbage to delete — readers never see a half-written or half-moved
     bucket."""
     import json
-    import os
-    import shutil
 
-    reader = spark.readStream.schema(_EVENT_SCHEMA)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    src = reader.parquet(input_dir)
+    src = _source(spark, input_dir, files_per_trigger=1)
 
     cur_path = os.path.join(state_dir, "current")
     retired = os.path.join(state_dir, "_retired")
@@ -745,14 +696,7 @@ def stream_upsert_latest(
                 fh,
             )
 
-    writer = (
-        src.writeStream.foreachBatch(_merge)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(src, checkpoint_dir, _merge)
 
 
 def stream_upsert_query(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -761,16 +705,10 @@ def stream_upsert_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     later batches genuinely overwrite earlier keys, then return the
     final keyed state.  The drained state equals the batch arg-max per
     user (max ts, tie-break max event_id) — the DuckDB oracle."""
-    import shutil
-
-    base = _scratch_dir(spark, "stream_upsert", sf_dir)
-    shutil.rmtree(base, ignore_errors=True)
-    in_dir, st_dir, ck_dir = f"{base}/in", f"{base}/state", f"{base}/ck"
     from ocr_spark.operators.relational import bucketed_global_rank
 
     raw = (
-        spark.read.parquet(f"{sf_dir}/events.parquet")
-        .select("event_id", "ts", "user_id", "event_type", "value")
+        _events(spark, sf_dir)
         # TIMESTAMP_NTZ: order key via epoch micros through a UTC cast
         .withColumn(
             "_tsu",
@@ -787,19 +725,16 @@ def stream_upsert_query(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("_q", F.expr(f"((_rk - 1) * 4) div {max(n_ev, 1)} + 1"))
         .drop("_tsu", "_rk")
     )
-    for i in range(1, 5):  # one time-ordered file per quartile
-        (
-            ev.filter(F.col("_q") == i)
-            .drop("_q")
-            .repartition(1)
-            .sortWithinPartitions("ts")
-            .write.mode("append")
-            .parquet(in_dir)
-        )
-    q = stream_upsert_latest(
-        spark, in_dir, st_dir, ck_dir, max_files_per_trigger=1
+    quartiles = [  # one time-ordered file per quartile
+        ev.filter(F.col("_q") == i)
+        .drop("_q")
+        .repartition(1)
+        .sortWithinPartitions("ts")
+        for i in range(1, 5)
+    ]
+    st_dir = _drain(
+        spark, "stream_upsert", sf_dir, stream_upsert_latest, quartiles
     )
-    q.awaitTermination()
     return (
         spark.read.parquet(f"{st_dir}/current")
         .select(
@@ -819,13 +754,10 @@ def stream_watermark_dedup(
     input_dir: str,
     output_dir: str,
     checkpoint_dir: str,
-    watermark: str = "1 hour",
-    available_now: bool = True,
-    max_files_per_trigger: int | None = None,
-):
+) -> StreamingQuery:
     """Streaming dedup with BOUNDED state via the native
     ``dropDuplicatesWithinWatermark``: a duplicate event_id arriving
-    within the watermark delay of the first copy is dropped; once the
+    within DEDUP_WATERMARK of the first copy is dropped; once the
     event-time watermark passes a key's expiry the key is EVICTED, so
     state size is O(keys per watermark window), not O(all keys ever) —
     the property that makes streaming dedup survivable at 10^12 events
@@ -836,23 +768,12 @@ def stream_watermark_dedup(
     dedup at scale actually ships (eviction + re-emit pinned by
     tests/test_streaming.py::test_watermark_dedup_evicts_state).
     """
-    src = spark.readStream.schema(_EVENT_SCHEMA)
-    if max_files_per_trigger is not None:
-        src = src.option("maxFilesPerTrigger", max_files_per_trigger)
     deduped = (
-        src.parquet(input_dir)
-        .withWatermark("ts", watermark)
+        _source(spark, input_dir)
+        .withWatermark("ts", f"{DEDUP_WATERMARK} seconds")
         .dropDuplicatesWithinWatermark(["event_id"])
     )
-    writer = (
-        deduped.writeStream.format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(deduped, checkpoint_dir, output_dir)
 
 
 def stream_watermark_dedup_query(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -865,17 +786,11 @@ def stream_watermark_dedup_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     the oracle is simply ``select distinct * from events`` (plus the
     epoch canonicalization).  The eviction/re-emit semantics that DO
     depend on batch boundaries are pinned in tests, not here."""
-    import shutil
-
-    base = _scratch_dir(spark, "stream_wm_dedup", sf_dir)
-    shutil.rmtree(base, ignore_errors=True)
-    in_dir, out_dir, ck_dir = f"{base}/in", f"{base}/out", f"{base}/ck"
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet").select(
-        "event_id", "ts", "user_id", "event_type", "value"
+    ev = _events(spark, sf_dir)
+    out_dir = _drain(
+        spark, "stream_wm_dedup", sf_dir, stream_watermark_dedup,
+        [ev.unionAll(ev)],
     )
-    ev.unionAll(ev).coalesce(1).write.mode("overwrite").parquet(in_dir)
-    q = stream_watermark_dedup(spark, in_dir, out_dir, ck_dir)
-    q.awaitTermination()
     return (
         spark.read.parquet(out_dir)
         .select(
@@ -891,9 +806,6 @@ def stream_watermark_dedup_query(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 TOPK_K = 3
-TOPK_WINDOW_S = 3600
-TOPK_DELAY = "30 minutes"
-TOPK_DELAY_S = 1800
 
 
 def stream_topk_trending(
@@ -901,9 +813,7 @@ def stream_topk_trending(
     input_dir: str,
     output_dir: str,
     checkpoint_dir: str,
-    available_now: bool = True,
-    max_files_per_trigger: int | None = None,
-):
+) -> StreamingQuery:
     """Per-hour top-K trending event types as a CUSTOM stateful operator
     (``applyInPandasWithState`` + event-time timeout) — the shape Spark's
     built-in streaming aggregation cannot express: a rank over a
@@ -922,21 +832,9 @@ def stream_topk_trending(
     import pandas as pd
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-    schema = T.StructType(
-        [
-            T.StructField("event_id", T.LongType()),
-            T.StructField("ts", T.TimestampType()),
-            T.StructField("user_id", T.LongType()),
-            T.StructField("event_type", T.StringType()),
-            T.StructField("value", T.DoubleType()),
-        ]
-    )
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    src = reader.parquet(input_dir)
     keyed = (
-        src.withWatermark("ts", TOPK_DELAY)
+        _source(spark, input_dir)
+        .withWatermark("ts", f"{TOPK_DELAY} seconds")
         .withColumn(
             "ws", F.unix_timestamp(F.date_trunc("hour", F.col("ts")))
         )
@@ -985,7 +883,7 @@ def stream_topk_trending(
                 d[et] = d.get(et, 0) + int(c)
         state.update((list(d.keys()), [int(v) for v in d.values()]))
         # fire when the watermark passes the window end
-        state.setTimeoutTimestamp((ws + TOPK_WINDOW_S) * 1000)
+        state.setTimeoutTimestamp((ws + TOPK_WINDOW) * 1000)
 
     trending = keyed.groupBy("ws").applyInPandasWithState(
         topk,
@@ -994,15 +892,7 @@ def stream_topk_trending(
         outputMode="append",
         timeoutConf=GroupStateTimeout.EventTimeTimeout,
     )
-    writer = (
-        trending.writeStream.format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(trending, checkpoint_dir, output_dir)
 
 
 def stream_topk_query(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1010,17 +900,10 @@ def stream_topk_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     operator; emitted rows are exactly the CLOSED windows (window end
     strictly before final watermark = max(ts) - delay), which the DuckDB
     rank oracle reproduces."""
-    import shutil
-
-    base = _scratch_dir(spark, "stream_topk", sf_dir)
-    shutil.rmtree(base, ignore_errors=True)
-    in_dir, out_dir, ck_dir = f"{base}/in", f"{base}/out", f"{base}/ck"
-    events = spark.read.parquet(f"{sf_dir}/events.parquet").select(
-        "event_id", "ts", "user_id", "event_type", "value"
+    out_dir = _drain(
+        spark, "stream_topk", sf_dir, stream_topk_trending,
+        [_events(spark, sf_dir)],
     )
-    events.coalesce(1).write.mode("overwrite").parquet(in_dir)
-    q = stream_topk_trending(spark, in_dir, out_dir, ck_dir)
-    q.awaitTermination()
     return (
         spark.read.parquet(out_dir)
         .select("ws", "rnk", "event_type", "n")
@@ -1039,8 +922,7 @@ def stream_near_dup_gate(
     input_dir: str,
     output_dir: str,
     checkpoint_dir: str,
-    available_now: bool = True,
-):
+) -> StreamingQuery:
     """Near-duplicate admission at INGEST: each arriving document's
     minhash-LSH band buckets are resolved against a persistent
     bucket-ownership state — the first document ever seen in a bucket
@@ -1078,8 +960,7 @@ def stream_near_dup_gate(
             T.StructField("text", T.StringType()),
         ]
     )
-    src = spark.readStream.schema(schema).parquet(input_dir)
-    hashed = src.select(
+    hashed = _source(spark, input_dir, schema).select(
         "doc_id",
         F.transform(
             word_shingles(F.col("text")),
@@ -1161,15 +1042,7 @@ def stream_near_dup_gate(
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    writer = (
-        resolved.writeStream.format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(resolved, checkpoint_dir, output_dir)
 
 
 def stream_near_dup_gate_query(
@@ -1181,17 +1054,12 @@ def stream_near_dup_gate_query(
     document: how many of its LSH_BANDS buckets it owns, and whether
     any bucket is owned by an earlier doc (the near-dup-candidate
     flag).  The summary runs as a BATCH read over the drained sink."""
-    import shutil
-
-    base = _scratch_dir(spark, "stream_gate", sf_dir)
-    shutil.rmtree(base, ignore_errors=True)
-    in_dir, out_dir, ck_dir = f"{base}/in", f"{base}/out", f"{base}/ck"
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
         "doc_id", "text"
     )
-    docs.coalesce(1).write.mode("overwrite").parquet(in_dir)
-    q = stream_near_dup_gate(spark, in_dir, out_dir, ck_dir)
-    q.awaitTermination()
+    out_dir = _drain(
+        spark, "stream_gate", sf_dir, stream_near_dup_gate, [docs]
+    )
     return (
         spark.read.parquet(out_dir)
         .groupBy("doc_id")
@@ -1219,14 +1087,42 @@ QSKETCH_B = 64  # 64 buckets x 800 = [0, 51200) covers the event domain;
 #                out-of-domain values clamp into the edge buckets
 
 
+def _qsketch_bucket() -> Column:
+    """The event value's fixed-domain bucket, clamped to [0, QSKETCH_B)."""
+    return F.least(
+        F.greatest(
+            F.expr(
+                f"(cast(round(value * 100) as bigint)"
+                f" - {QSKETCH_LO}) div {QSKETCH_W}"
+            ),
+            F.lit(0),
+        ),
+        F.lit(QSKETCH_B - 1),
+    )
+
+
+def _merged_partials(
+    spark: SparkSession, out_dir: str, keys: str
+) -> list[Row]:
+    """Sum the per-batch partial counts in ``out_dir`` by the key
+    columns ``keys`` (a DDL list).  A stream that never ran a batch
+    leaves no sink dir: no partials."""
+    if not os.path.isdir(out_dir):
+        return []
+    partials = spark.read.schema(f"{keys}, cnt bigint").parquet(out_dir)
+    return (
+        partials.groupBy(*partials.columns[:-1])
+        .agg(F.sum("cnt").alias("cnt"))
+        .collect()
+    )
+
+
 def stream_quantile_sketch(
     spark: SparkSession,
     input_dir: str,
     output_dir: str,
     checkpoint_dir: str,
-    available_now: bool = True,
-    max_files_per_trigger: int | None = None,
-):
+) -> StreamingQuery:
     """Per-micro-batch histogram PARTIALS over an event-file stream —
     the streaming half of relational.histogram_quantile_sketch, and the
     property that makes equi-width sketches production-grade: partial
@@ -1238,33 +1134,10 @@ def stream_quantile_sketch(
     foreachBatch computes the batch's bucket counts (a map-side
     aggregate over the batch) and appends them with the batch id; no
     state store is needed at all — additivity IS the state."""
-    schema = T.StructType(
-        [
-            T.StructField("event_id", T.LongType()),
-            T.StructField("ts", T.TimestampType()),
-            T.StructField("user_id", T.LongType()),
-            T.StructField("event_type", T.StringType()),
-            T.StructField("value", T.DoubleType()),
-        ]
-    )
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    src = reader.parquet(input_dir)
 
     def _sink(batch_df, batch_id: int) -> None:
-        bucket = F.least(
-            F.greatest(
-                F.expr(
-                    f"(cast(round(value * 100) as bigint)"
-                    f" - {QSKETCH_LO}) div {QSKETCH_W}"
-                ),
-                F.lit(0),
-            ),
-            F.lit(QSKETCH_B - 1),
-        )
         (
-            batch_df.select(bucket.alias("b"))
+            batch_df.select(_qsketch_bucket().alias("b"))
             .groupBy("b")
             .agg(F.count("*").alias("cnt"))
             .withColumn("batch_id", F.lit(batch_id).cast("long"))
@@ -1272,13 +1145,7 @@ def stream_quantile_sketch(
             .parquet(output_dir)
         )
 
-    writer = (
-        src.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(_source(spark, input_dir), checkpoint_dir, _sink)
 
 
 def stream_qsketch_query(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1290,28 +1157,12 @@ def stream_qsketch_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     (integer addition is associative), so the DuckDB oracle recomputes
     it from the raw table — value-level check despite the streaming
     path."""
-    import shutil
-
-    base = _scratch_dir(spark, "stream_qsketch", sf_dir)
-    shutil.rmtree(base, ignore_errors=True)
-    in_dir, out_dir, ck_dir = f"{base}/in", f"{base}/out", f"{base}/ck"
-    events = spark.read.parquet(f"{sf_dir}/events.parquet").select(
-        "event_id", "ts", "user_id", "event_type", "value"
+    out_dir = _drain(
+        spark, "stream_qsketch", sf_dir, stream_quantile_sketch,
+        [_events(spark, sf_dir)],
     )
-    events.coalesce(1).write.mode("overwrite").parquet(in_dir)
-    q = stream_quantile_sketch(spark, in_dir, out_dir, ck_dir)
-    q.awaitTermination()
-    try:
-        merged = spark.read.parquet(out_dir)
-    except Exception:  # no partials: empty stream wrote no files
-        return spark.createDataFrame(
-            [], "q_pct int, n bigint, target_rank bigint, est_cents bigint"
-        )
     hist = {
-        r["b"]: r["cnt"]
-        for r in merged.groupBy("b")
-        .agg(F.sum("cnt").alias("cnt"))
-        .collect()
+        r["b"]: r["cnt"] for r in _merged_partials(spark, out_dir, "b bigint")
     }
     n = sum(hist.values())
     rows = []
@@ -1343,9 +1194,7 @@ def stream_tv_drift_by_day(
     input_dir: str,
     output_dir: str,
     checkpoint_dir: str,
-    available_now: bool = True,
-    max_files_per_trigger: int | None = None,
-):
+) -> StreamingQuery:
     """Streaming distribution-drift monitor: per-micro-batch (day,
     bucket) histogram PARTIALS over the event value — keyed by EVENT
     TIME (the day), not by batch, so the merged per-day histograms are
@@ -1354,34 +1203,11 @@ def stream_tv_drift_by_day(
     scores each day's value distribution against the whole-corpus
     reference by total-variation distance — drift in exact integer
     ppm, no logs, no floats."""
-    schema = T.StructType(
-        [
-            T.StructField("event_id", T.LongType()),
-            T.StructField("ts", T.TimestampType()),
-            T.StructField("user_id", T.LongType()),
-            T.StructField("event_type", T.StringType()),
-            T.StructField("value", T.DoubleType()),
-        ]
-    )
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    src = reader.parquet(input_dir)
 
     def _sink(batch_df, batch_id: int) -> None:
-        bucket = F.least(
-            F.greatest(
-                F.expr(
-                    f"(cast(round(value * 100) as bigint)"
-                    f" - {QSKETCH_LO}) div {QSKETCH_W}"
-                ),
-                F.lit(0),
-            ),
-            F.lit(QSKETCH_B - 1),
-        )
         (
             batch_df.select(
-                F.to_date("ts").alias("day"), bucket.alias("b")
+                F.to_date("ts").alias("day"), _qsketch_bucket().alias("b")
             )
             .groupBy("day", "b")
             .agg(F.count("*").alias("cnt"))
@@ -1390,13 +1216,7 @@ def stream_tv_drift_by_day(
             .parquet(output_dir)
         )
 
-    writer = (
-        src.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(_source(spark, input_dir), checkpoint_dir, _sink)
 
 
 def stream_tv_drift_query(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1406,29 +1226,13 @@ def stream_tv_drift_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     TV = (1/2) Σ_b |c_b/n_day − C_b/N| — cross-multiplied to
     |c_b·N − C_b·n_day| over 2·n_day·N, summed exactly in Python big
     ints (the day count is bounded; tiny-stats policy)."""
-    import shutil
-
-    base = _scratch_dir(spark, "stream_tvdrift", sf_dir)
-    shutil.rmtree(base, ignore_errors=True)
-    in_dir, out_dir, ck_dir = f"{base}/in", f"{base}/out", f"{base}/ck"
-    events = spark.read.parquet(f"{sf_dir}/events.parquet").select(
-        "event_id", "ts", "user_id", "event_type", "value"
-    )
-    events.coalesce(1).write.mode("overwrite").parquet(in_dir)
-    q = stream_tv_drift_by_day(spark, in_dir, out_dir, ck_dir)
-    q.awaitTermination()
-    try:
-        merged = spark.read.parquet(out_dir)
-    except Exception:
-        return spark.createDataFrame(
-            [], "day date, n_day bigint, tv_ppm bigint"
-        )
-    rows = (
-        merged.groupBy("day", "b").agg(F.sum("cnt").alias("cnt")).collect()
+    out_dir = _drain(
+        spark, "stream_tvdrift", sf_dir, stream_tv_drift_by_day,
+        [_events(spark, sf_dir)],
     )
     ref: dict[int, int] = {}
     per_day: dict = {}
-    for r in rows:
+    for r in _merged_partials(spark, out_dir, "day date, b bigint"):
         ref[r["b"]] = ref.get(r["b"], 0) + r["cnt"]
         per_day.setdefault(r["day"], {})[r["b"]] = r["cnt"]
     N = sum(ref.values())

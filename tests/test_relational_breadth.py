@@ -4035,6 +4035,18 @@ def test_sprt_null_stream_accepts(spark):
     assert [r["t"] for r in out if r["first_decision"] == 1] == [12]
 
 
+def test_sprt_horizon_guard_raises(spark):
+    """Past SPRT_MAX_DAYS the exact-integer boundaries stop holding
+    (3^wins leaves double exactness, 16*2^t heads for bigint overflow),
+    so a 40-day stream must raise instead of deciding on rounded
+    numbers — wins stay at 20 here, so nothing overflows on its own."""
+    from ocr_spark.operators.relational import sequential_sign_test_df
+
+    wins = [i % 2 == 0 for i in range(40)]
+    with pytest.raises(Exception, match="SPRT_MAX_DAYS = 33"):
+        sequential_sign_test_df(_daily_stream(spark, wins)).collect()
+
+
 def test_sprt_tie_counts_against_treatment(spark):
     """Exact-tie day (equal means) must count as a loss — the strict
     integer cross-comparison, no float epsilon."""

@@ -7,11 +7,13 @@ import glob
 import os
 import shutil
 
+import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
 from ocr_spark.fixtures.corpus import build_corpus
 from ocr_spark.operators.pipeline import extract_documents
+from ocr_spark.streaming import stream
 from ocr_spark.streaming.stream import stream_event_counts, stream_extract
 
 
@@ -24,6 +26,47 @@ def landing(tmp_path):
     pq.write_table(t.slice(0, 10), str(d / "part-0.parquet"))
     pq.write_table(t.slice(10, 10), str(d / "part-1.parquet"))
     return str(d)
+
+
+def _events_by_ts(spark, sf_dir):
+    return (
+        spark.read.parquet(f"{sf_dir}/events.parquet")
+        .select("event_id", "ts", "user_id", "event_type", "value")
+        .orderBy("ts")
+        .toPandas()
+    )
+
+
+def _drain_thirds(spark, operator, tmp_path, tag, sides, split):
+    """Stage each side's time-ordered rows as three files (log-rotation
+    shape), one landing dir per side, and drain them through
+    ``operator(spark, *side_dirs, out, ckpt)``.  ``split``: each third is
+    staged and then drained on the shared checkpoint, so every file
+    lands in its own micro-batch; otherwise all three files land before
+    one drain.  Returns (out, ckpt)."""
+    dirs = [str(tmp_path / f"{tag}_in{j}") for j in range(len(sides))]
+    out, ckpt = str(tmp_path / f"{tag}_out"), str(tmp_path / f"{tag}_ck")
+    for d in dirs:
+        os.makedirs(d)
+    for i in range(3):
+        for d, side in zip(dirs, sides):
+            n = len(side)
+            chunk = side.iloc[i * n // 3 : (i + 1) * n // 3].copy()
+            chunk["ts"] = chunk["ts"].astype("datetime64[us]")
+            pq.write_table(
+                pa.Table.from_pandas(chunk, preserve_index=False),
+                f"{d}/f{i}.parquet",
+            )
+        if split:
+            operator(spark, *dirs, out, ckpt).awaitTermination(600)
+    if not split:
+        operator(spark, *dirs, out, ckpt).awaitTermination(600)
+    return out, ckpt
+
+
+def _n_commits(ckpt):
+    """Micro-batches the streaming checkpoint has committed."""
+    return sum(f.isdigit() for f in os.listdir(f"{ckpt}/commits"))
 
 
 def _canon(df):
@@ -153,37 +196,18 @@ def test_stream_exact_dedup_across_batches(spark, tmp_path):
 def test_stream_window_batch_split_invariance(spark, tmp_path, sf_dir):
     """For a time-ordered file sequence the emitted (closed) window set
     must not depend on micro-batch boundaries: draining 1 file per
-    trigger (watermark advancing file by file) equals draining all files
+    call (watermark advancing file by file) equals draining all files
     in one batch.  This is the determinism claim stream_window_query's
     oracle rests on."""
-    events = (
-        spark.read.parquet(f"{sf_dir}/events.parquet")
-        .select("event_id", "ts", "user_id", "event_type", "value")
-        .orderBy("ts")
-        .toPandas()
-    )
-    import pandas as pd  # noqa: F401
-    import pyarrow as pa
-
-    n = len(events)
+    events = _events_by_ts(spark, sf_dir)
     results = []
-    for tag, per_trigger in (("split", 1), ("onebatch", None)):
-        d = str(tmp_path / f"in_{tag}")
-        os.makedirs(d)
-        # three time-ordered files (log-rotation shape)
-        for i, (lo, hi) in enumerate(
-            [(0, n // 3), (n // 3, 2 * n // 3), (2 * n // 3, n)]
-        ):
-            chunk = events.iloc[lo:hi].copy()
-            chunk["ts"] = chunk["ts"].astype("datetime64[us]")
-            pq.write_table(
-                pa.Table.from_pandas(chunk, preserve_index=False),
-                f"{d}/f{i}.parquet",
-            )
-        out, ckpt = str(tmp_path / f"out_{tag}"), str(tmp_path / f"ck_{tag}")
-        stream_event_counts(
-            spark, d, out, ckpt, max_files_per_trigger=per_trigger
-        ).awaitTermination(600)
+    for split in (True, False):
+        out, ckpt = _drain_thirds(
+            spark, stream_event_counts, tmp_path, f"split{split}", [events],
+            split,
+        )
+        if split:
+            assert _n_commits(ckpt) >= 3
         results.append(
             {
                 (str(r["w_start"]), r["event_type"]): (r["n"], r["total"])
@@ -197,47 +221,24 @@ def test_stream_window_batch_split_invariance(spark, tmp_path, sf_dir):
 
 def test_stream_attribution_batch_split_invariance(spark, tmp_path, sf_dir):
     """The stream-stream interval join must emit the same pair set
-    whether each side drains 1 file per trigger or everything in one
-    batch (watermark 1 h >= the 30-min attribution window, time-ordered
-    files) — the determinism claim stream_attribution_query's oracle
-    rests on."""
+    whether each side's files drain one per call or all in one batch
+    (watermark >= the attribution window, time-ordered files) — the
+    determinism claim stream_attribution_query's oracle rests on."""
     from ocr_spark.streaming.stream import stream_click_attribution
 
-    import pyarrow as pa
-
-    ev = (
-        spark.read.parquet(f"{sf_dir}/events.parquet")
-        .select("event_id", "ts", "user_id", "event_type", "value")
-        .orderBy("ts")
-        .toPandas()
-    )
+    ev = _events_by_ts(spark, sf_dir)
+    sides = [
+        ev[ev["event_type"] == et].reset_index(drop=True)
+        for et in ("click", "purchase")
+    ]
     results = []
-    for tag, per_trigger in (("split", 1), ("onebatch", None)):
-        dirs = {}
-        for et in ("click", "purchase"):
-            d = str(tmp_path / f"{tag}_{et}")
-            os.makedirs(d)
-            side = ev[ev["event_type"] == et].reset_index(drop=True)
-            n = len(side)
-            for i, (lo, hi) in enumerate(
-                [(0, n // 3), (n // 3, 2 * n // 3), (2 * n // 3, n)]
-            ):
-                chunk = side.iloc[lo:hi].copy()
-                chunk["ts"] = chunk["ts"].astype("datetime64[us]")
-                pq.write_table(
-                    pa.Table.from_pandas(chunk, preserve_index=False),
-                    f"{d}/f{i}.parquet",
-                )
-            dirs[et] = d
-        out, ckpt = str(tmp_path / f"out_{tag}"), str(tmp_path / f"ck_{tag}")
-        stream_click_attribution(
-            spark,
-            dirs["click"],
-            dirs["purchase"],
-            out,
-            ckpt,
-            max_files_per_trigger=per_trigger,
-        ).awaitTermination(600)
+    for split in (True, False):
+        out, ckpt = _drain_thirds(
+            spark, stream_click_attribution, tmp_path, f"split{split}",
+            sides, split,
+        )
+        if split:
+            assert _n_commits(ckpt) >= 3
         results.append(
             {
                 (r["click_id"], r["purchase_id"])
@@ -303,9 +304,7 @@ def test_stream_upsert_multi_batch_and_replay(spark, tmp_path):
     ).coalesce(1).write.mode("append").parquet(in_dir)
 
     st, ck = str(tmp_path / "state"), str(tmp_path / "ck")
-    stream_upsert_latest(
-        spark, in_dir, st, ck, max_files_per_trigger=1
-    ).awaitTermination(600)
+    stream_upsert_latest(spark, in_dir, st, ck).awaitTermination(600)
     cur = f"{st}/current"
     got = {r["user_id"]: r for r in spark.read.parquet(cur).collect()}
     assert got[10]["event_id"] == 3 and got[10]["value"] == 9.0
@@ -318,7 +317,7 @@ def test_stream_upsert_multi_batch_and_replay(spark, tmp_path):
         tuple(r) for r in spark.read.parquet(cur).collect()
     )
     stream_upsert_latest(
-        spark, in_dir, st, str(tmp_path / "ck2"), max_files_per_trigger=1
+        spark, in_dir, st, str(tmp_path / "ck2")
     ).awaitTermination(600)
     after = sorted(tuple(r) for r in spark.read.parquet(cur).collect())
     assert before == after
@@ -376,7 +375,7 @@ def test_stream_upsert_crash_recovery(spark, tmp_path):
     assert got[12]["event_id"] == 3
 
 
-def test_watermark_dedup_evicts_state(spark, tmp_path):
+def test_watermark_dedup_evicts_state(spark, tmp_path, monkeypatch):
     """dropDuplicatesWithinWatermark contract: a duplicate arriving while
     the key is still in state is dropped, and once the event-time
     watermark passes the key's expiry (first-seen ts + delay) the key is
@@ -387,6 +386,7 @@ def test_watermark_dedup_evicts_state(spark, tmp_path):
 
     from ocr_spark.streaming.stream import stream_watermark_dedup
 
+    monkeypatch.setattr(stream, "DEDUP_WATERMARK", 10)
     d = str(tmp_path / "ev")
     os.makedirs(d)
     out, ckpt = str(tmp_path / "wout"), str(tmp_path / "wckpt")
@@ -396,7 +396,6 @@ def test_watermark_dedup_evicts_state(spark, tmp_path):
 
     def emit(name, rows):
         import pandas as pd
-        import pyarrow as pa
 
         pdf = pd.DataFrame(
             rows,
@@ -407,25 +406,19 @@ def test_watermark_dedup_evicts_state(spark, tmp_path):
 
     # batch 1: first copy of event 1 -> emitted; watermark ends at t=0-10
     emit("b1", [(1, ts(0), 7, "click", 1.0)])
-    stream_watermark_dedup(
-        spark, d, out, ckpt, watermark="10 seconds"
-    ).awaitTermination(300)
+    stream_watermark_dedup(spark, d, out, ckpt).awaitTermination(300)
     assert spark.read.parquet(out).count() == 1
 
     # batch 2: duplicate at t=100.  Watermark entering the batch is -10,
     # so event 1's state (expiry 0+10) is still live -> duplicate DROPPED.
     # After the batch the watermark advances to 90 -> the key is evicted.
     emit("b2", [(1, ts(100), 7, "click", 1.0)])
-    stream_watermark_dedup(
-        spark, d, out, ckpt, watermark="10 seconds"
-    ).awaitTermination(300)
+    stream_watermark_dedup(spark, d, out, ckpt).awaitTermination(300)
     assert spark.read.parquet(out).count() == 1
 
     # batch 3: duplicate at t=200 arrives AFTER eviction -> re-emitted.
     emit("b3", [(1, ts(200), 7, "click", 1.0)])
-    stream_watermark_dedup(
-        spark, d, out, ckpt, watermark="10 seconds"
-    ).awaitTermination(300)
+    stream_watermark_dedup(spark, d, out, ckpt).awaitTermination(300)
     rows = sorted(
         (r["event_id"], r["ts"]) for r in spark.read.parquet(out).collect()
     )
@@ -468,11 +461,11 @@ def test_stream_topk_merges_across_batches_and_holds_open_window(
     )
     b1["ts"] = b1["ts"].astype("datetime64[us]")
     b2["ts"] = b2["ts"].astype("datetime64[us]")
-    pq.write_table(pa.Table.from_pandas(b1), f"{d}/b1.parquet")
-    pq.write_table(pa.Table.from_pandas(b2), f"{d}/b2.parquet")
-    stream_topk_trending(
-        spark, d, out, ckpt, max_files_per_trigger=1
-    ).awaitTermination(300)
+    # one drain per landed file on the shared checkpoint: two batches
+    for name, b in (("b1", b1), ("b2", b2)):
+        pq.write_table(pa.Table.from_pandas(b), f"{d}/{name}.parquet")
+        stream_topk_trending(spark, d, out, ckpt).awaitTermination(300)
+    assert _n_commits(ckpt) >= 2
 
     rows = sorted(
         spark.read.parquet(out).collect(), key=lambda r: (r["ws"], r["rnk"])
@@ -579,40 +572,22 @@ def test_stream_near_dup_gate_owner_survives_restart(spark, tmp_path):
 
 def test_stream_qsketch_batch_split_invariance(spark, tmp_path, sf_dir):
     """The merged sketch must be IDENTICAL whether the stream drains one
-    file per trigger or everything in one batch — additivity of the
+    file per call or everything in one batch — additivity of the
     bucket partials is the whole design — and must equal the batch
     histogram computed directly from the table."""
-    import pyarrow as pa
     from pyspark.sql import functions as F
 
     from ocr_spark.streaming.stream import (
         QSKETCH_B, QSKETCH_LO, QSKETCH_W, stream_quantile_sketch,
     )
 
-    events = (
-        spark.read.parquet(f"{sf_dir}/events.parquet")
-        .select("event_id", "ts", "user_id", "event_type", "value")
-        .orderBy("ts")
-        .toPandas()
-    )
-    n = len(events)
+    events = _events_by_ts(spark, sf_dir)
     merged = []
-    for tag, per_trigger in (("split", 1), ("onebatch", None)):
-        d = str(tmp_path / f"in_{tag}")
-        os.makedirs(d)
-        for i, (lo, hi) in enumerate(
-            [(0, n // 3), (n // 3, 2 * n // 3), (2 * n // 3, n)]
-        ):
-            chunk = events.iloc[lo:hi].copy()
-            chunk["ts"] = chunk["ts"].astype("datetime64[us]")
-            pq.write_table(
-                pa.Table.from_pandas(chunk, preserve_index=False),
-                f"{d}/f{i}.parquet",
-            )
-        out, ckpt = str(tmp_path / f"o_{tag}"), str(tmp_path / f"c_{tag}")
-        stream_quantile_sketch(
-            spark, d, out, ckpt, max_files_per_trigger=per_trigger
-        ).awaitTermination(600)
+    for split in (True, False):
+        out, ckpt = _drain_thirds(
+            spark, stream_quantile_sketch, tmp_path, f"split{split}",
+            [events], split,
+        )
         sink = spark.read.parquet(out)
         merged.append(
             {
@@ -622,8 +597,9 @@ def test_stream_qsketch_batch_split_invariance(spark, tmp_path, sf_dir):
                 .collect()
             }
         )
-        if per_trigger == 1:
+        if split:
             # the split really produced multiple independent partials
+            assert _n_commits(ckpt) >= 3
             assert sink.select("batch_id").distinct().count() >= 3
     split, onebatch = merged
     assert split == onebatch
@@ -634,6 +610,29 @@ def test_stream_qsketch_batch_split_invariance(spark, tmp_path, sf_dir):
     b = ((cents - QSKETCH_LO) // QSKETCH_W).clip(0, QSKETCH_B - 1)
     direct = b.value_counts().to_dict()
     assert split == {int(k): int(v) for k, v in direct.items()}
+
+
+def test_stream_partials_empty_events(spark, tmp_path):
+    """An empty events table drains to zero rows with the board schema
+    through both partial-merging wrappers."""
+    from ocr_spark.streaming.stream import (
+        stream_qsketch_query,
+        stream_tv_drift_query,
+    )
+
+    d = str(tmp_path / "empty")
+    spark.createDataFrame(
+        [], "event_id long, ts timestamp, user_id long, event_type string, "
+        "value double"
+    ).coalesce(1).write.parquet(f"{d}/events.parquet")
+    for wrapper, ddl in (
+        (stream_qsketch_query,
+         "q_pct int, n bigint, target_rank bigint, est_cents bigint"),
+        (stream_tv_drift_query, "day date, n_day bigint, tv_ppm bigint"),
+    ):
+        got = wrapper(spark, d)
+        assert got.collect() == []
+        assert got.schema == spark.createDataFrame([], ddl).schema
 
 
 def test_stream_tv_drift_two_day_shift(spark, tmp_path):
