@@ -32,6 +32,9 @@ from ocr_spark.operators import (
 from ocr_spark.operators.fields import (
     invoice_field_extract,
     invoice_fill_rates,
+    invoice_ref,
+    invoice_stress_extract,
+    save_crop_sink,
 )
 from ocr_spark.operators.pipeline import extract_documents
 from ocr_spark.streaming import stream
@@ -151,12 +154,6 @@ def entry(spark: SparkSession) -> DataFrame:
     return extract_documents(df)
 
 
-def _q_invoice_stress(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ocr_spark.operators.fields import invoice_stress_extract
-
-    return invoice_stress_extract(spark, sf_dir)
-
-
 def _q_ocr(spark: SparkSession, sf_dir: str) -> DataFrame:
     n = _corpus_docs_for(sf_dir)
     df = spark.read.parquet(_corpus_path(n)).select("doc_id", "spans")
@@ -169,7 +166,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "ocr_extract_exploded": _q_ocr,
         # -- detector-chain field extraction (rows-only + pytest gate) --
         "invoice_field_extract": invoice_field_extract,
-        "invoice_stress_extract": _q_invoice_stress,
+        "invoice_stress_extract": invoice_stress_extract,
         "invoice_fill_rates": invoice_fill_rates,
         # -- save-crop debug sink (label routing vs layout ground truth) --
         "save_crops": _save_crops_query,
@@ -1290,23 +1287,9 @@ def _save_crops_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     1/40 sample).  Output is the label-routing projection (crop bytes
     stay out: the oracle checks WHICH regions were cropped under WHICH
     labels, the pytest gate checks pixel content)."""
-    from pyspark.sql import functions as F
-
-    from ocr_spark.operators.fields import save_crop_sink
-
     cust = spark.read.parquet(f"{sf_dir}/customer.parquet")
     k = F.col("c_custkey")
-    fam = (
-        F.when(k % 4 == 0, F.lit("vat"))
-        .when(k % 4 == 1, F.lit("stock_v1"))
-        .when(k % 4 == 2, F.lit("stock_v2"))
-        .otherwise(F.lit("bill"))
-    )
-    refs = cust.filter(k % 40 == 0).select(
-        F.concat(F.lit("inv://c"), k.cast("string"), F.lit("#"), fam).alias(
-            "media_ref"
-        )
-    )
+    refs = cust.filter(k % 40 == 0).select(invoice_ref(k).alias("media_ref"))
     # label ROUTING is the oracle surface; crop extents stay out of it
     # (deskew resampling can erode an ink bbox by a pixel on skewed
     # pages) — pixel content and extents are pytest-gated instead

@@ -24,7 +24,12 @@ from __future__ import annotations
 
 import numpy as np
 
-from ..fixtures.invoice import FAMILY_FIELDS
+from ..fixtures.invoice import (
+    FAMILY_FIELDS,
+    is_multi,
+    render_invoice,
+    render_multi,
+)
 from . import detect
 
 # result `type` discriminator (reference response envelope, api.py:50-64 /
@@ -157,18 +162,34 @@ def deskew_sheet(img: np.ndarray) -> np.ndarray:
     return rotate_image(img, float(best_angle)) if best_angle else img
 
 
-def extract_fields_regions(img: np.ndarray) -> list[dict[str, str]]:
-    """Multi-invoice page -> one raw-field record per detected region
+def sheet_regions(img: np.ndarray) -> list[np.ndarray]:
+    """Batch-scanned sheet -> its invoice-region crops, top-to-bottom
     (the 1 page -> N document rows explode of the legacy whole-page
     route, obj_det/v1/detect.py:150-156).  The sheet is deskewed FIRST
-    (see deskew_sheet), then each crop runs the full single-document
-    chain — angle pass, detection, recognition, gate dispatch — exactly
-    as an uploaded single invoice would."""
+    (see deskew_sheet), then cut at detect_invoice_regions' boxes."""
     img = deskew_sheet(img)
     return [
-        extract_fields(np.ascontiguousarray(img[y0:y1, x0:x1]))
+        np.ascontiguousarray(img[y0:y1, x0:x1])
         for x0, y0, x1, y1 in detect_invoice_regions(img)
     ]
+
+
+def region_images(ref: str) -> list[np.ndarray]:
+    """Invoice media ref -> the document images its records come from:
+    a ``#multi`` sheet's region crops (sheet_regions), or a single
+    invoice's page.  The one region path of the field kernel and the
+    save-crop sink."""
+    if is_multi(ref):
+        return sheet_regions(render_multi(ref)[0])
+    return [render_invoice(ref).image]
+
+
+def extract_fields_regions(img: np.ndarray) -> list[dict[str, str]]:
+    """Multi-invoice page -> one raw-field record per detected region;
+    each crop runs the full single-document chain — angle pass,
+    detection, recognition, gate dispatch — exactly as an uploaded
+    single invoice would."""
+    return [extract_fields(r) for r in sheet_regions(img)]
 
 
 def _page_gray(img: np.ndarray, state) -> np.ndarray:

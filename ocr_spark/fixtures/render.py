@@ -37,17 +37,15 @@ from dataclasses import dataclass, field
 
 import numpy as np
 
-import os
-
 from . import glyphs
 from .glyphs import ADVANCE, GLYPH_H
 
-_SKEW_PROB = float(os.environ.get("OCR_SPARK_SKEW_PROB", "0.08"))
+_SKEW_PROB = 0.08
 # One line per affected page is stamped upside-down (mixed-orientation
 # stressor; the per-line 180-degree classifier must rescue it).  Drawn from
 # a SPAWNED child generator so pre-existing fixture layouts/texts are
 # byte-identical — only the ink of the chosen line changes.
-_FLIP_PROB = float(os.environ.get("OCR_SPARK_FLIP_PROB", "0.06"))
+_FLIP_PROB = 0.06
 
 # Canonical token vocabulary: the value shapes the reference's normalizer
 # library consumes (amounts util/tool.py:109-169, dates :271-301, pages
@@ -276,8 +274,7 @@ def _rasterize(
     pad = 0
     # n_rows >= 4: the projection-profile skew estimate needs several text
     # lines to discriminate integer angles (a 1-2 row crop is ambiguous —
-    # as for any real deskewer).  _SKEW_PROB is an experiment knob only
-    # (perf A/B); the default 0.08 is the fixture contract.
+    # as for any real deskewer).
     if scale >= 2 and n_rows >= 4 and rng.random() < _SKEW_PROB:
         from ..core.geometry import rotate_scatter
 

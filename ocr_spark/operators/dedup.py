@@ -622,16 +622,12 @@ SUBSTR_W = 40  # window length in chars
 SUBSTR_STRIDE = 10  # window stride
 
 
-def duplicate_substring_spans(
-    spark: SparkSession,
-    sf_dir: str,
-    w: int = SUBSTR_W,
-    stride: int = SUBSTR_STRIDE,
-) -> DataFrame:
+def duplicate_substring_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cross-document EXACT substring duplication via strided window
     hashing — the scalable stand-in for the suffix-array substring dedup
     of Lee et al., "Deduplicating Training Data Makes Language Models
-    Better" (ACL 2022): any substring shared by two documents with
+    Better" (ACL 2022): with w = SUBSTR_W and stride = SUBSTR_STRIDE,
+    any substring shared by two documents with
     length ≥ w + stride − 1 contains at least one aligned strided
     window in each, so it is detected exactly; shorter overlaps may be
     missed (stride trades index size for the minimum detectable length,
@@ -646,38 +642,15 @@ def duplicate_substring_spans(
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
         "doc_id", "text"
     )
-    return duplicate_substring_spans_df(docs, w, stride)
+    return duplicate_substring_spans_df(docs)
 
 
-def duplicate_substring_spans_df(
-    docs: DataFrame, w: int = SUBSTR_W, stride: int = SUBSTR_STRIDE
-) -> DataFrame:
+def duplicate_substring_spans_df(docs: DataFrame) -> DataFrame:
     """DataFrame-level core of duplicate_substring_spans (unit-testable
     on crafted corpora)."""
-    wins = docs.filter(F.length("text") >= w).select(
-        "doc_id",
-        F.explode(
-            F.transform(
-                F.sequence(
-                    F.lit(1), F.length("text") - (w - 1), F.lit(stride)
-                ),
-                lambda i: F.struct(
-                    i.alias("pos"),
-                    F.md5(F.substring(F.col("text"), i, F.lit(w))).alias("h"),
-                ),
-            )
-        ).alias("win"),
-    ).select("doc_id", F.col("win.pos").alias("pos"), F.col("win.h").alias("h"))
-    # a hash is cross-doc duplicated iff its min and max doc_id differ —
-    # exact, and cheaper than count(distinct doc_id)
-    dup_hashes = (
-        wins.groupBy("h")
-        .agg(F.min("doc_id").alias("mn"), F.max("doc_id").alias("mx"))
-        .filter(F.col("mn") != F.col("mx"))
-        .select("h")
-    )
+    w, stride = SUBSTR_W, SUBSTR_STRIDE
     per_doc = (
-        wins.join(dup_hashes, "h", "left_semi")
+        _dup_window_rows(docs)
         .groupBy("doc_id")
         .agg(
             F.count("*").alias("n_dup_windows"),
@@ -685,18 +658,20 @@ def duplicate_substring_spans_df(
             F.max("pos").alias("last_dup_pos"),
         )
     )
-    totals = wins.groupBy("doc_id").agg(F.count("*").alias("n_windows"))
+    # windows start at 1, 1 + stride, ... <= len - w + 1
+    n_windows = F.when(
+        F.length("text") >= w, F.expr(f"(length(text) - {w}) div {stride} + 1")
+    ).otherwise(0)
     return (
-        docs.select("doc_id")
-        .join(totals, "doc_id", "left")
+        docs.select("doc_id", n_windows.alias("n_windows"))
         .join(per_doc, "doc_id", "left")
         .select(
             "doc_id",
-            F.coalesce("n_windows", F.lit(0)).alias("n_windows"),
+            "n_windows",
             F.coalesce("n_dup_windows", F.lit(0)).alias("n_dup_windows"),
             F.round(
                 F.coalesce("n_dup_windows", F.lit(0))
-                / F.greatest(F.coalesce("n_windows", F.lit(0)), F.lit(1)),
+                / F.greatest("n_windows", F.lit(1)),
                 4,
             ).alias("dup_frac"),
             F.coalesce("first_dup_pos", F.lit(0)).alias("first_dup_pos"),
@@ -1868,13 +1843,12 @@ def dedup_cascade_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _dup_window_rows(
-    docs: DataFrame, w: int = SUBSTR_W, stride: int = SUBSTR_STRIDE
-) -> DataFrame:
+def _dup_window_rows(docs: DataFrame) -> DataFrame:
     """(doc_id, pos) rows for every strided window whose hash occurs in
     MORE than one document — the shared detection core of
     duplicate_substring_spans (see its docstring for the index shape)
     and dedup_span_excision."""
+    w, stride = SUBSTR_W, SUBSTR_STRIDE
     wins = docs.filter(F.length("text") >= w).select(
         "doc_id",
         F.explode(
@@ -1891,6 +1865,8 @@ def _dup_window_rows(
     ).select(
         "doc_id", F.col("win.pos").alias("pos"), F.col("win.h").alias("h")
     )
+    # a hash is cross-doc duplicated iff its min and max doc_id differ —
+    # exact, and cheaper than count(distinct doc_id)
     dup_hashes = (
         wins.groupBy("h")
         .agg(F.min("doc_id").alias("mn"), F.max("doc_id").alias("mx"))
@@ -1900,10 +1876,7 @@ def _dup_window_rows(
     return wins.join(dup_hashes, "h", "left_semi").select("doc_id", "pos")
 
 
-def dedup_span_excision(
-    spark: SparkSession, sf_dir: str, w: int = SUBSTR_W,
-    stride: int = SUBSTR_STRIDE,
-) -> DataFrame:
+def dedup_span_excision(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The EXCISION half of Lee et al.'s "Deduplicating Training Data
     Makes Language Models Better" (ACL'22): duplicate_substring_spans
     finds cross-document duplicated windows; this operator turns them
@@ -1921,10 +1894,10 @@ def dedup_span_excision(
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
         "doc_id", "text"
     )
-    dups = _dup_window_rows(docs, w, stride)
+    dups = _dup_window_rows(docs)
     ww = Window.partitionBy("doc_id").orderBy("pos")
     run = (
-        dups.withColumn("e", F.col("pos") + w)
+        dups.withColumn("e", F.col("pos") + SUBSTR_W)
         .withColumn(
             "prev_max_e",
             F.max("e").over(ww.rowsBetween(Window.unboundedPreceding, -1)),
@@ -2015,7 +1988,12 @@ def suffix_array_ranks(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Output: (sa_rank, doc_id, pos) — the suffix array of the sliced
     corpus, rank 1 = lexicographically smallest suffix; equal suffixes
-    (identical docs) tie-break by (doc_id, pos)."""
+    (identical docs) tie-break by (doc_id, pos).
+
+    Bound: the tie-break packs (doc_id, pos) into one bigint as
+    doc_id * 2^21 + pos, so every document must be shorter than 2^21
+    chars; a longer one raises ValueError.  The DuckDB oracle sorts by
+    (suffix, doc_id, pos) with no pack, so it has no such bound."""
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").filter(
         F.col("doc_id") % SA_SLICE_MOD == 0
     )
@@ -2024,7 +2002,7 @@ def suffix_array_ranks(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def suffix_array_ranks_df(docs: DataFrame) -> DataFrame:
     """DataFrame-level core of suffix_array_ranks (unit-testable on
-    crafted corpora).  Expects (doc_id, text)."""
+    crafted corpora).  Expects (doc_id, text), each text < 2^21 chars."""
     from ocr_spark.operators.relational import bucketed_global_rank
 
     spark = docs.sparkSession
@@ -2033,6 +2011,11 @@ def suffix_array_ranks_df(docs: DataFrame) -> DataFrame:
     maxn = int(head["m"]) if head and head["m"] is not None else 0
     if maxn == 0:
         return spark.createDataFrame([], out_schema)
+    if maxn >= 1 << 21:
+        raise ValueError(
+            f"suffix_array_ranks: a document of {maxn} chars overflows the "
+            "(doc_id, pos) tie-break pack; documents must be < 2^21 chars"
+        )
     # initial rank: the character codepoint — order-identical to the
     # byte order DuckDB's suffix-string sort uses (UTF-8 byte order ==
     # codepoint order)

@@ -6,7 +6,12 @@ pass, detection, recognition, gate dispatch) runs in ONE ``mapInPandas``
 stage emitting *raw* field strings; every normalizer then runs as native
 Spark SQL expressions (functions/normalizers.py) so Catalyst codegen's
 the whole normalization pass JVM-side — the UDF boundary carries only
-small strings, never images.
+small strings, never images.  The plan holds exactly one python stage.
+The base and composite normalizer layers stay two ``Project`` nodes:
+with ``spark.sql.optimizer.collapseProjectAlwaysInline`` at its default
+(false), CollapseProject will not merge a Project whose non-cheap base
+expressions (get_amount is ~50 nodes of regex/HOF work) the composite
+layer references more than once.
 
 Output schema is flat (media_ref, family, type, then the normalized
 fields of both record shapes with reference default fill:
@@ -34,9 +39,9 @@ RAW_FIELDS = [
 ]
 # The two python-kernel normalizers (get_date, get_chinese_amount) are
 # computed INSIDE the extraction kernel rather than as pandas UDFs in the
-# base select: an ArrowEvalPython stage feeding the mapInPandas barrier
-# measured ~10x slower than either python stage alone on this runtime,
-# and the kernel already owns a python batch of exactly these strings.
+# base select: a pandas UDF would add a second python stage (an
+# ArrowEvalPython round trip per batch), and the kernel already owns a
+# python batch of exactly these strings.
 _PY_NORM_FIELDS = ["billing_date", "idate", "total3"]
 _RAW_SCHEMA = (
     "media_ref string, region_idx int, family string, type string, "
@@ -58,18 +63,14 @@ def _extract_raw_batches(
     regions from pixels, each crop runs the same single-document chain,
     and the kernel EXPLODES 1 page row -> N region rows (region_idx
     top-to-bottom).  Single refs stay one row with region_idx 0."""
-    from ocr_spark.core.fields import extract_fields, extract_fields_regions
-    from ocr_spark.fixtures.invoice import is_multi, render_invoice, render_multi
+    from ocr_spark.core.fields import extract_fields, region_images
     from ocr_spark.functions import normalizers_py as pyref
 
     for pdf in batches:
         rows = []
         for ref in pdf["media_ref"]:
-            if is_multi(ref):
-                recs = extract_fields_regions(render_multi(ref)[0])
-            else:
-                recs = [extract_fields(render_invoice(ref).image)]
-            for ridx, d in enumerate(recs):
+            for ridx, img in enumerate(region_images(ref)):
+                d = extract_fields(img)
                 rows.append(
                     [ref, ridx, d["family"], d["type"]]
                     + [d.get(f, "") for f in RAW_FIELDS]
@@ -85,23 +86,6 @@ def _extract_raw_batches(
             + [f"{f}_raw" for f in RAW_FIELDS]
             + [f"{f}_norm" for f in _PY_NORM_FIELDS],
         )
-
-
-def _identity_barrier(df: DataFrame) -> DataFrame:
-    """Arrow pass-through that stops CollapseProject.
-
-    Composite normalizers (tax arithmetic, invoice_type, stock total
-    coalesce) reference base-normalized columns; if both layers live in
-    one Project, Catalyst collapses them and every reference re-inlines
-    the full base expression tree (get_amount alone is ~50 nodes of
-    regex/HOF work, and HOF lambdas defeat common-subexpression
-    elimination) — measured 6x slower and ~30 s of codegen on the fused
-    plan.  A mapInPandas identity is not a Project, so the two layers
-    stay separate; it streams Arrow batches with no materialization, so
-    unlike localCheckpoint it is safe at 10^12-row scale.
-    """
-    schema = df.schema
-    return df.mapInPandas(lambda it: it, schema=schema)
 
 
 def _bs_norm(col):
@@ -146,8 +130,9 @@ def extract_invoice_fields(refs: DataFrame) -> DataFrame:
       idate -> get_date, doc_number/cnt -> get_num, page -> get_page.
 
     Two normalization layers: base per-label normalizers directly over the
-    raw OCR strings, then composite fields over the base columns, with an
-    Arrow identity barrier between them (see _identity_barrier).
+    raw OCR strings, then composite fields over the base columns.  They
+    stay two Projects (see the module docstring), so a composite reference
+    reads the base column instead of re-inlining its expression tree.
     """
     spark = refs.sparkSession
     raw = refs.repartition(_default_partitions(spark)).mapInPandas(
@@ -194,7 +179,6 @@ def extract_invoice_fields(refs: DataFrame) -> DataFrame:
         ),
         *_qr_parse_cols(c("qrcode_raw")),
     )
-    barrier = _identity_barrier(base)
     zero = F.lit("¥ 0.00")
     tot, tot2, tot3 = c("total"), c("total2"), c("total3")
 
@@ -232,7 +216,7 @@ def extract_invoice_fields(refs: DataFrame) -> DataFrame:
         ),
     ).otherwise(c("check_code"))
 
-    return barrier.select(
+    return base.select(
         "media_ref",
         "region_idx",
         "family",
@@ -292,28 +276,13 @@ _CROP_SCHEMA = (
 def _save_crop_batches(
     batches: Iterator[pd.DataFrame],
 ) -> Iterator[pd.DataFrame]:
-    from ocr_spark.core.fields import save_crops
-    from ocr_spark.fixtures.invoice import is_multi, render_invoice, render_multi
+    from ocr_spark.core.fields import region_images, save_crops
 
     for pdf in batches:
         rows = []
         for ref in pdf["media_ref"]:
-            if is_multi(ref):
-                from ocr_spark.core.fields import (
-                    deskew_sheet,
-                    detect_invoice_regions,
-                )
-                import numpy as np
-
-                sheet = deskew_sheet(render_multi(ref)[0])
-                crops_per_region = [
-                    save_crops(np.ascontiguousarray(sheet[y0:y1, x0:x1]))
-                    for x0, y0, x1, y1 in detect_invoice_regions(sheet)
-                ]
-            else:
-                crops_per_region = [save_crops(render_invoice(ref).image)]
-            for ridx, crops in enumerate(crops_per_region):
-                for cidx, c in enumerate(crops):
+            for ridx, img in enumerate(region_images(ref)):
+                for cidx, c in enumerate(save_crops(img)):
                     rows.append(
                         [ref, ridx, cidx, c["label"],
                          c["x"], c["y"], c["w"], c["h"], c["crop"]]
@@ -350,22 +319,24 @@ def save_crop_sink(refs: DataFrame, out_dir: str | None = None) -> DataFrame:
     return df
 
 
-def synth_invoice_refs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic invoice media refs derived from customer keys (one
-    per 10 customers; family round-robins over the four detectors)."""
-    cust = spark.read.parquet(f"{sf_dir}/customer.parquet")
-    k = F.col("c_custkey")
+def invoice_ref(k):
+    """Customer key column -> single-invoice media ref column; the family
+    round-robins over the four detectors."""
     fam = (
         F.when(k % 4 == 0, F.lit("vat"))
         .when(k % 4 == 1, F.lit("stock_v1"))
         .when(k % 4 == 2, F.lit("stock_v2"))
         .otherwise(F.lit("bill"))
     )
-    singles = cust.filter(k % 10 == 0).select(
-        F.concat(F.lit("inv://c"), k.cast("string"), F.lit("#"), fam).alias(
-            "media_ref"
-        )
-    )
+    return F.concat(F.lit("inv://c"), k.cast("string"), F.lit("#"), fam)
+
+
+def synth_invoice_refs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Deterministic invoice media refs derived from customer keys (one
+    per 10 customers, see invoice_ref)."""
+    cust = spark.read.parquet(f"{sf_dir}/customer.parquet")
+    k = F.col("c_custkey")
+    singles = cust.filter(k % 10 == 0).select(invoice_ref(k).alias("media_ref"))
     # batch-scanned multi-invoice sheets (1 page -> N region records; the
     # region count is a fixture-RNG draw the detector must recover)
     multis = cust.filter(k % 100 == 50).select(

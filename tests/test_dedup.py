@@ -9,6 +9,8 @@ same verified LSH pairs.
 
 from __future__ import annotations
 
+import pytest
+
 from ocr_spark.operators.dedup import (
     connected_components,
     lsh_candidates,
@@ -1244,6 +1246,18 @@ def test_exact_substring_spans_merges_long_overlap(spark):
         for r in exact_substring_spans_df(docs).collect()
     }
     assert got == {1: (1, 44), 2: (1, 44), 3: (0, 0)}, got
+
+
+def test_suffix_array_tie_pack_bound_raises(spark):
+    """The (doc_id, pos) tie-break is packed as doc_id * 2^21 + pos, so a
+    document of 2^21 chars must be refused rather than collide."""
+    from ocr_spark.operators.dedup import suffix_array_ranks_df
+
+    long_doc = spark.createDataFrame(
+        [(1, "a" * (1 << 21))], "doc_id long, text string"
+    )
+    with pytest.raises(ValueError, match="2\\^21"):
+        suffix_array_ranks_df(long_doc)
 
 
 def test_exact_substring_spans_empty_and_short(spark):

@@ -130,3 +130,32 @@ def test_worker_daemon_imports_outside_repo_root(tmp_path):
         timeout=600,
     )
     assert "DAEMON_OK" in out.stdout, (out.stdout + out.stderr)[-3000:]
+
+
+def test_environment_reads_only_in_session():
+    """Deployment settings are read from the environment in ONE place,
+    session.py; anywhere else an ``os.environ`` / ``os.getenv`` read is a
+    hidden knob (no caller sets it, yet it silently changes outputs)."""
+    import ast
+    from pathlib import Path
+
+    import ocr_spark
+
+    root = Path(ocr_spark.__file__).parent
+    hits = []
+    for path in sorted(root.rglob("*.py")):
+        if path.name == "session.py" and path.parent == root:
+            continue
+        for node in ast.walk(ast.parse(path.read_text(), str(path))):
+            if (
+                isinstance(node, ast.Attribute)
+                and node.attr in ("environ", "getenv")
+                and isinstance(node.value, ast.Name)
+                and node.value.id == "os"
+            ) or (
+                isinstance(node, ast.ImportFrom)
+                and node.module == "os"
+                and any(a.name in ("environ", "getenv") for a in node.names)
+            ):
+                hits.append(f"{path.relative_to(root)}:{node.lineno}")
+    assert not hits, hits
