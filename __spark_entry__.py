@@ -64,11 +64,7 @@ def _corpus_path(n_docs: int) -> str:
 
 
 def _corpus_docs_for(sf_dir: str) -> int:
-    # scale the synthetic corpus with the driver's sf tier; the scaling
-    # harness overrides via env to reach the compute-bound regime
-    env = os.environ.get("SPARK_GRAFT_CORPUS_DOCS")
-    if env:
-        return int(env)
+    # scale the synthetic corpus with the driver's sf tier
     if "0.001" in sf_dir:
         return 40
     if "0.01" in sf_dir:

@@ -1,23 +1,19 @@
 #!/usr/bin/env python
-"""Headline benchmark for the PySpark OCR-extraction engine.
+"""Board benchmark for the PySpark OCR-extraction engine.
 
-Runs the flagship end-to-end OCR-span extraction plus a representative
-slice of the operator suite at ``$SPARK_GRAFT_SF_DIR`` (default
-``/root/testdata/sf0.1``) on ``local[$SPARK_GRAFT_CPUS]`` (default 32)
-and prints ONE JSON line::
+Times every query of ``__spark_entry__.queries()`` at ``$SPARK_GRAFT_SF_DIR``
+(default ``/root/testdata/sf0.1``) on ``local[$SPARK_GRAFT_CPUS]`` (default
+32) and prints ONE JSON line::
 
     {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
 
-Extra keys beyond the driver contract: ``docs_per_sec`` (the BASELINE.json
-headline metric: documents/sec end-to-end OCR-span extraction) and, when
-``tools/bench_scaling.py`` has produced ``BENCH_SCALING.json``, a
-``scaling`` object with throughput at two parallelism levels and the
-N->4N scaling efficiency.
+``value`` is the suite wall (sum of per-query minima); ``docs_per_sec`` is
+the flagship ``ocr_extract_exploded`` throughput.  A full run at the default
+sf0.1 also writes the per-run record to ``BENCH_RUNS.json``; any other run
+(``--only a,b``, or another sf) writes no file.  Throughput and N->4N
+scaling of the extraction path are measured by ``perfbench/run.py``.
 
-Usage:
-    python bench.py                 # full headline suite
-    python bench.py --only ocr_extract_exploded   # subset (used by the
-                                                  # scaling harness)
+    python bench.py [--only q1,q2]
 """
 
 from __future__ import annotations
@@ -38,9 +34,6 @@ def main() -> int:
     only = None
     if "--only" in sys.argv:
         only = set(sys.argv[sys.argv.index("--only") + 1].split(","))
-    repeat = 1
-    if "--repeat" in sys.argv:
-        repeat = int(sys.argv[sys.argv.index("--repeat") + 1])
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
@@ -59,6 +52,10 @@ def main() -> int:
 
     spark = get_spark(cpus, app_name=f"bench-local[{cpus}]")
     spark.sparkContext.setLogLevel("ERROR")
+
+    # Only a full-board run at the default sf lands as the record: a subset
+    # or a smoke-scale run must never overwrite it or feed the retime.
+    full = only is None and sf == 0.1
 
     # Warm up the JVM + ALL python workers so the first timed query doesn't
     # pay executor/Arrow/worker-fork startup (the reference warms its
@@ -84,209 +81,7 @@ def main() -> int:
     _force(extract_invoice_fields(warm_refs))
 
     qs = entrymod.queries()
-    headline = [
-        "ocr_extract_exploded",
-        "invoice_field_extract",
-        "invoice_stress_extract",
-        "minhash_signatures",
-        "lsh_near_dup",
-        "simhash64",
-        "ann_brute_topk",
-        "ann_ivf_topk",
-        "embedding_near_dup",
-        "token_stats",
-        "quality_score",
-        "repetition_stats",
-        "contamination_check",
-        "near_dup_clusters",
-        "table_det_assign",
-        "ofd_extract",
-        "media_thumbnails",
-        "pricing_summary",
-        "top_orders_per_segment",
-        "sessionize_events",
-        "asof_join_order_events",
-        "rolling_user_value",
-        "percentile_profile",
-        "skew_salted_join",
-        "knn_graph",
-        "lm_perplexity",
-        "url_canonicalize",
-        "span_splice",
-        "shipping_priority",
-        "interval_ship_demand",
-        "paragraph_dedup_rebuild",
-        "ann_ivfpq_topk",
-        "hybrid_rrf_search",
-        "theta_sketch_overlap",
-        # round-4 late additions (BASELINE.md policy: suites grow,
-        # judge compares per-query minima)
-        "semdedup_prune",
-        "bpe_merges",
-        "bpe_tokenize",
-        "audio_features",
-        # round-4 second wave
-        "hits_hubs_authorities",
-        "anchor_text_aggregation",
-        "cocitation_pairs",
-        "kneser_ney_bigram",
-        "encoding_repair",
-        "caption_consistency",
-        "l_diversity_audit",
-        # round-4 third wave
-        "t_closeness_audit",
-        "dp_noisy_counts",
-        "bleu_eval",
-        "hashed_ngram_classify",
-        "bitext_mining",
-        "dedup_sketch_eval",
-        "bpe_fertility",
-        "knn_label_propagation",
-        "doremi_mixture",
-        "weighted_sample_aes",
-        # round-4 fourth wave
-        "gopher_rules",
-        "split_leakage_audit",
-        "lpa_communities",
-        # round-4 fifth wave
-        "corpus_shuffle_shards",
-        "boilerplate_prune",
-        "temperature_sampling_budget",
-        "ann_recall_eval",
-        "video_near_dup",
-        "triangle_count",
-        "zorder_layout",
-        "countmin_heavy_hitters",
-        "phrase_search",
-        "feature_correlation",
-        "hard_negative_mining",
-        "span_corruption_plan",
-        "snapshot_diff",
-        "rouge_l_eval",
-        "chrf_eval",
-        "winnowing_near_dup",
-        "hll_distinct_users",
-        "rake_keywords",
-        "ktruss_edges",
-        "record_linkage_fs",
-        "texttiling_segments",
-        "auc_rank_eval",
-        "cohen_kappa",
-        "good_turing_bigrams",
-        "ndcg_eval",
-        "link_prediction_jaccard",
-        "degree_assortativity",
-        "chi2_feature_selection",
-        "wl_refinement",
-        "rocchio_feedback",
-        # round-4 seventh wave
-        "ks_drift",
-        "flesch_readability",
-        "compaction_plan",
-        # round-4 eighth wave
-        "zipf_fit",
-        "market_share",
-        "late_sole_supplier",
-        "jl_projection",
-        "hyperball_neighborhood",
-        "multi_touch_attribution",
-        "single_source_parts",
-        "market_basket_triples",
-        "policy_lexicon_score",
-        "distinct_ngram_diversity",
-        "caption_mining",
-        "min_cost_supplier",
-        "revenue_concentrated_parts",
-        "customer_order_distribution",
-        "large_volume_orders",
-        "harmonic_centrality",
-        # round-4 ninth wave: TPC-H completion + retrieval-eval family
-        "mrr_eval",
-        "map_eval",
-        "forecast_revenue",
-        "volume_shipping",
-        "product_profit",
-        "returned_items",
-        "shipmode_priority",
-        "promo_revenue_share",
-        "top_supplier_revenue",
-        "parts_supplier_count",
-        "small_qty_revenue",
-        "disjunctive_revenue",
-        "edit_distance_near_dup",
-        "mmr_diversify",
-        "theil_sen_trend",
-        "js_divergence_drift",
-        "isotonic_calibration",
-        "ring_reshard_movement",
-        "effective_diameter",
-        "dedup_canonical_pick",
-        "term_burstiness",
-        "stream_near_dup_gate",
-        "clustering_coefficient",
-        "graph_reciprocity",
-        "lang_id_confusion",
-        "scc_labels",
-        "bowtie_decomposition",
-        "kmeans_coreset",
-        "skipgram_pairs",
-        "seasonal_trend_decompose",
-        "perplexity_bucket_mix",
-        "entropy_rate",
-        "lsh_param_sweep",
-        "graph_modularity",
-        # round-4 tenth wave
-        "soft_dedup_weights",
-        "group_kfold_split",
-        "padding_waste_audit",
-        "audio_near_dup",
-        "geo_cell_pairs",
-        "crawl_frontier",
-        "cross_source_dup_matrix",
-        "session_covisitation",
-        "geo_dbscan",
-        "pca_power_iteration",
-        "histogram_quantile_sketch",
-        "dataset_card",
-        "stream_quantile_sketch",
-        "skew_salt_plan",
-        "dedup_threshold_sweep",
-        "embedding_health_audit",
-        "entity_resolution_clusters",
-        "politeness_schedule",
-        "louvain_two_level",
-        "maxsim_late_interaction_topk",
-        "dedup_cascade_funnel",
-        "dedup_span_excision",
-        "brier_decomposition",
-        "interleaved_pack",
-        "packing_seqlen_sweep",
-        "stream_tv_drift_by_day",
-        "neyman_allocation",
-        "cuped_adjusted_metric",
-        "srm_check",
-        "poisson_bootstrap_ci",
-        "diff_in_differences",
-        "ab_mde_power",
-        "deepwalk_pairs",
-        "adamic_adar_pairs",
-        "label_model_vote",
-        "holt_winters_forecast",
-        "winsorized_mean",
-        "ips_offline_eval",
-        "doubly_robust_eval",
-        "quantile_treatment_effect",
-        "stratified_srm",
-        "metric_sensitivity_ladder",
-        "uncertainty_sample",
-        # round-5 additions
-        "suffix_array_ranks",
-        "sequential_sign_test",
-        "exact_substring_spans",
-        "exact_substring_excision",
-    ]
-    if only:
-        headline = [q for q in headline if q in only]
+    names = [q for q in qs if only is None or q in only]
 
     # Per-query repeats: this VM has documented multi-10-second timing
     # swings (BASELINE.md), so the artifact carries the per-run list —
@@ -304,27 +99,15 @@ def main() -> int:
     # against.
     RETIME_FACTOR = 3.0
     repo_dir = os.path.dirname(os.path.abspath(__file__))
-    history: dict[str, float] = {}
-    for hist_name in ("BENCH_RUNS.json", "BENCH_RUNS_r4_final.json"):
-        hp = os.path.join(repo_dir, hist_name)
-        if os.path.exists(hp):
-            try:
-                with open(hp) as fh:
-                    hq = json.load(fh).get("queries", {})
-            except (json.JSONDecodeError, OSError):
-                continue
-            for k, v in hq.items():
-                if isinstance(v, (int, float)):
-                    history[k] = min(history.get(k, float("inf")), float(v))
+    runs_path = os.path.join(repo_dir, "BENCH_RUNS.json")
 
     timings: dict[str, float] = {}
     query_runs: dict[str, list[float]] = {}
-    n_media_total = 0
-    for name in headline:
+    for name in names:
         # OCR queries are compute-bound and expensive: 2 runs.  The cheap
         # operator queries are dominated by first-run codegen + VM noise:
         # 3 runs.
-        runs = max(repeat, 2 if name.startswith(("ocr_", "invoice_")) else 3)
+        runs = 2 if name.startswith(("ocr_", "invoice_")) else 3
         rts: list[float] = []
         for _ in range(runs):
             t0 = time.time()
@@ -334,10 +117,14 @@ def main() -> int:
         timings[name] = min(rts)
         query_runs[name] = rts
 
-    # Solo re-time pass for steal-phase outliers (history-relative; only
-    # meaningful for full-suite default-sf runs, where history applies).
+    # Solo re-time pass for steal-phase outliers (history-relative, so
+    # full runs only).
     retimed: dict[str, dict] = {}
-    if only is None and sf == 0.1:
+    if full:
+        history: dict[str, float] = {}
+        if os.path.exists(runs_path):
+            with open(runs_path) as fh:
+                history = json.load(fh)["queries"]
         for name in list(timings):
             hist = history.get(name)
             if hist and timings[name] <= RETIME_FACTOR * hist:
@@ -373,39 +160,13 @@ def main() -> int:
         )
         extra["corpus_media_spans"] = int(n_media_total)
 
-    if retimed:
-        # compact evidence on the machine line; full record in the side file
-        extra["retimed"] = sorted(retimed)
-    scaling_path = os.path.join(repo_dir, "BENCH_SCALING.json")
-    if os.path.exists(scaling_path):
-        with open(scaling_path) as fh:
-            s = json.load(fh)
-        # Compact on the machine line; the full record stays in
-        # BENCH_SCALING.json.
-        extra["scaling"] = {
-            k: s[k]
-            for k in (
-                "n_cores",
-                "docs_per_sec_n",
-                "n4_cores",
-                "docs_per_sec_4n",
-                "scaling_efficiency",
-                "pass",
-            )
-            if k in s
-        }
-
     # The driver captures only the TAIL of this process's combined output
     # (~2k chars) and json-parses the last line.  Round 2 lost its bench
     # record because per-run lists pushed the line past that window — so
-    # the machine line stays compact (min-of-N per query only) and the
-    # per-run evidence goes to a side file, BENCH_RUNS.json.  The
-    # headline list has since outgrown even that: ~86 one-per-query
-    # entries are ~2.6 kB of JSON, so the LINE carries only the most
-    # expensive queries (cost-desc, name ties) until it fits, plus the
-    # suite total and the full query count — the COMPLETE per-query
-    # record (all of them, with per-run lists) is always in
-    # BENCH_RUNS*.json next to this file.
+    # the machine line stays compact: it carries only the most expensive
+    # queries (cost-desc, name ties) until it fits, plus the suite total
+    # and the full query count.  A full run's COMPLETE per-query record
+    # (with per-run lists) is in BENCH_RUNS.json next to this file.
     result = {
         "metric": "suite sec (flagship docs/sec: see docs_per_sec)",
         "value": round(sum(timings.values()), 3),
@@ -421,41 +182,28 @@ def main() -> int:
         by_cost = by_cost[: len(by_cost) - 1]
         result["queries"] = {q: timings[q] for q in by_cost}
         result["queries_shown"] = len(by_cost)
-    # Only a FULL-suite run AT THE DEFAULT SF may land as the artifact:
-    # a --only subset or an sf0.001 smoke run overwriting BENCH_RUNS.json
-    # silently breaks the BASELINE.md "quoted from the same recorded
-    # invocation" guarantee (the exact inconsistency the round-2 judge
-    # flagged; an sf0.001 verify run nearly repeated it in round 3).
-    if only is not None:
-        runs_name = "BENCH_RUNS_subset.json"
-    elif sf != 0.1:
-        runs_name = f"BENCH_RUNS_sf{sf}.json" if sf is not None else (
-            "BENCH_RUNS_other.json"
-        )
-    else:
-        runs_name = "BENCH_RUNS.json"
-    runs_path = os.path.join(repo_dir, runs_name)
-    with open(runs_path, "w") as fh:
-        json.dump(
-            {
-                "query_runs": query_runs,
-                "query_spread": {
-                    n: round(max(r) - min(r), 3) for n, r in query_runs.items()
+    if full:
+        with open(runs_path, "w") as fh:
+            json.dump(
+                {
+                    "query_runs": query_runs,
+                    "query_spread": {
+                        n: round(max(r) - min(r), 3) for n, r in query_runs.items()
+                    },
+                    "policy": "headline per query = min of runs (VM timing swings"
+                    " documented in BASELINE.md); spreads here are the noise"
+                    " evidence; queries whose suite min exceeded 3x committed"
+                    " history were auto-re-timed solo (see `retimed`)",
+                    "retimed": retimed,
+                    **result,
+                    # the machine line may truncate `queries` to fit the
+                    # driver tail — the side file always carries ALL of them
+                    "queries": timings,
+                    "queries_shown": len(timings),
                 },
-                "policy": "headline per query = min of runs (VM timing swings"
-                " documented in BASELINE.md); spreads here are the noise"
-                " evidence; queries whose suite min exceeded 3x committed"
-                " history were auto-re-timed solo (see `retimed`)",
-                "retimed": retimed,
-                **result,
-                # the machine line may truncate `queries` to fit the
-                # driver tail — the side file always carries ALL of them
-                "queries": timings,
-                "queries_shown": len(timings),
-            },
-            fh,
-            indent=1,
-        )
+                fh,
+                indent=1,
+            )
     line = json.dumps(result)
     assert len(line) < 1800, f"machine line too long ({len(line)}b) for driver tail"
     print(line)

@@ -1,5 +1,6 @@
 """Driver-contract guard for bench.py: one JSON line with the required
-keys, runnable as a subprocess exactly the way the driver invokes it."""
+keys, runnable as a subprocess exactly the way the driver invokes it, and
+a subset run leaves the repo root untouched."""
 
 from __future__ import annotations
 
@@ -11,7 +12,14 @@ import sys
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
+def _root_files() -> dict[str, int]:
+    return {
+        e.name: e.stat().st_mtime_ns for e in os.scandir(REPO) if e.is_file()
+    }
+
+
 def test_bench_emits_driver_contract_json():
+    before = _root_files()
     env = dict(
         os.environ,
         SPARK_GRAFT_SF_DIR="/root/testdata/sf0.001",
@@ -23,6 +31,9 @@ def test_bench_emits_driver_contract_json():
         env=env, capture_output=True, text=True, cwd=REPO, timeout=420,
     )
     assert out.returncode == 0, out.stderr[-2000:]
+    after = _root_files()
+    touched = sorted(n for n, m in after.items() if before.get(n) != m)
+    assert not touched, f"--only run created or rewrote {touched}"
     json_lines = [ln for ln in out.stdout.splitlines() if ln.startswith("{")]
     assert len(json_lines) == 1, "exactly ONE JSON line required"
     d = json.loads(json_lines[0])
