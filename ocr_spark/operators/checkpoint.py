@@ -12,15 +12,20 @@ Design (driver-orchestrated chunk manifest):
   ``pmod(xxhash64(doc_id), n_chunks)`` — a pure function of the data, so
   every run of the same input produces the same chunks regardless of
   cluster size or input file layout.
-* Each chunk is one Spark job: filter -> extract_documents -> atomic
-  parquet write to ``out/data/chunk=K/`` (written to a temp dir, renamed
-  into place — a crashed task can never leave a half-chunk that looks
-  complete).
-* After a chunk lands, one lineage row (FIXTURES.md §6 schema: run_id,
-  partition_id, doc/media counts, status, timings, throughput) is
-  appended to the ``out/_lineage/`` sidecar. The manifest of completed
-  chunks IS the set of lineage rows with status='done' — a single
-  source of truth for both resume and metrics.
+* A group of up to ``CHUNKS_PER_PASS`` chunks is one Spark job: filter ->
+  extract_documents -> parquet write partitioned by chunk into a temp
+  dir, then each ``chunk=K`` dir is renamed into ``out/data/chunk=K/`` (a
+  crashed task can never leave a half-chunk that looks complete).
+* Each chunk's doc and media counts are observed metrics of that write
+  (``Observation``), not a re-read of what it wrote.
+* After the group's renames, its lineage rows (FIXTURES.md §6 schema:
+  run_id, partition_id, doc/media counts, status, timings, throughput)
+  are appended to the ``out/_lineage/`` sidecar in one write of a
+  driver-built Arrow frame, which runs no Python task. The manifest of
+  completed chunks IS the set of lineage rows with status='done' — a
+  single source of truth for both resume and metrics. A crash between a
+  rename and that append leaves chunks with no ``done`` row; resume
+  recomputes them and replaces their dirs.
 * Resume = re-run with the same ``out`` dir: completed chunks are
   anti-joined away by chunk id (a driver-side set difference — the
   manifest is tiny: n_chunks rows, even at 10^12 docs with 10k chunks)
@@ -40,9 +45,11 @@ import shutil
 import time
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession
+import pyarrow as pa
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from .pipeline import extract_documents
 
@@ -135,11 +142,11 @@ def completed_chunks(spark: SparkSession, out_dir: str) -> set[int]:
     return {r["partition_id"] for r in rows}
 
 
-def _append_lineage(spark: SparkSession, out_dir: str, row: dict) -> None:
-    lineage_dir = os.path.join(out_dir, "_lineage")
-    spark.createDataFrame([row], schema=LINEAGE_SCHEMA).coalesce(1).write.mode(
-        "append"
-    ).parquet(lineage_dir)
+def _lineage_frame(spark: SparkSession, rows: list[dict]) -> DataFrame:
+    """Lineage rows as a frame built from Arrow on the driver: its plan is a
+    ``LocalTableScan``, so writing it runs no Python task."""
+    table = pa.Table.from_pylist(rows, schema=to_arrow_schema(LINEAGE_SCHEMA))
+    return spark.createDataFrame(table)
 
 
 def run_checkpointed(
@@ -177,6 +184,20 @@ def run_checkpointed(
         # the OUTPUT from doc_id (same pure hash) for the partitioned write
         extracted = extract_documents(part)
         result = extracted.withColumn("chunk", _chunk_col(n_chunks))
+        # each chunk's doc and media counts, observed on the write itself
+        counts = Observation()
+        chunk = F.col("chunk")
+        result = result.observe(
+            counts,
+            *[
+                metric
+                for k in group
+                for metric in (
+                    F.count_if(chunk == k).alias(f"docs_{k}"),
+                    F.sum(F.when(chunk == k, F.col("n_media"))).alias(f"media_{k}"),
+                )
+            ],
+        )
 
         # one job for the whole group, atomically landed per chunk:
         # write partitioned by chunk into a tmp dir, then rename each
@@ -186,7 +207,9 @@ def run_checkpointed(
             shutil.rmtree(tmp)
         result.write.mode("overwrite").partitionBy("chunk").parquet(tmp)
         t1 = time.time()
+        observed = counts.get
 
+        rows = []
         for k in group:
             src = os.path.join(tmp, f"chunk={k}")
             final = os.path.join(out_dir, "data", f"chunk={k}")
@@ -196,31 +219,23 @@ def run_checkpointed(
             if os.path.exists(final):
                 shutil.rmtree(final)
             os.rename(src, final)
-            # read with the known schema so an empty chunk dir is 0 rows
-            stats = (
-                spark.read.schema(extracted.schema)
-                .parquet(final)
-                .agg(F.count("*").alias("docs"), F.sum("n_media").alias("media"))
-                .collect()[0]
-            )
-            docs, media = stats["docs"], int(stats["media"] or 0)
-            _append_lineage(
-                spark,
-                out_dir,
+            docs = observed[f"docs_{k}"]
+            rows.append(
                 {
                     "run_id": run_id,
                     "partition_id": k,
                     "doc_count": docs,
-                    "media_count": media,
+                    "media_count": observed[f"media_{k}"] or 0,
                     "status": "done",
                     "started_at": _ts(t0),
                     "finished_at": _ts(t1),
-                    "throughput_docs_per_s": round(
-                        docs / max(t1 - t0, 1e-9), 3
-                    ),
-                },
+                    "throughput_docs_per_s": round(docs / max(t1 - t0, 1e-9), 3),
+                }
             )
-            ran += 1
+        _lineage_frame(spark, rows).coalesce(1).write.mode("append").parquet(
+            os.path.join(out_dir, "_lineage")
+        )
+        ran += len(group)
         shutil.rmtree(tmp, ignore_errors=True)
 
     return {
@@ -236,7 +251,7 @@ def run_checkpointed(
 def _ts(epoch: float):
     import datetime
 
-    return datetime.datetime.fromtimestamp(epoch)
+    return datetime.datetime.fromtimestamp(epoch, datetime.timezone.utc)
 
 
 def read_output(spark: SparkSession, out_dir: str) -> DataFrame:

@@ -17,6 +17,15 @@ from pyspark.sql import SparkSession
 # the *model* micro-batch, applied inside the kernel, not the Arrow batch).
 ARROW_BATCH_ROWS = 256
 
+# The driver heap's ceiling: at 24g on a 16 GB host a full sf0.1 bench.py
+# run grew the driver JVM past 10.8 GB RSS.
+MAX_DRIVER_MEM_GB = 24
+
+
+def default_driver_mem(phys_bytes: int) -> str:
+    """Half of physical memory, in whole GiB, capped at MAX_DRIVER_MEM_GB."""
+    return f"{max(1, min(phys_bytes // 2**31, MAX_DRIVER_MEM_GB))}g"
+
 
 def iceberg_configs(warehouse: str, catalog: str = "ice") -> dict[str, str]:
     """Spark confs registering a hadoop-type Iceberg catalog at ``warehouse``.
@@ -87,6 +96,9 @@ def get_spark(
     # the worker daemon runs `python -m ocr_spark.daemon`, which must
     # import ocr_spark whatever the driver's cwd is
     package_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    driver_mem = os.environ.get("SPARK_DRIVER_MEM") or default_driver_mem(
+        os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    )
 
     builder = (
         SparkSession.builder.master(master)
@@ -100,11 +112,13 @@ def get_spark(
             "spark.sql.execution.arrow.maxRecordsPerBatch", str(ARROW_BATCH_ROWS)
         )
         .config("spark.python.worker.reuse", "true")
-        # per-task worker forks pay full import cost otherwise — see
-        # ocr_spark/daemon.py (preloads numpy/pandas/pyarrow + kernels)
+        # ocr_spark/daemon.py preloads numpy/pandas/pyarrow + kernels and
+        # guards the per-task zip re-read: without it every Python task
+        # pays ~0.28 s in importlib.invalidate_caches() re-reading
+        # pyspark.zip (a 32-task no-op rdd.map at local[1]: 7.2 s -> 1.9 s)
         .config("spark.python.daemon.module", "ocr_spark.daemon")
         .config("spark.executorEnv.PYTHONPATH", package_root)
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "24g"))
+        .config("spark.driver.memory", driver_mem)
         .config("spark.sql.files.maxPartitionBytes", "128m")
         .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
         .config("spark.ui.enabled", "false")

@@ -14,6 +14,8 @@ from pyspark.sql import functions as F
 
 from ocr_spark.fixtures.corpus import build_corpus
 from ocr_spark.operators.checkpoint import (
+    CHUNKS_PER_PASS,
+    _lineage_frame,
     completed_chunks,
     read_lineage,
     read_output,
@@ -125,3 +127,36 @@ def test_empty_chunk_commits_zero_count_row(spark, tmp_path):
     assert len(empty) >= N_CHUNKS * 2 - 2
     assert (empty["media_count"] == 0).all()
     assert int(lineage["doc_count"].sum()) == 2 == read_output(spark, out).count()
+
+
+def test_lineage_frame_runs_no_python_task(spark):
+    """The lineage rows are written from a driver-built Arrow frame: a
+    ``LocalTableScan``, not a Python RDD scan that costs a Python task."""
+    import datetime
+
+    now = datetime.datetime.now(datetime.timezone.utc)
+    row = {
+        "run_id": "r", "partition_id": 0, "doc_count": 1, "media_count": 2,
+        "status": "done", "started_at": now, "finished_at": now,
+        "throughput_docs_per_s": 1.0,
+    }
+    plan = _lineage_frame(spark, [row])._jdf.queryExecution().executedPlan().toString()
+    assert "LocalTableScan" in plan and "ExistingRDD" not in plan, plan
+
+
+def test_one_lineage_file_per_group(spark, corpus_path, tmp_path):
+    """Each group of CHUNKS_PER_PASS chunks appends its lineage rows in
+    one write: one part file per group."""
+    import os
+
+    out = str(tmp_path / "out_groups")
+    df = spark.read.parquet(corpus_path).select("doc_id", "spans")
+    n_chunks = 2 * CHUNKS_PER_PASS
+    run_checkpointed(df, out, n_chunks=n_chunks, run_id="run-g")
+    parts = [
+        f for f in os.listdir(os.path.join(out, "_lineage")) if f.startswith("part-")
+    ]
+    assert len(parts) == 2, parts
+    lineage = read_lineage(spark, out).toPandas()
+    assert sorted(lineage["partition_id"]) == list(range(n_chunks))
+    assert int(lineage["doc_count"].sum()) == N_DOCS

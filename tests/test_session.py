@@ -10,7 +10,7 @@ class when a query touches ``ice.<table>``).
 
 from __future__ import annotations
 
-from ocr_spark.session import get_spark, iceberg_configs
+from ocr_spark.session import default_driver_mem, get_spark, iceberg_configs
 
 
 def test_iceberg_configs_shape():
@@ -159,3 +159,79 @@ def test_environment_reads_only_in_session():
             ):
                 hits.append(f"{path.relative_to(root)}:{node.lineno}")
     assert not hits, hits
+
+
+def test_default_driver_mem_follows_host():
+    """The driver heap defaults to half of physical memory, capped at 24g."""
+    assert default_driver_mem(16 * 2**30) == "8g"
+    assert default_driver_mem(64 * 2**30) == "24g"
+
+
+def test_worker_invalidate_caches_is_cheap(spark):
+    """pyspark runs ``importlib.invalidate_caches()`` at the start of every
+    Python task; unguarded, each call re-reads pyspark.zip once per
+    imported pyspark subpackage (~280 ms).  The worker daemon's zip guard
+    makes it a few stats."""
+
+    def timed(batches):
+        import importlib
+        import time
+
+        for pdf in batches:
+            t = time.perf_counter()
+            importlib.invalidate_caches()
+            yield pdf.assign(ms=(time.perf_counter() - t) * 1e3)
+
+    row = spark.range(1).mapInPandas(timed, "id long, ms double").collect()[0]
+    assert row["ms"] < 20, row
+
+
+def test_zip_guard_rereads_only_changed_archive(tmp_path, monkeypatch):
+    """An unchanged zip is not re-read by ``invalidate_caches``; a zip
+    rewritten with a new module is, and the new module imports."""
+    import importlib
+    import os
+    import sys
+    import zipfile
+    import zipimport
+
+    from ocr_spark import daemon
+
+    archive = str(tmp_path / "guarded.zip")
+    with zipfile.ZipFile(archive, "w") as z:
+        z.writestr("zg_first.py", "VALUE = 1\n")
+
+    reads = []
+    read_directory = zipimport._read_directory
+
+    def counting(path):
+        if path == archive:
+            reads.append(path)
+        return read_directory(path)
+
+    monkeypatch.setattr(zipimport, "_read_directory", counting)
+    monkeypatch.setattr(daemon, "_stamps", {})
+    monkeypatch.setattr(
+        zipimport.zipimporter, "invalidate_caches", daemon._invalidate_if_changed
+    )
+    monkeypatch.syspath_prepend(archive)
+    try:
+        assert importlib.import_module("zg_first").VALUE == 1
+        importlib.invalidate_caches()  # first call: no stamp yet, one read
+        n = len(reads)
+        importlib.invalidate_caches()
+        importlib.invalidate_caches()
+        assert len(reads) == n  # unchanged archive: no re-read
+
+        st = os.stat(archive)
+        with zipfile.ZipFile(archive, "w") as z:
+            z.writestr("zg_first.py", "VALUE = 1\n")
+            z.writestr("zg_second.py", "VALUE = 2\n")
+        os.utime(archive, ns=(st.st_atime_ns, st.st_mtime_ns + 10**9))
+        importlib.invalidate_caches()
+        assert len(reads) == n + 1
+        assert importlib.import_module("zg_second").VALUE == 2
+    finally:
+        for mod in ("zg_first", "zg_second"):
+            sys.modules.pop(mod, None)
+        sys.path_importer_cache.pop(archive, None)
