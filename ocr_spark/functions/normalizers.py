@@ -1,12 +1,16 @@
 """Spark Column expressions for the reference's scalar normalizer library.
 
 Everything here is built from native ``pyspark.sql.functions`` — Catalyst
-codegen's these JVM-side (WholeStageCodegen), so the normalization pass of
-the pipeline costs no Python round-trip (SURVEY.md §4: "normalizers should
-stay native SQL").  The two normalizers whose control flow does not pay to
-express in SQL (``get_chinese_amount``'s stateful scan, and ``get_date``'s
-strict-parse fallback-to-input) are vectorized pandas UDFs over the
-pure-Python kernels in normalizers_py.
+codegen's these JVM-side, so a query that normalizes a string column pays
+no Python round-trip.  These expressions back the ``norm_*`` board
+operators; the invoice-field stage does NOT use them: its kernel already
+holds each region's strings in Python and normalizes them there through
+normalizers_py (operators/fields.py), because building and planning these
+regex trees cost more than the kernel's own normalizing.  The two
+normalizers whose control flow does not pay to express in SQL
+(``get_chinese_amount``'s stateful scan, and ``get_date``'s strict-parse
+fallback-to-input) are vectorized pandas UDFs over the pure-Python kernels
+in normalizers_py.
 
 Contract source: reference util/tool.py + obj_det/vat_detect.py (cited per
 function); string-for-string agreement with normalizers_py is enforced by
@@ -16,7 +20,6 @@ Known deviation (documented): Java's %.2f rounds HALF_UP while Python's
 rounds half-even; amounts with an exact binary .xx5 third decimal can differ
 in the last digit.  Real OCR'd amounts carry at most 2 decimals.
 """
-
 from __future__ import annotations
 
 import pandas as pd
@@ -265,15 +268,3 @@ def reconcile_invoice_number(n1: Column, n2: Column) -> Column:
     )
     return F.when(use2, n2).otherwise(n1)
 
-
-def tax_arithmetic(tax: Column, total: Column, with_tax: Column) -> Column:
-    """obj_det/vat_detect.py:412-421: when OCR found no tax, derive it as
-    total_amount - amount_with_tax from the '¥ x.xx' strings."""
-    def parse(c: Column) -> Column:
-        return F.regexp_extract(c, r"(-?\d+\.?\d*)", 1).try_cast("double")
-
-    derived = F.round(parse(total) - parse(with_tax), 2)
-    return F.when(
-        (tax == "¥ 0.00") & parse(total).isNotNull() & parse(with_tax).isNotNull(),
-        F.format_string("¥ %.2f", derived),
-    ).otherwise(tax)

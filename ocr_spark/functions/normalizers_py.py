@@ -2,14 +2,16 @@
 
 Each function re-states the behavior of one scalar normalizer of the
 reference's expression library (reference file:line cited per function).
-These serve three roles:
+These serve four roles:
 
 1. the spec that tests/test_normalizers.py checks the Spark Column
    expressions against, string-for-string, over adversarial inputs;
-2. the kernels of the pandas UDFs for the two normalizers whose
-   candidate-selection logic is not worth contorting into SQL
-   (get_amount tie-break, get_chinese_amount stateful scan);
-3. executable documentation of every quirk we preserve on purpose
+2. the normalizers of the invoice-field kernel (operators/fields.py),
+   which maps each region's raw OCR strings to its record in Python;
+3. the kernels of the pandas UDFs for the two normalizers whose control
+   flow is not worth contorting into SQL (get_chinese_amount's stateful
+   scan, get_date's fallback-to-input);
+4. executable documentation of every quirk we preserve on purpose
    (lexicographic max in get_check_code, the '0'->'8' OCR fix in
    get_float, bug-compatible length slicing in get_addr_bank).
 
@@ -29,6 +31,7 @@ _RE_TAX = re.compile(r"-?[0-9]\d*[a-zA-Z]*")  # util/tool.py:20
 _RE_FLOAT = re.compile(r"-?[0-9]\d*\.*")  # util/tool.py:23
 _RE_PAGE = re.compile(r"第(.*)页/共(.*)页")  # util/tool.py:24
 _RE_ADDR_BANK = re.compile(r"[0-9\-]*$")  # util/tool.py:22
+_RE_TAX_AMOUNT = re.compile(r"(-?\d+\.?\d*)")  # vat_detect.py:412-421
 
 _RE_AMOUNT_CURRENCY = re.compile(
     r"(?:¥|RMB|CNY)\s*([-+]?\d[\d,]*(?:\.\d+)?)", flags=re.IGNORECASE
@@ -326,3 +329,14 @@ def reconcile_duplicate_fields(
         elif len(num2) > len(num1):
             invoice_number = num2
     return invoice_code, invoice_number
+
+
+def tax_arithmetic(tax: str, total: str, with_tax: str) -> str:
+    """Tax back-fill (vat_detect.py:412-421): when OCR found no tax
+    (``'¥ 0.00'``), derive it as total_amount - amount_with_tax from the
+    '¥ x.xx' strings; an unparseable operand leaves the tax as it is."""
+    m1 = _RE_TAX_AMOUNT.search(total)
+    m2 = _RE_TAX_AMOUNT.search(with_tax)
+    if tax == "¥ 0.00" and m1 and m2:
+        return f"¥ {round(float(m1.group(1)) - float(m2.group(1)), 2):.2f}"
+    return tax

@@ -1,20 +1,18 @@
 """The detector-chain stage as a Spark operator: labeled-document OCR ->
 typed invoice/stock record.
 
-Physical design (SURVEY.md §4): the model-ish work (render/decode, angle
-pass, detection, recognition, gate dispatch) runs in ONE ``mapInPandas``
-stage emitting *raw* field strings; every normalizer then runs as native
-Spark SQL expressions (functions/normalizers.py) so Catalyst codegen's
-the whole normalization pass JVM-side — the UDF boundary carries only
-small strings, never images.  The plan holds exactly one python stage.
-The base and composite normalizer layers stay two ``Project`` nodes:
-with ``spark.sql.optimizer.collapseProjectAlwaysInline`` at its default
-(false), CollapseProject will not merge a Project whose non-cheap base
-expressions (get_amount is ~50 nodes of regex/HOF work) the composite
-layer references more than once.
+Physical design: the model-ish work (render/decode, angle pass,
+detection, recognition, gate dispatch) and every per-field normalizer run
+in ONE ``mapInPandas`` stage that emits the final record.  The kernel
+already holds each region's strings in a Python batch, so it normalizes
+them there (functions/normalizers_py, invoice_record).  The same
+normalizers as native-SQL projections (functions/normalizers) cost more
+than the kernel itself on this stage: thousands of py4j round trips and
+seconds of analysis and planning per call, plus their task time
+(SURVEY.md §4).
 
-Output schema is flat (media_ref, family, type, then the normalized
-fields of both record shapes with reference default fill:
+Output schema is flat (media_ref, region_idx, family, type, then the
+normalized fields of both record shapes with reference default fill:
 vat_detect.py:423-429 ['' / '¥ 0.00'], stock_detect.py:196-204
 [page '-1/-1', total_amount = coalesce(total, total2, total3)]).
 """
@@ -27,99 +25,27 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions import normalizers as N
+from ..functions import normalizers_py as pyref
 from .pipeline import _default_partitions
 
-RAW_FIELDS = [
-    "title", "invoice_code", "invoice_number", "billing_date", "check_code",
-    "total_amount", "tax", "amount_with_tax", "buy_title", "sale_title",
-    "doc_number", "idate", "total", "total2", "total3", "cnt", "page",
-    "buy_tax", "buy_addr", "buy_bank", "sale_tax", "sale_addr", "sale_bank",
-    "qrcode",
+RECORD_FIELDS = [
+    "media_ref", "region_idx", "family", "type", "title", "invoice_code",
+    "invoice_number", "billing_date", "check_code", "total_amount", "tax",
+    "amount_with_tax", "buy_title", "sale_title", "buy_tax", "buy_addr",
+    "buy_bank", "sale_tax", "sale_addr", "sale_bank", "invoice_type",
+    "doc_number", "idate", "total", "total2", "total3",
+    "stock_total_amount", "cnt", "page",
 ]
-# The two python-kernel normalizers (get_date, get_chinese_amount) are
-# computed INSIDE the extraction kernel rather than as pandas UDFs in the
-# base select: a pandas UDF would add a second python stage (an
-# ArrowEvalPython round trip per batch), and the kernel already owns a
-# python batch of exactly these strings.
-_PY_NORM_FIELDS = ["billing_date", "idate", "total3"]
-_RAW_SCHEMA = (
-    "media_ref string, region_idx int, family string, type string, "
-    + ", ".join(f"{f}_raw string" for f in RAW_FIELDS)
-    + ", "
-    + ", ".join(f"{f}_norm string" for f in _PY_NORM_FIELDS)
+_RECORD_SCHEMA = ", ".join(
+    f"{f} int" if f == "region_idx" else f"{f} string" for f in RECORD_FIELDS
 )
+_ZERO = "¥ 0.00"
+# process_buy_sale_field pre-normalization (vat_detect.py:197,209)
+_BS_PUNCT = str.maketrans("：，；", ":,;")
 
 
-def _extract_raw_batches(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    """mapInPandas kernel: media_ref -> family/type + raw field texts (+
-    the python-normalized date/chinese-amount columns, see _PY_NORM_FIELDS).
-    Kernels import once per executor python worker (module singleton).
-
-    ``#multi`` refs take the legacy whole-page route
-    (obj_det/v1/detect.py:71-156): the region detector counts the invoice
-    regions from pixels, each crop runs the same single-document chain,
-    and the kernel EXPLODES 1 page row -> N region rows (region_idx
-    top-to-bottom).  Single refs stay one row with region_idx 0."""
-    from ocr_spark.core.fields import extract_fields, region_images
-    from ocr_spark.functions import normalizers_py as pyref
-
-    for pdf in batches:
-        rows = []
-        for ref in pdf["media_ref"]:
-            for ridx, img in enumerate(region_images(ref)):
-                d = extract_fields(img)
-                rows.append(
-                    [ref, ridx, d["family"], d["type"]]
-                    + [d.get(f, "") for f in RAW_FIELDS]
-                    + [
-                        pyref.get_date(d.get("billing_date", "")),
-                        pyref.get_date(d.get("idate", "")),
-                        pyref.get_chinese_amount(d.get("total3", "")),
-                    ]
-                )
-        yield pd.DataFrame(
-            rows,
-            columns=["media_ref", "region_idx", "family", "type"]
-            + [f"{f}_raw" for f in RAW_FIELDS]
-            + [f"{f}_norm" for f in _PY_NORM_FIELDS],
-        )
-
-
-def _bs_norm(col):
-    """Buy/sale addr/bank pre-normalization (vat_detect.py:197,209):
-    strip, then map full-width ：，； to their ASCII forms."""
-    return F.translate(F.trim(col), "：，；", ":,;")
-
-
-def _qr_parse_cols(raw):
-    """Parsed VAT-QR CSV columns (util/tool.py:321-336 field order).
-    F.get (not getItem) so a missing QR yields nulls instead of an ANSI
-    out-of-bounds error; the nulls are dead when qr_ok is false."""
-    qrp = F.split(raw, ",")
-
-    def part(i):
-        return F.coalesce(F.get(qrp, i), F.lit(""))
-
-    date = part(5)
-    return [
-        F.trim(part(1)).alias("qr_type"),
-        F.trim(part(2)).alias("qr_code"),
-        F.trim(part(3)).alias("qr_number"),
-        N.get_float(part(4)).alias("qr_amount"),
-        F.concat(
-            F.substring(date, 1, 4), F.lit("年"),
-            F.substring(date, 5, 2), F.lit("月"),
-            F.substring(date, 7, 2), F.lit("日"),
-        ).alias("qr_date"),
-        N.get_num(part(6)).alias("qr_check"),
-    ]
-
-
-def extract_invoice_fields(refs: DataFrame) -> DataFrame:
-    """media_ref DataFrame -> normalized record DataFrame.
+def invoice_record(ref: str, region_idx: int, d: dict[str, str]) -> dict:
+    """One region's raw ``extract_fields`` dict -> its normalized record.
 
     Per-label normalization routers, verbatim from the reference:
     * invoice fields (vat_detect.py:372-421): code/number/check -> get_num,
@@ -128,142 +54,129 @@ def extract_invoice_fields(refs: DataFrame) -> DataFrame:
     * stock fields (_process_label_text, stock_detect.py:45-58):
       total3 -> get_chinese_amount, total/total2 -> get_amount,
       idate -> get_date, doc_number/cnt -> get_num, page -> get_page.
-
-    Two normalization layers: base per-label normalizers directly over the
-    raw OCR strings, then composite fields over the base columns.  They
-    stay two Projects (see the module docstring), so a composite reference
-    reads the base column instead of re-inlining its expression tree.
+    Fields the detected family does not define read as ``""``.
     """
-    spark = refs.sparkSession
-    raw = refs.repartition(_default_partitions(spark)).mapInPandas(
-        _extract_raw_batches, schema=_RAW_SCHEMA
-    )
-    c = F.col
-    base = raw.select(
-        "media_ref",
-        "region_idx",
-        "family",
-        "type",
-        N.get_title(c("title_raw")).alias("title"),
-        N.get_num(c("invoice_code_raw")).alias("invoice_code"),
-        N.get_num(c("invoice_number_raw")).alias("invoice_number"),
-        c("billing_date_norm").alias("billing_date"),
-        N.get_num(c("check_code_raw")).alias("check_code"),
-        N.get_amount(c("total_amount_raw")).alias("total_amount"),
-        N.get_amount(c("tax_raw")).alias("tax0"),
-        N.get_amount(c("amount_with_tax_raw")).alias("amount_with_tax"),
-        N.get_title(c("buy_title_raw")).alias("buy_title"),
-        N.get_title(c("sale_title_raw")).alias("sale_title"),
-        N.get_num(c("doc_number_raw")).alias("doc_number"),
-        c("idate_norm").alias("idate"),
-        N.get_amount(c("total_raw")).alias("total"),
-        N.get_amount(c("total2_raw")).alias("total2"),
-        c("total3_norm").alias("total3"),
-        N.get_num(c("cnt_raw")).alias("cnt"),
-        N.get_page(c("page_raw")).alias("page"),
+    def raw(f: str) -> str:
+        return d.get(f, "")
+
+    def bs(f: str) -> str:
+        return raw(f).strip().translate(_BS_PUNCT)
+
+    title = pyref.get_title(raw("title"))
+    invoice_code = pyref.get_num(raw("invoice_code"))
+    invoice_number = pyref.get_num(raw("invoice_number"))
+    billing_date = pyref.get_date(raw("billing_date"))
+    check_code = pyref.get_num(raw("check_code"))
+    invoice_type = pyref.judge_invoice_type(title, check_code)
+    total_amount = pyref.get_amount(raw("total_amount"))
+    amount_with_tax = pyref.get_amount(raw("amount_with_tax"))
+    tax = pyref.get_amount(raw("tax"))
+    qr = raw("qrcode")
+    if d["family"] == "vat" and qr:
+        # QR-present branch (vat_detect.py:341-370; CSV field order of
+        # _vat_qrcode, util/tool.py:321-336): identity fields come from
+        # the payload and only amounts/title fall back to OCR, per type:
+        #   31/32: amount_with_tax from QR, total_amount from OCR
+        #          (fidelity note: the reference sources this from its
+        #          separate 'total' OCR label, vat_detect.py:359; this
+        #          fixture has no distinct 'total' region on digital
+        #          invoices, so the total_amount label stands in for it)
+        #   01/04: total_amount from QR, amount_with_tax from OCR
+        #   else ('10'): total_amount from QR, others '¥ 0.00'
+        #   tax from OCR for 01/04/31/32, else '¥ 0.00' (pre-arithmetic)
+        # A truncated payload reads its missing parts as "".
+        part = qr.split(",")
+        part += [""] * (7 - len(part))
+        invoice_type = part[1].strip()
+        invoice_code = part[2].strip()
+        invoice_number = part[3].strip()
+        qr_amount = pyref.get_float(part[4])
+        date = part[5]
+        billing_date = f"{date[:4]}年{date[4:6]}月{date[6:8]}日"
+        check_code = (
+            pyref.get_num(part[6]) if invoice_type in ("04", "10") else ""
+        )
+        if invoice_type == "32":
+            title = "电子发票（普通发票）"
+        elif invoice_type == "31":
+            title = "电子发票（专用发票）"
+        if invoice_type in ("31", "32"):
+            amount_with_tax = qr_amount
+        elif invoice_type in ("01", "04"):
+            total_amount = qr_amount
+        else:
+            total_amount, amount_with_tax, tax = qr_amount, _ZERO, _ZERO
+    total = pyref.get_amount(raw("total"))
+    total2 = pyref.get_amount(raw("total2"))
+    total3 = pyref.get_chinese_amount(raw("total3"))
+    return {
+        "media_ref": ref,
+        "region_idx": region_idx,
+        "family": d["family"],
+        "type": d["type"],
+        "title": title,
+        "invoice_code": invoice_code,
+        "invoice_number": invoice_number,
+        "billing_date": billing_date,
+        "check_code": check_code,
+        "total_amount": total_amount,
+        "tax": pyref.tax_arithmetic(tax, total_amount, amount_with_tax),
+        "amount_with_tax": amount_with_tax,
+        "buy_title": pyref.get_title(raw("buy_title")),
+        "sale_title": pyref.get_title(raw("sale_title")),
         # complex-range buy/sale routing (process_buy_sale_field,
-        # vat_detect.py:186-214): tax -> get_tax on the stripped text;
-        # addr/bank -> full-width punctuation normalized (：，； -> :,;)
-        # then extract_addr / extract_bank.
-        N.get_tax(F.trim(c("buy_tax_raw"))).alias("buy_tax"),
-        N.extract_addr(_bs_norm(c("buy_addr_raw"))).alias("buy_addr"),
-        N.extract_bank(_bs_norm(c("buy_bank_raw"))).alias("buy_bank"),
-        N.get_tax(F.trim(c("sale_tax_raw"))).alias("sale_tax"),
-        N.extract_addr(_bs_norm(c("sale_addr_raw"))).alias("sale_addr"),
-        N.extract_bank(_bs_norm(c("sale_bank_raw"))).alias("sale_bank"),
-        # QR-present branch inputs (reference vat_detect.py:341-370 +
-        # util/tool.py:321-336 _vat_qrcode): parse the decoded CSV once
-        # here; the composite layer branches on qr_ok.
-        ((c("family") == F.lit("vat")) & (c("qrcode_raw") != "")).alias(
-            "qr_ok"
+        # vat_detect.py:186-214), OCR-routed in both QR branches
+        # (vat_detect.py:361-367): tax -> get_tax on the stripped text;
+        # addr/bank -> full-width punctuation normalized, then
+        # extract_addr / extract_bank.
+        "buy_tax": pyref.get_tax(raw("buy_tax").strip()),
+        "buy_addr": pyref.extract_addr(bs("buy_addr")),
+        "buy_bank": pyref.extract_bank(bs("buy_bank")),
+        "sale_tax": pyref.get_tax(raw("sale_tax").strip()),
+        "sale_addr": pyref.extract_addr(bs("sale_addr")),
+        "sale_bank": pyref.extract_bank(bs("sale_bank")),
+        "invoice_type": invoice_type,
+        "doc_number": pyref.get_num(raw("doc_number")),
+        "idate": pyref.get_date(raw("idate")),
+        "total": total,
+        "total2": total2,
+        "total3": total3,
+        "stock_total_amount": next(
+            (t for t in (total, total2, total3) if t != _ZERO), _ZERO
         ),
-        *_qr_parse_cols(c("qrcode_raw")),
-    )
-    zero = F.lit("¥ 0.00")
-    tot, tot2, tot3 = c("total"), c("total2"), c("total3")
+        "cnt": pyref.get_num(raw("cnt")),
+        "page": pyref.get_page(raw("page")),
+    }
 
-    # -- QR-present branch (vat_detect.py:341-370): when the QR decodes,
-    # identity fields come from the payload and only amounts/title fall
-    # back to OCR, per invoice type:
-    #   31/32: amount_with_tax from QR, total_amount from OCR
-    #          (fidelity note: the reference sources this from its
-    #          separate 'total' OCR label, vat_detect.py:359
-    #          ocr_results_dict.get('total'); this fixture has no
-    #          distinct 'total' region on digital invoices, so the
-    #          total_amount label stands in for it)
-    #   01/04: total_amount from QR, amount_with_tax from OCR
-    #   else ('10'): total_amount from QR, others '¥ 0.00'
-    #   tax from OCR for 01/04/31/32, else '¥ 0.00' (pre-arithmetic)
-    qr_ok = c("qr_ok")
-    t3132 = c("qr_type").isin("31", "32")
-    t0104 = c("qr_type").isin("01", "04")
-    b_total = F.when(
-        qr_ok, F.when(t3132, c("total_amount")).otherwise(c("qr_amount"))
-    ).otherwise(c("total_amount"))
-    b_awt = F.when(
-        qr_ok,
-        F.when(t3132, c("qr_amount"))
-        .when(t0104, c("amount_with_tax"))
-        .otherwise(zero),
-    ).otherwise(c("amount_with_tax"))
-    b_tax0 = F.when(
-        qr_ok, F.when(t3132 | t0104, c("tax0")).otherwise(zero)
-    ).otherwise(c("tax0"))
-    b_check = F.when(
-        qr_ok,
-        F.when(c("qr_type").isin("04", "10"), c("qr_check")).otherwise(
-            F.lit("")
-        ),
-    ).otherwise(c("check_code"))
 
-    return base.select(
-        "media_ref",
-        "region_idx",
-        "family",
-        "type",
-        F.when(qr_ok & (c("qr_type") == "32"), F.lit("电子发票（普通发票）"))
-        .when(qr_ok & (c("qr_type") == "31"), F.lit("电子发票（专用发票）"))
-        .otherwise(c("title"))
-        .alias("title"),
-        F.when(qr_ok, c("qr_code")).otherwise(c("invoice_code")).alias(
-            "invoice_code"
-        ),
-        F.when(qr_ok, c("qr_number")).otherwise(c("invoice_number")).alias(
-            "invoice_number"
-        ),
-        F.when(qr_ok, c("qr_date")).otherwise(c("billing_date")).alias(
-            "billing_date"
-        ),
-        b_check.alias("check_code"),
-        b_total.alias("total_amount"),
-        N.tax_arithmetic(b_tax0, b_total, b_awt).alias("tax"),
-        b_awt.alias("amount_with_tax"),
-        # complex range: buy/sale fields are OCR-routed in BOTH branches
-        # (the QR handler re-processes buy_/sale_ labels from OCR,
-        # vat_detect.py:361-367).
-        "buy_title",
-        "sale_title",
-        "buy_tax",
-        "buy_addr",
-        "buy_bank",
-        "sale_tax",
-        "sale_addr",
-        "sale_bank",
-        F.when(qr_ok, c("qr_type"))
-        .otherwise(N.judge_invoice_type(c("title"), c("check_code")))
-        .alias("invoice_type"),
-        "doc_number",
-        "idate",
-        "total",
-        "total2",
-        "total3",
-        F.when(tot != zero, tot)
-        .when(tot2 != zero, tot2)
-        .when(tot3 != zero, tot3)
-        .otherwise(zero)
-        .alias("stock_total_amount"),
-        "cnt",
-        "page",
+def _extract_record_batches(
+    batches: Iterator[pd.DataFrame],
+) -> Iterator[pd.DataFrame]:
+    """mapInPandas kernel: media_ref -> normalized invoice records.
+    Kernels import once per executor python worker (module singleton).
+
+    ``#multi`` refs take the legacy whole-page route
+    (obj_det/v1/detect.py:71-156): the region detector counts the invoice
+    regions from pixels, each crop runs the same single-document chain,
+    and the kernel EXPLODES 1 page row -> N region rows (region_idx
+    top-to-bottom).  Single refs stay one row with region_idx 0."""
+    from ocr_spark.core.fields import extract_fields, region_images
+
+    for pdf in batches:
+        rows = [
+            invoice_record(ref, ridx, extract_fields(img))
+            for ref in pdf["media_ref"]
+            for ridx, img in enumerate(region_images(ref))
+        ]
+        yield pd.DataFrame(rows, columns=RECORD_FIELDS)
+
+
+def extract_invoice_fields(refs: DataFrame) -> DataFrame:
+    """media_ref DataFrame -> normalized record DataFrame (one row per
+    invoice region; see ``invoice_record`` for the field routing)."""
+    spark = refs.sparkSession
+    return refs.repartition(_default_partitions(spark)).mapInPandas(
+        _extract_record_batches, schema=_RECORD_SCHEMA
     )
 
 

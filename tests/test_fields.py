@@ -158,9 +158,6 @@ def test_qr_branch_overrides_ocr(spark):
     """When a vat document carries a decodable QR, identity fields come
     from the payload even though the OCR'd rows carry DIFFERENT values
     (reference vat_detect.py:341-370 trusts the QR)."""
-    import contextlib
-    import io
-
     from ocr_spark.operators.fields import extract_invoice_fields
 
     refs = [f"inv://q{i}#vat" for i in range(12)]
@@ -170,11 +167,6 @@ def test_qr_branch_overrides_ocr(spark):
 
     df = spark.createDataFrame([(r,) for r in refs], "media_ref string")
     out = extract_invoice_fields(df)
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        out.explain("formatted")
-    assert "qr_ok" in buf.getvalue()  # the branch is in the plan
-
     got = {r["media_ref"]: r.asDict() for r in out.collect()}
     for ref in refs:
         assert got[ref] == _expected_record_local(ref), ref
@@ -191,6 +183,60 @@ def test_qr_branch_overrides_ocr(spark):
     for ref in without_qr:
         gt = ground_truth(ref)
         assert got[ref]["invoice_code"] == pyref.get_num(gt["invoice_code"])
+
+
+_VAT_OCR = {
+    "family": "vat",
+    "type": "vat",
+    "title": "增值税普通发票",
+    "invoice_code": "011002100111",
+    "invoice_number": "00012345",
+    "billing_date": "2024年03月15日",
+    "check_code": "12345 67890",
+    "total_amount": "¥113.00",
+    "tax": "",
+    "amount_with_tax": "¥100.00",
+}
+
+
+@pytest.mark.parametrize(
+    "qrcode, want",
+    [
+        # truncated: type 32, every later part missing
+        ("a,32", {
+            "title": "电子发票（普通发票）", "invoice_type": "32",
+            "invoice_code": "", "invoice_number": "", "billing_date": "年月日",
+            "check_code": "", "total_amount": "¥ 113.00",
+            "amount_with_tax": "¥ 0.00", "tax": "¥ 113.00",
+        }),
+        # only separators: empty type, the '10'/unknown amount route
+        (",", {
+            "title": "增值税普通发票", "invoice_type": "",
+            "invoice_code": "", "invoice_number": "", "billing_date": "年月日",
+            "check_code": "", "total_amount": "¥ 0.00",
+            "amount_with_tax": "¥ 0.00", "tax": "¥ 0.00",
+        }),
+        # non-numeric amount part: the QR total reads as zero
+        ("01,04,1100,0002,abc,20240315,99999", {
+            "title": "增值税普通发票", "invoice_type": "04",
+            "invoice_code": "1100", "invoice_number": "0002",
+            "billing_date": "2024年03月15日", "check_code": "99999",
+            "total_amount": "¥ 0.00", "amount_with_tax": "¥ 100.00",
+            "tax": "¥ -100.00",
+        }),
+    ],
+)
+def test_malformed_qr_payload_record(qrcode, want):
+    """A decoded but malformed QR payload must not raise: missing CSV
+    parts read as "" and an unparseable amount as '¥ 0.00' (the values
+    the SQL split/get/coalesce route produced), with no Spark involved."""
+    from ocr_spark.operators.fields import RECORD_FIELDS, invoice_record
+
+    rec = invoice_record("inv://x#vat", 0, {**_VAT_OCR, "qrcode": qrcode})
+    assert list(rec) == RECORD_FIELDS
+    assert {k: rec[k] for k in want} == want
+    # OCR-routed fields are untouched by the payload
+    assert rec["buy_title"] == "" and rec["page"] == "-1/-1"
 
 
 def test_expected_record_twins_agree():

@@ -204,13 +204,14 @@ def test_spark_check_code_and_invoice_type(spark):
         assert r["out"] == P.judge_invoice_type(r["t"], r["cc"]), r["t"]
 
 
-def test_tax_arithmetic(spark):
-    df = spark.createDataFrame(
-        [("¥ 0.00", "¥ 113.00", "¥ 100.00"), ("¥ 5.00", "¥ 1.00", "¥ 1.00")],
-        ["tax", "total", "with_tax"],
-    )
-    rows = df.select(
-        N.tax_arithmetic(F.col("tax"), F.col("total"), F.col("with_tax")).alias("t")
-    ).collect()
-    assert rows[0]["t"] == "¥ 13.00"
-    assert rows[1]["t"] == "¥ 5.00"
+def test_tax_arithmetic():
+    """vat_detect.py:412-421: tax = total_amount - amount_with_tax only
+    when OCR found none and both operands parse."""
+    ta = P.tax_arithmetic
+    assert ta("¥ 5.00", "¥ 1.00", "¥ 1.00") == "¥ 5.00"  # tax already set
+    assert ta("¥ 0.00", "¥ 113.00", "¥ 100.00") == "¥ 13.00"
+    assert ta("¥ 0.00", "¥ 100.00", "¥ 113.50") == "¥ -13.50"
+    assert ta("¥ 0.00", "¥ 0.00", "¥ 0.00") == "¥ 0.00"
+    # an operand without digits (get_float of a 400-digit run is '¥ inf')
+    assert ta("¥ 0.00", "¥ inf", "¥ 100.00") == "¥ 0.00"
+    assert ta("¥ 0.00", "¥ 113.00", "") == "¥ 0.00"

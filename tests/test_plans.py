@@ -83,21 +83,40 @@ def test_minhash_partial_min_before_shuffle(spark):
     )
 
 
-def test_fields_barrier_prevents_collapse(spark):
-    """One python stage, and the two normalizer layers stay two Projects
-    without a barrier between them: CollapseProject (with
-    collapseProjectAlwaysInline at its default, false) must not inline
-    the base normalizers into every composite reference — that fused
-    plan re-evaluates get_amount's regex/HOF tree per reference."""
+def test_fields_one_python_stage_no_sql_normalizers(spark):
+    """The field kernel emits the final record: one python stage, no
+    pandas-UDF round trip, and none of the native-SQL normalizer
+    expressions (their regex trees cost more to build and plan than the
+    kernel spends normalizing)."""
     from ocr_spark.operators.fields import extract_invoice_fields
 
     refs = spark.createDataFrame([("inv://p0#vat",)], "media_ref string")
     tree = plan_of(extract_invoice_fields(refs), "simple")
-    # the OCR kernel is the only python stage; the python normalizers
-    # (get_date, get_chinese_amount) ride inside it
     assert tree.count("MapInPandas") == 1
     assert tree.count("ArrowEvalPython") == 0
-    assert tree.count("Project [") == 2
+    assert "regexp_extract_all" not in tree
+
+
+def test_fields_plan_build_py4j_round_trips(spark, monkeypatch):
+    """Building the invoice-field DataFrame stays a handful of JVM calls
+    (the normalizers as native-SQL projections take ~8k py4j round
+    trips)."""
+    from py4j.java_gateway import GatewayClient
+
+    from ocr_spark.operators.fields import extract_invoice_fields
+
+    refs = spark.createDataFrame([("inv://p0#vat",)], "media_ref string")
+    calls = []
+    send = GatewayClient.send_command
+
+    def counted(self, *args, **kwargs):
+        calls.append(1)
+        return send(self, *args, **kwargs)
+
+    monkeypatch.setattr(GatewayClient, "send_command", counted)
+    extract_invoice_fields(refs)
+    monkeypatch.undo()
+    assert 0 < len(calls) <= 100, len(calls)
 
 
 def test_round_robin_spreads_heavy_doc(spark):
