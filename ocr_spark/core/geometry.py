@@ -1,10 +1,9 @@
 """Auxiliary geometry operators (SURVEY.md §2.5/2.6), pure numpy.
 
-Contracts mirrored from the reference's apphelper/image.py and
-obj_det/v1/detect.py; each function cites its source.  These are the
-building blocks the detection/recognition kernels use for rotated
-documents; all are deterministic, vectorized, and covered by property
-tests (tests/test_geometry.py).
+Contracts mirrored from the reference's apphelper/image.py; each
+function cites its source.  These are the building blocks the
+detection/recognition kernels use for rotated documents; all are
+deterministic, vectorized, and covered by tests/test_geometry.py.
 """
 
 from __future__ import annotations
@@ -27,50 +26,6 @@ def solve(quad: tuple[float, ...]) -> tuple[float, float, float, float, float]:
         math.atan2(y2 - y1, x2 - x1) + math.atan2(y3 - y4, x3 - x4)
     ) / 2.0
     return angle, w, h, cx, cy
-
-
-def xy_rotate_box(
-    cx: float, cy: float, w: float, h: float, angle: float
-) -> tuple[float, ...]:
-    """(cx,cy,w,h,angle) -> quad, inverse of solve for rectangles.
-    Reference apphelper/image.py:69-96."""
-    ca, sa = math.cos(angle), math.sin(angle)
-
-    def pt(dx: float, dy: float) -> tuple[float, float]:
-        return cx + dx * ca - dy * sa, cy + dx * sa + dy * ca
-
-    p1 = pt(-w / 2, -h / 2)
-    p2 = pt(w / 2, -h / 2)
-    p3 = pt(w / 2, h / 2)
-    p4 = pt(-w / 2, h / 2)
-    return (*p1, *p2, *p3, *p4)
-
-
-def box_rotate(
-    quad: tuple[float, ...], k: int, width: int, height: int
-) -> tuple[float, ...]:
-    """Remap a quad under a whole-image CCW rotation by k*90 degrees
-    (numpy rot90 convention).  width/height are the PRE-rotation image
-    dims.  Reference apphelper/image.py:160-185 (its 90/180/270 cases).
-    """
-    k %= 4
-    pts = [(quad[2 * i], quad[2 * i + 1]) for i in range(4)]
-    for _ in range(k):
-        # CCW 90: (x, y) -> (y, width-1-x); image dims swap
-        pts = [(y, width - 1 - x) for x, y in pts]
-        width, height = height, width
-    return tuple(c for p in pts for c in p)
-
-
-def resize_im(w: int, h: int, scale: int = 416, max_scale: int | None = None):
-    """Target (w, h) scaled so min side ~= scale (capped at max_scale),
-    rounded to 32-multiples.  Reference apphelper/image.py:111-118."""
-    f = float(scale) / min(w, h)
-    if max_scale is not None and f * max(w, h) > max_scale:
-        f = float(max_scale) / max(w, h)
-    nw = int(round(w * f / 32.0)) * 32
-    nh = int(round(h * f / 32.0)) * 32
-    return max(nw, 32), max(nh, 32)
 
 
 def nn_resize(img: np.ndarray, nh: int, nw: int) -> np.ndarray:
@@ -97,18 +52,13 @@ def letterbox_image(
     return canvas
 
 
-def rotate_image(
-    img: np.ndarray,
-    degrees: float,
-    fill: int = 255,
-    center: tuple[float, float] | None = None,
-) -> np.ndarray:
-    """Rotate by ``degrees`` CCW about ``center`` (x, y) — default the
-    image center — via nearest-neighbor inverse mapping on a same-size
-    canvas; the numpy stand-in for the reference's warpAffine/PIL
-    rotations (table_extract.py:414-446, apphelper/image.py:198)."""
+def rotate_image(img: np.ndarray, degrees: float, fill: int = 255) -> np.ndarray:
+    """Rotate by ``degrees`` CCW about the image center via
+    nearest-neighbor inverse mapping on a same-size canvas; the numpy
+    stand-in for the reference's warpAffine/PIL rotations
+    (table_extract.py:414-446, apphelper/image.py:198)."""
     h, w = img.shape[:2]
-    sxi, syi, valid = _rot_maps(h, w, degrees, center)
+    sxi, syi, valid = _rot_maps(h, w, degrees)
     # clip + full gather + where: one contiguous gather instead of two
     # boolean compressions (the deskew fallback runs this on whole pages
     # inside executor workers — memory bandwidth matters at local[32])
@@ -120,16 +70,13 @@ def rotate_image(
 
 
 def _rot_maps(
-    h: int, w: int, degrees: float, center: tuple[float, float] | None
+    h: int, w: int, degrees: float
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     """Rounded source-coordinate maps for rotate_image (int32; float64
     trig so scatter/gather rounding stays bit-identical across dtypes)."""
     rad = math.radians(degrees)
     ca, sa = math.cos(rad), math.sin(rad)
-    if center is None:
-        cy, cx = (h - 1) / 2.0, (w - 1) / 2.0
-    else:
-        cx, cy = float(center[0]), float(center[1])
+    cy, cx = (h - 1) / 2.0, (w - 1) / 2.0
     xs = np.arange(w, dtype=np.float64) - cx
     ys = np.arange(h, dtype=np.float64) - cy
     sx = xs[None, :] * ca + ys[:, None] * sa + cx
@@ -156,7 +103,7 @@ def rotate_scatter(
     render stressor (fixtures/render.py): a skewed page deskews exactly
     once the fallback ladder recovers ``a``."""
     h, w = img.shape[:2]
-    dxi, dyi, valid = _rot_maps(h, w, degrees, None)
+    dxi, dyi, valid = _rot_maps(h, w, degrees)
     out = np.full_like(img, fill)
     # scatter brightness TIERS dark-to-light so the lightest collider
     # lands last.  The background tier is scattered in one pass and the
@@ -173,23 +120,6 @@ def rotate_scatter(
     bg = valid & (bright == bg_level)
     out[dyi[bg], dxi[bg]] = img[bg]
     return out
-
-
-def rotate_cut_img(
-    img: np.ndarray, quad: tuple[float, ...], pad_x: float = 0.0, pad_y: float = 0.0
-) -> np.ndarray:
-    """Rotate the image so the quad becomes axis-aligned, then crop it
-    (with optional symmetric padding).  Reference apphelper/image.py:
-    188-200: the rotation is about the BOX center (im.rotate(...,
-    center=(cx, cy))), so the quad stays put and the crop window at
-    (cx, cy) remains valid for off-center quads."""
-    angle, w, h, cx, cy = solve(quad)
-    rot = rotate_image(img, math.degrees(angle), center=(cx, cy))
-    x0 = int(max(cx - w / 2 - pad_x, 0))
-    x1 = int(min(cx + w / 2 + pad_x, img.shape[1]))
-    y0 = int(max(cy - h / 2 - pad_y, 0))
-    y1 = int(min(cy + h / 2 + pad_y, img.shape[0]))
-    return rot[y0:y1, x0:x1]
 
 
 def estimate_skew_angle(
@@ -211,55 +141,3 @@ def estimate_skew_angle(
         if v > best_var:
             best_var, best_angle = v, float(a)
     return best_angle
-
-
-def red_filter(img: np.ndarray) -> np.ndarray:
-    """Zero out pixels where red is not the dominant channel — the
-    invoice-number red filter, vectorized (the reference iterates
-    per-pixel in Python, obj_det/v1/detect.py:57-68)."""
-    out = img.copy()
-    r = img[..., 0].astype(np.int16)
-    g = img[..., 1].astype(np.int16)
-    b = img[..., 2].astype(np.int16)
-    out[(r < g) | (r < b)] = 0
-    return out
-
-
-# Reference region-crop padding (obj_det/vat_detect.py:291): every
-# detected label box is padded 5px vertically and 12px horizontally
-# before the OCR crop; the invoice_number region is widened a further
-# 48px to the right when its companion regions are missing
-# (vat_detect.py:313-314).
-PAD_Y = 5
-PAD_X = 12
-INVOICE_NUMBER_WIDEN = 48
-
-
-def pad_box(
-    x1: int, y1: int, x2: int, y2: int,
-    width: int | None = None, height: int | None = None,
-) -> tuple[int, int, int, int]:
-    """Reference crop padding [y1-5, y2+5, x1-12, x2+12] as (x1, y1, x2,
-    y2), optionally clipped to the image bounds (the reference relies on
-    numpy slice clamping; explicit bounds make the contract testable)."""
-    nx1, ny1 = x1 - PAD_X, y1 - PAD_Y
-    nx2, ny2 = x2 + PAD_X, y2 + PAD_Y
-    if width is not None:
-        nx1, nx2 = max(nx1, 0), min(nx2, width)
-    if height is not None:
-        ny1, ny2 = max(ny1, 0), min(ny2, height)
-    return nx1, ny1, nx2, ny2
-
-
-def widen_invoice_number(
-    boxes: dict[str, list[int]],
-) -> dict[str, list[int]]:
-    """vat_detect.py:313-314: when invoice_number was detected without an
-    invoice_code or second-number region, widen its crop 48px to the
-    right (the number often extends past the detected box on single-code
-    layouts).  Boxes are [y1, y2, x1, x2] lists, mutated reference-style."""
-    if "invoice_number" in boxes and (
-        "invoice_code" not in boxes or "invoice_number2" not in boxes
-    ):
-        boxes["invoice_number"][3] += INVOICE_NUMBER_WIDEN
-    return boxes

@@ -6,9 +6,9 @@ These are the reference's QR-rectification experiment utilities
 
 * ``gamma_trans``        — util/img.py:16-21 (cv2.LUT over the
                            normalized power table)
-* ``morph_open/close``   — test_paddle.py:25-27 (cv2.morphologyEx
-                           MORPH_OPEN then MORPH_CLOSE) and the 3x3
-                           erode/dilate pair at util/img.py:238-239
+* ``morph_open``         — test_paddle.py:26 (cv2.morphologyEx
+                           MORPH_OPEN) and the 3x3 erode/dilate pair
+                           at util/img.py:238-239
 * ``order_points`` /
   ``four_point_transform`` — test_paddle.py:53-97 (corner ordering by
                            coordinate sum/diff, gap-expanded corners,
@@ -62,12 +62,6 @@ def morph_open(mask: np.ndarray, k: int = 3) -> np.ndarray:
     """Opening = erode then dilate (test_paddle.py:26): removes specks
     smaller than the kernel, preserves larger shapes."""
     return binary_dilate(binary_erode(mask, k), k)
-
-
-def morph_close(mask: np.ndarray, k: int = 3) -> np.ndarray:
-    """Closing = dilate then erode (test_paddle.py:27): fills holes
-    smaller than the kernel."""
-    return binary_erode(binary_dilate(mask, k), k)
 
 
 def order_points(pts: np.ndarray) -> np.ndarray:

@@ -6,9 +6,12 @@ it forks any of them:
 
 * **Preload.**  numpy/pandas/pyarrow, ``pyspark.worker`` and the kernel
   modules are imported here, so a freshly forked worker inherits them
-  copy-on-write instead of importing them on its first task.  The kernel
-  imports are best-effort: if ocr_spark is not importable in the daemon's
-  environment, workers import it lazily.
+  copy-on-write instead of importing them on its first task.  The
+  preload is best-effort so that a module failing to import does not
+  kill the daemon and with it every task: the error surfaces, with its
+  traceback, in the task that needs the module.  ocr_spark itself must
+  be importable, since the daemon is ``ocr_spark.daemon``;
+  ``spark.executorEnv.PYTHONPATH`` names the directory or zip holding it.
 * **Zip guard.**  pyspark's ``setup_spark_files`` calls
   ``importlib.invalidate_caches()`` at the start of every task.  On
   Python 3.11 ``zipimporter.invalidate_caches`` re-reads the archive's
@@ -22,7 +25,7 @@ it forks any of them:
   (gh-103200).
 
 Enabled via ``spark.python.daemon.module = ocr_spark.daemon``
-(ocr_spark/session.py).
+(``engine_configs`` in ocr_spark/session.py).
 """
 
 import importlib

@@ -310,27 +310,6 @@ def judge_invoice_type(title: str, check_code: str = "") -> str:
     return invoice_type
 
 
-def reconcile_duplicate_fields(
-    code1: str, code2: str, num1: str, num2: str
-) -> tuple[str, str]:
-    """Duplicate-detection reconciliation (vat_detect.py:110-130): prefer
-    the 12-length invoice_code / 8-length invoice_number, else the longer."""
-    invoice_code = code1
-    if code1 != code2 and (
-        (len(code1) != 12 and len(code2) == 12) or len(code1) < len(code2)
-    ):
-        invoice_code = code2
-    invoice_number = num1
-    if num1 != num2:
-        if len(num1) == 8:
-            invoice_number = num1
-        elif len(num2) == 8:
-            invoice_number = num2
-        elif len(num2) > len(num1):
-            invoice_number = num2
-    return invoice_code, invoice_number
-
-
 def tax_arithmetic(tax: str, total: str, with_tax: str) -> str:
     """Tax back-fill (vat_detect.py:412-421): when OCR found no tax
     (``'¥ 0.00'``), derive it as total_amount - amount_with_tax from the

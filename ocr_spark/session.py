@@ -66,12 +66,56 @@ def iceberg_runtime_available() -> bool:
         return False
 
 
+def engine_configs() -> dict[str, str]:
+    """Spark confs that make this engine what it is, for every session.
+
+    ``get_spark`` adds them to a local session; ``tools/run_extract.py``
+    adds the ones its spark-submit command did not set.  None of them
+    names a master, a heap or a core count."""
+    # the directory holding the ocr_spark package, or the --py-files zip
+    # when the package was imported from one: the worker daemon runs
+    # `python -m ocr_spark.daemon`, which must import ocr_spark whatever
+    # the driver's cwd is
+    package_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    return {
+        "spark.sql.adaptive.enabled": "true",
+        "spark.sql.adaptive.coalescePartitions.enabled": "true",
+        "spark.sql.adaptive.skewJoin.enabled": "true",
+        "spark.sql.execution.arrow.pyspark.enabled": "true",
+        "spark.sql.execution.arrow.maxRecordsPerBatch": str(ARROW_BATCH_ROWS),
+        "spark.python.worker.reuse": "true",
+        # ocr_spark/daemon.py preloads numpy/pandas/pyarrow + kernels and
+        # guards the per-task zip re-read: without it every Python task
+        # pays ~0.28 s in importlib.invalidate_caches() re-reading
+        # pyspark.zip (a 32-task no-op rdd.map at local[1]: 7.2 s -> 1.9 s)
+        "spark.python.daemon.module": "ocr_spark.daemon",
+        "spark.executorEnv.PYTHONPATH": package_root,
+        "spark.sql.files.maxPartitionBytes": "128m",
+        "spark.serializer": "org.apache.spark.serializer.KryoSerializer",
+        # one BLAS thread per Python worker: the recognition kernel's
+        # matmul otherwise spawns ncpu OpenBLAS threads in EVERY worker
+        # (ncpu^2 threads at local[ncpu] -- measured 4x slowdown at
+        # local[32]); the executor env reaches the daemon before it
+        # preloads numpy, and leaves the driver's environment alone
+        **{
+            f"spark.executorEnv.{var}": "1"
+            for var in (
+                "OMP_NUM_THREADS",
+                "OPENBLAS_NUM_THREADS",
+                "MKL_NUM_THREADS",
+                "VECLIB_MAXIMUM_THREADS",
+                "NUMEXPR_NUM_THREADS",
+            )
+        },
+    }
+
+
 def get_spark(
     cores: int | str | None = None,
     app_name: str = "ocr_spark",
     iceberg_warehouse: str | None = None,
 ) -> SparkSession:
-    """Build (or reuse) a SparkSession.
+    """Build (or reuse) a local SparkSession running ``engine_configs()``.
 
     cores: int N -> local[N]; '*' -> local[*]; None -> $SPARK_GRAFT_CPUS or 32.
     Shuffle partitions follow the core count (32 for '*').
@@ -80,61 +124,34 @@ def get_spark(
     requires the iceberg-spark-runtime jar on the cluster — not bundled in
     this sandbox, where tests read the same schemas from plain parquet).
     """
-    # One BLAS thread per python worker: the recognition kernel's matmul
-    # otherwise spawns ncpu OpenBLAS threads in EVERY worker (ncpu^2 threads
-    # at local[ncpu] — measured 4x slowdown at local[32]).  Set before the
-    # JVM launches so daemons/workers inherit it.
-    for var in ("OMP_NUM_THREADS", "OPENBLAS_NUM_THREADS", "MKL_NUM_THREADS",
-                "VECLIB_MAXIMUM_THREADS", "NUMEXPR_NUM_THREADS"):
-        os.environ.setdefault(var, "1")
-
     if cores is None:
         cores = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    master = f"local[{cores}]"
     shuffle_partitions = int(cores) if str(cores).isdigit() else 32
-    # the directory holding the ocr_spark package (or the --py-files zip):
-    # the worker daemon runs `python -m ocr_spark.daemon`, which must
-    # import ocr_spark whatever the driver's cwd is
-    package_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     driver_mem = os.environ.get("SPARK_DRIVER_MEM") or default_driver_mem(
         os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
     )
-
-    builder = (
-        SparkSession.builder.master(master)
-        .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config(
-            "spark.sql.execution.arrow.maxRecordsPerBatch", str(ARROW_BATCH_ROWS)
-        )
-        .config("spark.python.worker.reuse", "true")
-        # ocr_spark/daemon.py preloads numpy/pandas/pyarrow + kernels and
-        # guards the per-task zip re-read: without it every Python task
-        # pays ~0.28 s in importlib.invalidate_caches() re-reading
-        # pyspark.zip (a 32-task no-op rdd.map at local[1]: 7.2 s -> 1.9 s)
-        .config("spark.python.daemon.module", "ocr_spark.daemon")
-        .config("spark.executorEnv.PYTHONPATH", package_root)
-        .config("spark.driver.memory", driver_mem)
-        .config("spark.sql.files.maxPartitionBytes", "128m")
-        .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
-        .config("spark.ui.enabled", "false")
+    confs = {
+        "spark.sql.shuffle.partitions": str(shuffle_partitions),
+        "spark.driver.memory": driver_mem,
+        "spark.ui.enabled": "false",
         # Console progress bars flood the combined output the bench driver
         # tail-captures; the JSON machine line must stay the last thing in
         # that window.
-        .config("spark.ui.showConsoleProgress", "false")
-    )
+        "spark.ui.showConsoleProgress": "false",
+        **engine_configs(),
+    }
     if iceberg_warehouse:
-        for k, v in iceberg_configs(iceberg_warehouse).items():
-            builder = builder.config(k, v)
+        confs.update(iceberg_configs(iceberg_warehouse))
         # opportunistic jar wiring: when the environment provides the
         # runtime jar via $SPARK_GRAFT_ICEBERG_JAR, ship it to the JVM so
         # the catalog path goes LIVE (fresh JVM required — spark.jars and
         # spark.sql.extensions are static confs; see README quickstart)
         jar = os.environ.get("SPARK_GRAFT_ICEBERG_JAR")
         if jar and os.path.exists(jar):
-            builder = builder.config("spark.jars", jar)
-    return builder.getOrCreate()
+            confs["spark.jars"] = jar
+    return (
+        SparkSession.builder.master(f"local[{cores}]")
+        .appName(app_name)
+        .config(map=confs)
+        .getOrCreate()
+    )

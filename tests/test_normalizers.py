@@ -115,10 +115,6 @@ def test_extract_addr_bank_goldens():
     assert P.judge_invoice_type("增值税电子普通发票") == "10"
     assert P.judge_invoice_type("收据", "123") == "04"
     assert P.judge_invoice_type("收据", "") == "01"
-    assert P.reconcile_duplicate_fields("1234567890x", "123456789012", "1", "12345678") == (
-        "123456789012",
-        "12345678",
-    )
 
 
 # ---- Spark expression == python kernel, over adversarial inputs ----

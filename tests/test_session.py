@@ -91,35 +91,53 @@ def test_worker_daemon_imports_outside_repo_root(tmp_path):
     """The worker daemon (``python -m ocr_spark.daemon``) must find
     ocr_spark when the driver runs from a cwd that cannot import it and
     no PYTHONPATH is set: a driver that imports the package through
-    sys.path alone still runs a Python stage."""
+    sys.path alone still runs a Python stage.  Its workers run with one
+    BLAS thread each, and the driver's own environment is left alone."""
     import os
     import subprocess
     import sys
     import textwrap
 
+    blas = (
+        "OMP_NUM_THREADS",
+        "OPENBLAS_NUM_THREADS",
+        "MKL_NUM_THREADS",
+        "VECLIB_MAXIMUM_THREADS",
+        "NUMEXPR_NUM_THREADS",
+    )
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     script = textwrap.dedent(
         f"""
+        import os
         import sys
 
         sys.path.insert(0, {repo!r})
         from ocr_spark.session import get_spark
 
+        BLAS = {blas!r}
         spark = get_spark(cores=1, app_name="daemon-cwd")
+        leaked = [v for v in BLAS if v in os.environ]
+        assert not leaked, leaked
 
-        def plus_one(batches):
+        def probe(batches):
             for pdf in batches:
-                yield pdf.assign(n=pdf["n"] + 1)
+                yield pdf.assign(
+                    n=pdf["n"] + 1,
+                    blas=",".join(os.environ.get(v, "") for v in BLAS),
+                )
 
         rows = spark.range(1).selectExpr("cast(id as int) as n").mapInPandas(
-            plus_one, schema="n int"
+            probe, schema="n int, blas string"
         ).collect()
         assert [r["n"] for r in rows] == [1], rows
+        assert rows[0]["blas"] == "1,1,1,1,1", rows
         print("DAEMON_OK")
         spark.stop()
         """
     )
-    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env = {
+        k: v for k, v in os.environ.items() if k != "PYTHONPATH" and k not in blas
+    }
     env["SPARK_DRIVER_MEM"] = "1g"
     out = subprocess.run(
         [sys.executable, "-c", script],

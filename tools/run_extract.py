@@ -10,10 +10,13 @@ Packaged run (the deployment shape the north rule names)::
         --output /path/to/out \
         --n-chunks 64
 
-On a cluster, pass ``--master yarn``/``k8s://...`` etc. to spark-submit;
-the script only calls ``SparkSession.builder.getOrCreate()`` so the
-submit-time master/conf wins. Re-running with the same ``--output``
-resumes from the checkpoint manifest (completed chunks are skipped).
+On a cluster, pass ``--master yarn``/``k8s://...`` etc. to spark-submit.
+The session runs ``ocr_spark.session.engine_configs()`` (the worker
+daemon, Arrow batch size, Kryo, BLAS pins: the same engine ``get_spark``
+builds for tests and benchmarks) and sets no master; a conf given at
+submit time keeps its submitted value. Re-running with the same
+``--output`` resumes from the checkpoint manifest (completed chunks are
+skipped).
 
 For the production Iceberg source swap ``--format parquet`` for
 ``--format iceberg`` and pass the table name as ``--input`` (needs the
@@ -41,11 +44,26 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--run-id", default=None)
     args = ap.parse_args(argv)
 
+    from pyspark import SparkConf, SparkContext
     from pyspark.sql import SparkSession
 
     from ocr_spark.operators.checkpoint import run_checkpointed
+    from ocr_spark.session import engine_configs
 
-    spark = SparkSession.builder.appName("ocr-extract").getOrCreate()
+    # a SparkConf built before the py4j gateway exists does not see the
+    # submit-time confs, so start the gateway first
+    SparkContext._ensure_initialized()
+    submitted = SparkConf()
+    spark = (
+        SparkSession.builder.appName("ocr-extract")
+        .config(
+            map={
+                k: v for k, v in engine_configs().items()
+                if not submitted.contains(k)
+            }
+        )
+        .getOrCreate()
+    )
 
     if args.status:
         from pyspark.sql import functions as F
