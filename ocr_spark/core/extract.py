@@ -13,6 +13,7 @@ span-sequence-equality gate.
 
 from __future__ import annotations
 
+from collections.abc import Sequence
 from dataclasses import dataclass, field
 
 import numpy as np
@@ -39,10 +40,10 @@ DESKEW_RANGE = 5  # integer degrees searched by the skew estimate
 def _ranked_skew_angles(ink: np.ndarray) -> list[int]:
     """Candidate skew angles, most-plausible first: shear the ink
     COORDINATES (y + x*tan(a)) and rank angles by row-histogram variance —
-    the objective of geometry.estimate_skew_angle (reference
-    apphelper/image.py:203-238) evaluated on the ~10% nonzero pixels
-    instead of 2*range+1 full-image rotations (~50x cheaper; shear equals
-    rotation to first order at +-5 degrees).  The ranking is a HEURISTIC:
+    the objective of the reference's skew estimate (apphelper/image.py:
+    203-238) evaluated on the ~10% nonzero pixels instead of 2*range+1
+    full-image rotations (~50x cheaper; shear equals rotation to first
+    order at +-5 degrees).  The ranking is a HEURISTIC:
     the ladder verifies each candidate by recognition confidence, so a
     mis-ranked true angle costs extra trials, never a wrong answer."""
     ys, xs = np.nonzero(ink)
@@ -78,6 +79,28 @@ class PageState:
     row_boxes: list[tuple[int, int, int, int]] = field(default_factory=list)
 
 
+def _full_pass(
+    boxes: list, texts: Sequence[str] = (), confs: Sequence[float] = ()
+) -> tuple[list[str], float]:
+    """Full recognition of one orientation's text boxes -> (texts, mean
+    conf).  Runs the per-LINE 180-degree classifier (reference det -> cls
+    -> rec, predict_system.py:76-84): a minority of upside-down lines
+    inside an otherwise-upright page is rescued here; the page-level vote
+    handles whole-page rotation.  Probes stay classifier-free: under a
+    wrong page orientation every line would be "rescued" to full
+    confidence with a reversed reading order, so orientation selection
+    must score the RAW decode.
+
+    ``texts``/``confs`` are final reads of the first boxes, which are not
+    recognized again: a perfect probe's lines clear the classifier gate,
+    and recognition is per line (each reads only its own columns)."""
+    rest, rest_confs, _flips = recognize_batch_cls(
+        [b.bitmap for b in boxes[len(texts) :]]
+    )
+    all_confs = [*confs, *rest_confs]
+    return [*texts, *rest], float(np.mean(all_confs)) if all_confs else 0.0
+
+
 def _best_over_orientations(
     ink0: np.ndarray, robust: bool = False
 ) -> tuple[
@@ -92,80 +115,87 @@ def _best_over_orientations(
     Angle classification: try the 4 cardinal orientations and keep the one
     with the best recognition confidence (the classical stand-in for the
     reference's VGG angle classifier, obj_det/v1/opencv_dnn_detect.py:64-122
-    applied via rotate(), obj_det/objd_util.py:38-62). Early-exits on a
-    perfect score, which is the common case, like the reference's
-    first-gate-wins detector chain (objd_util.py:160-186).
+    applied via rotate(), obj_det/objd_util.py:38-62).
+
+    Lazy commit: the FIRST orientation whose 3-box probe reads 1.0 gets
+    its full pass at once, and a perfect full pass returns without probing
+    the rest — the common upright page pays one detection.  This is exact,
+    not a heuristic: no probe exceeds 1.0 and ties sort by k, so that
+    orientation heads Phase B's (-probe, k) order whatever the later
+    probes read, and Phase B stops on its first full conf >= 1.0.  (A
+    perfect probe that covered the whole page, <= 3 boxes, is always such
+    a commit: the line classifier only ever raises a line's conf.)
     """
-    # Phase A — probe: detect boxes and recognize up to 3 per orientation;
-    # a wrong orientation scores ~0 without paying full-page recognition
-    # (the classical stand-in for the reference's angle classifier keeping
-    # its batched shape, opencv_dnn_detect.py:64-122).  A perfect probe
-    # commits immediately (the common case is k=0).
+    # Phase A — probe in k order: detect boxes and recognize up to 3 per
+    # orientation; a wrong orientation scores ~0 without paying full-page
+    # recognition.  The 180-degree twins k and k+2 share one unit scale: a
+    # 180-degree turn keeps the multiset of horizontal ink-run lengths, so
+    # both the strict and the robust gcd are unchanged.
     cands: list[tuple[float, int, list, list]] = []
+    scales: dict[int, int] = {}
+    full: dict[int, tuple[list[str], float]] = {}
     for k in (0, 1, 2, 3):
         ink = np.rot90(ink0, -k) if k else ink0
-        scale = detect.estimate_unit_scale(ink, robust=robust)
+        if k % 2 not in scales:
+            scales[k % 2] = detect.estimate_unit_scale(ink, robust=robust)
         # QR candidates split out BEFORE probing/recognition: a QR block
         # is square under every rotation and recognizes as garbage, so it
         # must neither occupy a probe slot nor dilute page confidence.
-        boxes, qr_boxes = detect.split_qr_boxes(detect.detect_lines(ink, scale))
+        boxes, qr_boxes = detect.split_qr_boxes(
+            detect.detect_lines(ink, scales[k % 2])
+        )
         if not boxes:
             if qr_boxes:  # QR-only page: no text to vote with, keep k=0
                 cands.append((0.0, k, [], qr_boxes))
             continue
-        _pt, probe_confs = recognize_batch([b.bitmap for b in boxes[:3]])
+        probe_texts, probe_confs = recognize_batch([b.bitmap for b in boxes[:3]])
         probe = float(np.mean(probe_confs)) if probe_confs else 0.0
         cands.append((probe, k, boxes, qr_boxes))
-        # Short-circuit ONLY when the probe covered the whole page (<=3
-        # boxes), because then probe conf IS the full-page conf.  A 3-box
-        # probe of a larger page scoring 1.0 must NOT commit: a page whose
-        # first boxes read perfectly under a wrong orientation
-        # (180-degree-symmetric glyph rows) would lock in the wrong answer
-        # with no fallback — the remaining orientations still get probed
-        # (cheap: 3 boxes each) and Phase B's full-pass ordering decides.
-        if probe >= 1.0 and len(boxes) <= 3:
-            break
+        if probe >= 1.0 and not full:
+            # the head of Phase B's order: its full pass is due anyway,
+            # and its probed lines are already read
+            full[k] = _full_pass(boxes, probe_texts, probe_confs)
+            if full[k][1] >= 1.0:
+                break  # Phase B commits it first and stops there
 
     # Phase B — commit: full recognition in descending-probe order, so a
     # rotated page pays ONE full pass instead of one per orientation
-    # before the winner.  Orientations trailing the incumbent by more
-    # than PROBE_MARGIN are skipped — within the margin the full pass
-    # still runs (3 boxes are not the page; a decisively-low probe only).
-    best_rows: list[str] = []
+    # before the winner (the head's pass is reused from Phase A).  A
+    # perfect 3-box probe whose full pass is not perfect (first boxes
+    # that read under a wrong orientation, or a misread line further
+    # down) falls through to here, so the other orientations still
+    # compete.  Orientations trailing the incumbent by more than
+    # PROBE_MARGIN are skipped — within the margin the full pass still
+    # runs (3 boxes are not the page; a decisively-low probe only).
     best_conf = -1.0
-    best_k = 0
-    best_qr: list[tuple[int, int, int, int]] = []
-    best_row_boxes: list[tuple[int, int, int, int]] = []
+    best: tuple[list[str], int, list, list] = ([], 0, [], [])
     for probe, k, boxes, qr_boxes in sorted(cands, key=lambda t: (-t[0], t[1])):
         if probe + PROBE_MARGIN < best_conf:
             break  # sorted: every remaining probe is lower still
-        # Full pass runs the per-LINE 180-degree classifier (reference
-        # det -> cls -> rec, predict_system.py:76-84): a minority of
-        # upside-down lines inside an otherwise-upright page is rescued
-        # here; the page-level vote handles whole-page rotation.  Probes
-        # stay classifier-free: under a wrong page orientation every line
-        # would be "rescued" to full confidence with a reversed reading
-        # order, so orientation selection must score the RAW decode.
-        texts, confs, _flips = recognize_batch_cls([b.bitmap for b in boxes])
-        conf = float(np.mean(confs)) if confs else 0.0
+        texts, conf = full[k] if k in full else _full_pass(boxes)
         if conf > best_conf:
-            xywh = [(b.x, b.y, b.w, b.h) for b in boxes]
-            order = sorted_boxes(xywh)
-            rows = group_rows(xywh, order)
-            best_rows = [" ".join(texts[i] for i in row) for row in rows]
-            best_conf = conf
-            best_k = k
-            best_qr = [(b.x, b.y, b.w, b.h) for b in qr_boxes]
-            best_row_boxes = []
-            for row in rows:  # union bbox per reading-order row
-                xs0 = min(xywh[i][0] for i in row)
-                ys0 = min(xywh[i][1] for i in row)
-                xs1 = max(xywh[i][0] + xywh[i][2] for i in row)
-                ys1 = max(xywh[i][1] + xywh[i][3] for i in row)
-                best_row_boxes.append((xs0, ys0, xs1 - xs0, ys1 - ys0))
+            best_conf, best = conf, (texts, k, boxes, qr_boxes)
         if conf >= 1.0:
             break
-    return best_rows, max(best_conf, 0.0), best_k, best_qr, best_row_boxes
+    if best_conf < 0:
+        return [], 0.0, 0, [], []
+    texts, k, boxes, qr_boxes = best
+    xywh = [(b.x, b.y, b.w, b.h) for b in boxes]
+    rows = group_rows(xywh, sorted_boxes(xywh))
+    row_boxes = []
+    for row in rows:  # union bbox per reading-order row
+        xs0 = min(xywh[i][0] for i in row)
+        ys0 = min(xywh[i][1] for i in row)
+        xs1 = max(xywh[i][0] + xywh[i][2] for i in row)
+        ys1 = max(xywh[i][1] + xywh[i][3] for i in row)
+        row_boxes.append((xs0, ys0, xs1 - xs0, ys1 - ys0))
+    return (
+        [" ".join(texts[i] for i in row) for row in rows],
+        best_conf,
+        k,
+        [(b.x, b.y, b.w, b.h) for b in qr_boxes],
+        row_boxes,
+    )
 
 
 def ocr_page_state(img: np.ndarray) -> PageState:

@@ -109,13 +109,17 @@ def _probe_sheet_conf(ink: np.ndarray) -> float:
     from .recognize import recognize_batch
 
     best = 0.0
+    scales: dict[int, int] = {}  # 180-degree twins share one unit scale
     for k in (0, 1, 2, 3):
         rot = np.rot90(ink, -k) if k else ink
-        scale = detect.estimate_unit_scale(rot, robust=True)
+        if k % 2 not in scales:
+            scales[k % 2] = detect.estimate_unit_scale(rot, robust=True)
         # QR blocks recognize as garbage at every angle — they must not
         # occupy probe slots (a bottom sub-invoice's QR would otherwise
         # sit in the 'last box' slot and blind the sheet probe).
-        boxes, _qr = detect.split_qr_boxes(detect.detect_lines(rot, scale))
+        boxes, _qr = detect.split_qr_boxes(
+            detect.detect_lines(rot, scales[k % 2])
+        )
         if not boxes:
             continue
         probe = [boxes[0], boxes[len(boxes) // 2], boxes[-1]]

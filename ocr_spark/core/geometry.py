@@ -1,9 +1,9 @@
-"""Auxiliary geometry operators (SURVEY.md §2.5/2.6), pure numpy.
+"""Small-angle image rotation (SURVEY.md §2.5), pure numpy.
 
-Contracts mirrored from the reference's apphelper/image.py; each
-function cites its source.  These are the building blocks the
-detection/recognition kernels use for rotated documents; all are
-deterministic, vectorized, and covered by tests/test_geometry.py.
+``rotate_image`` is the deskew gather of the page ladder
+(core/extract.py) and ``rotate_scatter`` the skew model of the render
+stressor; both share one rounded rotation map, so a scattered page
+gathers back exactly.  Covered by tests/test_geometry.py.
 """
 
 from __future__ import annotations
@@ -11,45 +11,6 @@ from __future__ import annotations
 import math
 
 import numpy as np
-
-
-def solve(quad: tuple[float, ...]) -> tuple[float, float, float, float, float]:
-    """Quad (x1,y1,...,x4,y4, clockwise from top-left) ->
-    (angle, w, h, cx, cy).  Reference apphelper/image.py:41-67."""
-    x1, y1, x2, y2, x3, y3, x4, y4 = quad
-    cx = (x1 + x2 + x3 + x4) / 4.0
-    cy = (y1 + y2 + y3 + y4) / 4.0
-    w = (math.hypot(x2 - x1, y2 - y1) + math.hypot(x3 - x4, y3 - y4)) / 2.0
-    h = (math.hypot(x4 - x1, y4 - y1) + math.hypot(x3 - x2, y3 - y2)) / 2.0
-    # mean angle of the two horizontal edges
-    angle = (
-        math.atan2(y2 - y1, x2 - x1) + math.atan2(y3 - y4, x3 - x4)
-    ) / 2.0
-    return angle, w, h, cx, cy
-
-
-def nn_resize(img: np.ndarray, nh: int, nw: int) -> np.ndarray:
-    """Nearest-neighbor resize to exactly (nh, nw)."""
-    h, w = img.shape[:2]
-    yi = (np.arange(nh) * h // nh).clip(0, h - 1)
-    xi = (np.arange(nw) * w // nw).clip(0, w - 1)
-    return img[yi][:, xi]
-
-
-def letterbox_image(
-    img: np.ndarray, target_w: int, target_h: int, fill: int = 128
-) -> np.ndarray:
-    """Aspect-preserving resize onto a (target_h, target_w) canvas, padded
-    with ``fill`` and centered.  Reference apphelper/image.py:141-157."""
-    h, w = img.shape[:2]
-    f = min(target_w / w, target_h / h)
-    nw, nh = max(int(w * f), 1), max(int(h * f), 1)
-    resized = nn_resize(img, nh, nw)
-    shape = (target_h, target_w) + img.shape[2:]
-    canvas = np.full(shape, fill, dtype=img.dtype)
-    y0, x0 = (target_h - nh) // 2, (target_w - nw) // 2
-    canvas[y0 : y0 + nh, x0 : x0 + nw] = resized
-    return canvas
 
 
 def rotate_image(img: np.ndarray, degrees: float, fill: int = 255) -> np.ndarray:
@@ -121,23 +82,3 @@ def rotate_scatter(
     out[dyi[bg], dxi[bg]] = img[bg]
     return out
 
-
-def estimate_skew_angle(
-    gray: np.ndarray, angle_range: float = 15.0, step: float = 1.0
-) -> float:
-    """Skew estimate: try rotations in [-range, +range], return the angle
-    maximizing row-projection variance of the ink.  Reference
-    apphelper/image.py:203-238 (percentile-filtered background, variance
-    objective)."""
-    ink = 255.0 - gray.astype(np.float64)
-    lo, hi = np.percentile(ink, 10), np.percentile(ink, 90)
-    if hi > lo:  # sparse ink: percentile window collapses, skip the clip
-        ink = np.clip(ink, lo, hi) - lo
-    best_angle, best_var = 0.0, -1.0
-    angles = np.arange(-angle_range, angle_range + step / 2, step)
-    for a in angles:
-        rot = rotate_image(ink, float(a), fill=0)
-        v = float(np.var(rot.sum(axis=1)))
-        if v > best_var:
-            best_var, best_angle = v, float(a)
-    return best_angle

@@ -10,7 +10,8 @@ UDFs, partitioning — with the codec layer split in two:
   codec — no image libraries exist in this container), and decoded back
   inside ``mapInPandas``.  Resize is real nearest-neighbor numpy
   (contract: the reference's >960px downscale, obj_det/ocr_context.py:
-  169-175, and letterbox_image, apphelper/image.py:141-157).
+  169-175, and the reference's letterbox_image, apphelper/image.py:
+  141-157).
 * **fixture container**: video ships as a REAL tiny container format
   (NVID1: magic / frame count / frame rate / length-prefixed frame
   records) that the kernel genuinely parses — only the 32-byte frame

@@ -328,3 +328,200 @@ def test_background_flip_stressor_rate_and_equality():
     assert len(flipped) == 4  # the stressor fires at the expected rate
     for ref in flipped:
         assert ocr_media_ref(ref) == expected_media_text(ref), ref
+
+
+def _eager_best_over_orientations(ink0, robust=False):
+    """The page ladder before the lazy commit, kept as the oracle: probe
+    all 4 orientations (stopping early only on a perfect probe of a page
+    of <= 3 boxes), each with its own unit scale, then commit by full
+    recognition in (-probe, k) order."""
+    from ocr_spark.core import extract as E
+
+    cands = []
+    for k in (0, 1, 2, 3):
+        ink = np.rot90(ink0, -k) if k else ink0
+        scale = detect.estimate_unit_scale(ink, robust=robust)
+        boxes, qr_boxes = detect.split_qr_boxes(detect.detect_lines(ink, scale))
+        if not boxes:
+            if qr_boxes:
+                cands.append((0.0, k, [], qr_boxes))
+            continue
+        _pt, probe_confs = E.recognize_batch([b.bitmap for b in boxes[:3]])
+        probe = float(np.mean(probe_confs)) if probe_confs else 0.0
+        cands.append((probe, k, boxes, qr_boxes))
+        if probe >= 1.0 and len(boxes) <= 3:
+            break
+    best_rows, best_conf, best_k, best_qr, best_row_boxes = [], -1.0, 0, [], []
+    for probe, k, boxes, qr_boxes in sorted(cands, key=lambda t: (-t[0], t[1])):
+        if probe + E.PROBE_MARGIN < best_conf:
+            break
+        texts, confs, _flips = E.recognize_batch_cls([b.bitmap for b in boxes])
+        conf = float(np.mean(confs)) if confs else 0.0
+        if conf > best_conf:
+            xywh = [(b.x, b.y, b.w, b.h) for b in boxes]
+            rows = group_rows(xywh, sorted_boxes(xywh))
+            best_rows = [" ".join(texts[i] for i in row) for row in rows]
+            best_conf, best_k = conf, k
+            best_qr = [(b.x, b.y, b.w, b.h) for b in qr_boxes]
+            best_row_boxes = []
+            for row in rows:
+                xs0 = min(xywh[i][0] for i in row)
+                ys0 = min(xywh[i][1] for i in row)
+                xs1 = max(xywh[i][0] + xywh[i][2] for i in row)
+                ys1 = max(xywh[i][1] + xywh[i][3] for i in row)
+                best_row_boxes.append((xs0, ys0, xs1 - xs0, ys1 - ys0))
+        if conf >= 1.0:
+            break
+    return best_rows, max(best_conf, 0.0), best_k, best_qr, best_row_boxes
+
+
+def _ladder_images():
+    """Page images covering every media profile, all 4 rot_k, skewed
+    pages, #flip pages, a QR invoice and a #multi sheet's regions."""
+    from ocr_spark.core.fields import sheet_regions
+    from ocr_spark.fixtures.invoice import ground_truth, render_invoice, render_multi
+
+    pages = [p for ref in ("pdf://eq-pdf/0#3", "img://eq-big/0#big") for p in render(ref)]
+    pages += [render(f"img://eq-{i}/0#{prof}")[0] for i in range(3) for prof in ("crop", "flip")]
+    rots: dict[int, int] = {}
+    skewed = 0
+    for i in range(400):
+        page = render(f"img://eq-{i}/0#page")[0]
+        if page.skew_deg and skewed < 3:
+            skewed += 1
+        elif page.skew_deg or rots.get(page.rot_k, 0) >= 2:
+            continue
+        rots[page.rot_k] = rots.get(page.rot_k, 0) + 1
+        pages.append(page)
+    assert sorted(rots) == [0, 1, 2, 3] and skewed == 3
+    imgs = [p.image for p in pages]
+    qr_ref = next(f"inv://t{i}#vat" for i in range(40) if "qrcode" in ground_truth(f"inv://t{i}#vat"))
+    imgs.append(render_invoice(qr_ref).image)
+    imgs += sheet_regions(render_multi("inv://eq-m0#multi")[0])
+    return imgs
+
+
+def test_lazy_ladder_equals_eager_ladder(monkeypatch):
+    """Committing the first perfect probe at once and sharing the unit
+    scale across 180-degree twins changes no PageState."""
+    from ocr_spark.core import extract as E
+
+    imgs = _ladder_images()
+    lazy = [E.ocr_page_state(img) for img in imgs]
+    assert any(s.qr_boxes for s in lazy)
+    assert any(s.skew_deg for s in lazy)
+    monkeypatch.setattr(E, "_best_over_orientations", _eager_best_over_orientations)
+    assert lazy == [E.ocr_page_state(img) for img in imgs]
+
+
+def test_imperfect_head_falls_through_to_phase_b():
+    """A sheet whose top-left three lines read upright but whose larger
+    block is turned a quarter: the first perfect probe (k=0) full-reads
+    below 1.0, so the ladder must go on probing and let Phase B pick the
+    block's orientation, as the eager ladder does."""
+    from ocr_spark.core.extract import _best_over_orientations
+    from ocr_spark.fixtures.glyphs import render_text_line
+
+    def line(text):
+        return render_text_line(text).repeat(2, axis=0).repeat(2, axis=1)
+
+    ink = np.zeros((400, 400), bool)
+    for i, text in enumerate(["spark", "query", "table"]):
+        m = line(text)
+        ink[4 + 24 * i : 4 + 24 * i + m.shape[0], 4 : 4 + m.shape[1]] = m
+    block = np.zeros((6 * 24, 200), bool)
+    for i, text in enumerate(["merge", "join", "filter", "window", "batch", "group"]):
+        m = line(text)
+        block[24 * i : 24 * i + m.shape[0], : m.shape[1]] = m
+    block = np.rot90(block, -1)
+    ink[396 - block.shape[0] : 396, 396 - block.shape[1] : 396] = block
+    lazy = _best_over_orientations(ink)
+    assert lazy[2] == 3 and lazy[0][:2] == ["merge", "join"]
+    assert lazy == _eager_best_over_orientations(ink)
+
+
+def test_ladder_call_counts(monkeypatch):
+    """An upright page of > 3 boxes pays one unit scale and one
+    detection; its 180-degree turn pays two unit scales (the twins share
+    one) and three detections.  The committed orientation's full pass
+    reads only the lines its probe did not."""
+    from collections import Counter
+
+    from ocr_spark.core import extract as E
+
+    calls: Counter = Counter()
+
+    def counted(name, fn):
+        def wrapper(*args, **kwargs):
+            calls[name] += 1
+            return fn(*args, **kwargs)
+
+        return wrapper
+
+    def reads(name, fn):
+        def wrapper(bitmaps, *args, **kwargs):
+            calls[name] += len(bitmaps)
+            return fn(bitmaps, *args, **kwargs)
+
+        return wrapper
+
+    page = next(
+        p
+        for i in range(40)
+        for p in render(f"img://counts-{i}/0#page")
+        if not p.rot_k and not p.skew_deg and len(p.lines) > 3
+        and not any(ln.flipped for ln in p.lines)
+    )
+    ink = detect.binarize(detect.remove_seal_to_gray(page.image))
+    n_boxes = len(detect.detect_lines(ink, detect.estimate_unit_scale(ink)))
+    monkeypatch.setattr(detect, "detect_lines", counted("lines", detect.detect_lines))
+    monkeypatch.setattr(
+        detect, "estimate_unit_scale", counted("scale", detect.estimate_unit_scale)
+    )
+    monkeypatch.setattr(E, "recognize_batch", reads("probe_reads", E.recognize_batch))
+    monkeypatch.setattr(
+        E, "recognize_batch_cls", reads("full_reads", E.recognize_batch_cls)
+    )
+    upright = E.ocr_page_state(page.image)
+    assert upright.conf == 1.0 and upright.rot_k == 0
+    assert calls == {
+        "lines": 1, "scale": 1, "probe_reads": 3, "full_reads": n_boxes - 3
+    }
+    calls.clear()
+    turned = E.ocr_page_state(np.ascontiguousarray(np.rot90(page.image, 2)))
+    assert turned.rows == upright.rows and turned.rot_k == 2
+    assert calls["lines"] == 3 and calls["scale"] == 2
+    assert calls["full_reads"] == n_boxes - 3
+
+
+@given(
+    st.integers(1, 40),
+    st.integers(1, 40),
+    st.integers(0, 2**32 - 1),
+    st.booleans(),
+)
+@settings(max_examples=100, deadline=None)
+def test_unit_scale_is_180_invariant(h, w, seed, robust):
+    ink = np.random.default_rng(seed).random((h, w)) < 0.5
+    for k in (0, 1):
+        assert detect.estimate_unit_scale(
+            np.rot90(ink, -k), robust=robust
+        ) == detect.estimate_unit_scale(np.rot90(ink, -(k + 2)), robust=robust)
+
+
+def test_unit_scale_is_180_invariant_on_pages():
+    """The pair share holds on rendered pages and on inks deskewed by
+    rotate_image, strict and robust."""
+    from ocr_spark.core.geometry import rotate_image
+
+    inks = []
+    for i in range(6):
+        page = render(f"img://twin-{i}/0#page")[0]
+        ink = detect.binarize(detect.remove_seal_to_gray(page.image))
+        inks += [ink] + [rotate_image(ink, float(a), fill=False) for a in (-3, 2)]
+    for ink in inks:
+        for robust in (False, True):
+            for k in (0, 1):
+                assert detect.estimate_unit_scale(
+                    np.rot90(ink, -k), robust=robust
+                ) == detect.estimate_unit_scale(np.rot90(ink, -(k + 2)), robust=robust)
